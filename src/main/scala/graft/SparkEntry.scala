@@ -825,22 +825,16 @@ object SparkEntry {
         .select(col("chunk_id"),
           expr("substring(_doc_text, start_offset + 1, " +
             "end_offset - start_offset)").as("chunk_text"))
-      val idx = Bm25.buildIndex(leaves, "chunk_id", "chunk_text",
-        pinStats = true)
-      val pinned = idx.copy(docWeights = idx.docWeights.cache())
-      pinned.docWeights.count()
-      (hier, pinned)
+      (hier, Bm25.buildIndex(leaves, "chunk_id", "chunk_text",
+        pinStats = true).pin())
     })
 
-  /** Build a STANDING index: stats pinned, docWeights cached and
-    * materialized once, off the query clock — the one definition of
-    * the standing-index discipline every per-dir index cache uses. */
-  private def pinnedSparseIndex(chunks: DataFrame): Bm25.Index = {
-    val idx = Bm25.buildIndex(chunks, "chunk_id", "content", pinStats = true)
-    val pinned = idx.copy(docWeights = idx.docWeights.cache())
-    pinned.docWeights.count()
-    pinned
-  }
+  /** Build a STANDING index over a chunks table: stats pinned,
+    * docWeights and the forward relation materialized once, off the
+    * query clock ([[Bm25.Index.pin]] — the standing-index discipline
+    * every per-dir index cache uses). */
+  private def pinnedSparseIndex(chunks: DataFrame): Bm25.Index =
+    Bm25.buildIndex(chunks, "chunk_id", "content", pinStats = true).pin()
 
   private val dsirModelCache = scala.collection.concurrent.TrieMap
     .empty[String, TextAnalysis.DsirModel]
@@ -1067,19 +1061,15 @@ object SparkEntry {
       graft.operators.Spell.vocabVariants(docsVocab(s, dir), maxDist))
 
   /** Standing BM25 index over the raw documents table (doc_id, text),
-    * derived from [[docsPostings]] — stats pinned, docWeights cached
-    * and materialized off the query clock. Every full-corpus
+    * derived from [[docsPostings]] and pinned off the query clock
+    * ([[Bm25.Index.pin]]). Every full-corpus
     * `search_*` composite serves from this instead of rebuilding the
     * index in-plan (the bm25_index_persist / parent-context
     * precedent). */
   private def docsTextIndex(s: SparkSession, dir: String): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(s"$dir#doctext", {
-      val idx = Bm25.indexFromPostings(t(s, dir, "documents"), "doc_id",
-        docsPostings(s, dir), pinStats = true)
-      val pinned = idx.copy(docWeights = idx.docWeights.cache())
-      pinned.docWeights.count()
-      pinned
-    })
+    docsIndexCache.getOrElseUpdate(s"$dir#doctext",
+      Bm25.indexFromPostings(t(s, dir, "documents"), "doc_id",
+        docsPostings(s, dir), pinStats = true).pin())
 
   private def docsBm25Standing(s: SparkSession, dir: String): Bm25.Standing =
     Bm25.Standing(docsPostings(s, dir), docsGateToks(s, dir))
@@ -1297,13 +1287,9 @@ object SparkEntry {
     }
 
   private def collapseIndex(s: SparkSession, dir: String): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(s"$dir#collapse", {
-      val idx = Bm25.buildIndex(collapseCorpus(s, dir), "doc_id", "text",
-        pinStats = true)
-      val pinned = idx.copy(docWeights = idx.docWeights.cache())
-      pinned.docWeights.count()
-      pinned
-    })
+    docsIndexCache.getOrElseUpdate(s"$dir#collapse",
+      Bm25.buildIndex(collapseCorpus(s, dir), "doc_id", "text",
+        pinStats = true).pin())
 
   /** Standing minhash SIGNATURES of the collapse collection (VERDICT
     * r13 #4): signatures are corpus-deterministic — a deployment

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
 
@@ -61,12 +62,6 @@ object Bm25 {
   def docTermFreqs(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
     tokens(corpus, idCol, textCol)
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-
-  /** One-row (n_docs, avg_doc_len) — broadcast-joined everywhere. */
-  def corpusGlobals(lens: DataFrame): DataFrame =
-    lens.agg(
-      count("*").cast("long").as("n_docs"),
-      coalesce(avg("doc_len"), lit(0.0)).as("avg_doc_len"))
 
   /** Canonical sparse dot product: Σ weight·q_weight summed in TERM
     * order. Float addition is non-associative, and `sum()` aggregates
@@ -185,8 +180,51 @@ object Bm25 {
 
   /** A reusable BM25 index: the token explosion, doc lengths, and term
     * stats built ONCE and shared by every consumer (identical subplans
-    * also let Spark reuse the shuffle exchanges). */
-  final case class Index(stats: DataFrame, docWeights: DataFrame)
+    * also let Spark reuse the shuffle exchanges).
+    *
+    * A STANDING index — one whose `docWeights` the caller has persisted
+    * — also carries [[forward]], the per-doc forward relation
+    * [[searchTopK]] scores from. */
+  final case class Index(stats: DataFrame, docWeights: DataFrame) {
+    @volatile private var fwd: DataFrame = _
+
+    /** True when the caller persisted `docWeights`: the standing-index
+      * pattern (cache + materialize once, serve many requests). */
+    def isStanding: Boolean = docWeights.storageLevel != StorageLevel.NONE
+
+    /** `(id, fwd ARRAY<STRUCT<term, weight, idf>>)`, one row per doc
+      * with at least one positive-weight term, entries sorted by term —
+      * the reference's per-chunk sparse vector point `{chunk_id,
+      * indices, values}` (ref packages/vecpipe/sparse.py:118-156) with
+      * the term's idf riding beside its weight. Built from docWeights ⨝
+      * stats and localCheckpointed on first call, so it is a leaf in
+      * every request plan; Spark's ContextCleaner drops its blocks once
+      * the index is garbage-collected. */
+    def forward: DataFrame = {
+      if (fwd == null) synchronized {
+        if (fwd == null) fwd = docWeights.select("id", "term", "weight")
+          .join(stats.select("term", "idf"), "term")
+          .groupBy("id")
+          .agg(sort_array(collect_list(
+            struct(col("term"), col("weight"), col("idf")))).as("fwd"))
+          .localCheckpoint()
+      }
+      fwd
+    }
+
+    /** Whether [[forward]] has been built — lets tests check that
+      * non-standing indexes never pay for it. */
+    private[graft] def forwardBuilt: Boolean = fwd != null
+
+    /** Cache and materialize `docWeights` and build [[forward]], off
+      * the query clock: the one way to make a standing index. */
+    def pin(): Index = {
+      val pinned = copy(docWeights = docWeights.cache())
+      pinned.docWeights.count()
+      pinned.forward
+      pinned
+    }
+  }
 
   /** The standing relations a SERVING deployment keeps beside its
     * [[Index]] so filtered/boolean searches never re-tokenize the
@@ -365,29 +403,60 @@ object Bm25 {
     Index(stats, docW)
   }
 
-  /** Sparse dot-product top-k — operator W2. Scores every doc sharing a
-    * term with the query via a broadcast join on term (the query side is
-    * tiny), then TakeOrderedAndProject for the top-k. Deterministic
-    * tie-break on id.
+  /** Sparse dot-product top-k — operator W2: (id, score) for the top-k
+    * docs sharing a term with the query, ranked (score desc, id asc).
+    * Two plan shapes, one result:
     *
-    * The stats relation feeds BOTH the query-term weighting and the
-    * doc-weight branch; without pinning, the whole tf/df aggregation
-    * DAG executes twice per query. `searchTopK` therefore pins the
-    * (tiny, vocabulary-sized) stats in a single cached partition —
-    * Spark's cache manager de-duplicates by canonical plan, so repeated
-    * searches over the same corpus reuse one entry, the moral
-    * equivalent of the reference's persistent BM25 index files. Pass a
-    * prebuilt `index` to manage caching yourself. */
+    *  - FORWARD SCAN, for a standing `index` ([[Index.isStanding]]: the
+    *    caller persisted docWeights): one narrow scan of the index's
+    *    [[Index.forward]] relation, each matching doc folding
+    *    `acc + weight · (q_tf · idf)` from 0.0 in term order, then a
+    *    TakeOrderedAndProject — no query broadcast, no exchange. The
+    *    forward relation is built once per index, on first use.
+    *  - POSTINGS JOIN, for every other index (derived in-plan, per
+    *    request from [[indexFromPostings]], or restored from disk
+    *    unpersisted): docWeights ⨝ broadcast query weights, a shuffle
+    *    on id for the [[sparseScore]] aggregate, then the top-k. Such
+    *    indexes never build the forward relation. Without an `index`,
+    *    the stats are pinned in a single cached partition, since they
+    *    feed both the query weighting and the doc weights; the cache
+    *    manager dedupes by canonical plan, so repeated searches over
+    *    the same corpus reuse one entry.
+    *
+    * The two are bit-identical: each term appears once per doc, unknown
+    * terms have no entries on either side, weight > 0 ⇔ idf > 0, and
+    * both sum the same products `weight · (q_tf · idf)` in term order. */
   def searchTopK(corpus: DataFrame, idCol: String, textCol: String,
                  queryText: String, k: Int, p: Params = Default,
-                 index: Option[Index] = None): DataFrame = {
-    val idx = index.getOrElse(buildIndex(corpus, idCol, textCol, p,
-      pinStats = true))
-    val qW = queryTermWeights(idx.stats, queryText, corpus.sparkSession)
-    idx.docWeights.join(broadcast(qW), "term")
-      .groupBy("id")
-      .agg(sparseScore(col("weight") * col("q_weight"), col("term"))
-        .as("score"))
+                 index: Option[Index] = None): DataFrame = index match {
+    case Some(idx) if idx.isStanding => forwardTopK(idx, queryText, k)
+    case _ =>
+      val idx = index.getOrElse(buildIndex(corpus, idCol, textCol, p,
+        pinStats = true))
+      val qW = queryTermWeights(idx.stats, queryText, corpus.sparkSession)
+      idx.docWeights.join(broadcast(qW), "term")
+        .groupBy("id")
+        .agg(sparseScore(col("weight") * col("q_weight"), col("term"))
+          .as("score"))
+        .orderBy(col("score").desc, col("id"))
+        .limit(k)
+  }
+
+  /** [[searchTopK]]'s forward-scan shape over a standing index. The
+    * query's term frequencies are a literal map; a doc matches when
+    * any of its entries is a query term. */
+  private def forwardTopK(idx: Index, queryText: String, k: Int): DataFrame = {
+    val qTf = TextFunctions.tokenize(queryText).groupBy(identity)
+      .map { case (t, ts) => t -> ts.size.toDouble }
+    val inQuery = (x: Column) => x.getField("term").isin(qTf.keys.toSeq: _*)
+    val qTfOf = typedLit(qTf)
+    idx.forward
+      .filter(exists(col("fwd"), inQuery))
+      .select(col("id"),
+        aggregate(filter(col("fwd"), inQuery), lit(0.0), (acc, x) =>
+          acc + x.getField("weight") *
+            (element_at(qTfOf, x.getField("term")) * x.getField("idf")))
+          .as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
   }

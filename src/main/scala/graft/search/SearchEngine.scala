@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
@@ -16,12 +16,18 @@ import graft.pipeline.Predicates
   * path, content, path_id, vector). Dense scoring assumes vectors are
   * L2-normalized at index time (cosine == dot).
   *
-  * Scale posture: both legs end in TakeOrderedAndProject over a
-  * partition-pruned scan (filter on collection_id first); RRF joins two
-  * ≤candidate_k row sets (broadcast); the only full-corpus work per
-  * query is the scan+score map — brute-force exact, by design the
-  * correctness-equivalent of the reference's ANN (SURVEY.md §0). Swap in
-  * Knn.lshTopK bucketing for the approximate path.
+  * Scale posture: both legs end in TakeOrderedAndProject; RRF joins two
+  * ≤candidate_k row sets (broadcast). The dense leg is one scan+score
+  * map over the chunks — brute-force exact, by design the
+  * correctness-equivalent of the reference's ANN (SURVEY.md §0); swap
+  * in Knn.lshTopK bucketing for the approximate path. The sparse leg
+  * depends on the index it gets ([[Bm25.searchTopK]]): an unfiltered
+  * request against a standing index (docWeights persisted by the
+  * caller) is one narrow scan of the index's per-chunk forward
+  * relation, with no exchange; a filtered request, or one without a
+  * standing index, derives the index in-plan and scores by the
+  * postings join, a broadcast of the query weights plus a shuffle on
+  * chunk id.
   */
 object SearchEngine {
 
@@ -69,13 +75,6 @@ object SearchEngine {
   /** Candidate pool size when reranking: clamp(k*5, 20, 200) — W4.
     * Ref: vecpipe/search/rerank.py:24-34. */
   def candidateK(k: Int): Int = math.max(20, math.min(k * 5, 200))
-
-  /** Deterministic mock reranker (W5 stand-in) — delegates to the
-    * plugin-surface default; real cross-encoders plug in behind the
-    * same (query)(content) => score contract via [[search]]'s
-    * `reranker` parameter. */
-  def mockRerankScore(query: String)(content: Column): Column =
-    graft.plugins.Providers.MockReranker().score(query)(content)
 
   /** HyDE expansion (F14): expand the dense query via the pluggable
     * expander; failure (None) falls back to the original query with the
@@ -182,8 +181,14 @@ object SearchEngine {
 
   /** Full §3.1 plan over one collection's chunks table. Output columns:
     * doc_id, chunk_id, score, path, chunk_index, total_chunks, path_id
-    * [+ content when included] [+ reranked_score when reranking]. */
-  /** `precomputedSparseHits`: the RAW sparse-leg hits (chunk_id, score)
+    * [+ content when included] [+ reranked_score when reranking].
+    *
+    * `sparseIndex`: the collection's standing BM25 index, used by
+    * unfiltered requests (see [[Bm25.searchTopK]] for which indexes get
+    * the forward scan); requests with `filters` derive the index over
+    * the filtered corpus in-plan.
+    *
+    * `precomputedSparseHits`: the RAW sparse-leg hits (chunk_id, score)
     * for THIS request — exactly what `rawSparseHits(filtered, req,
     * fetchK, idx)` would return — computed once by a caller that
     * serves several request VARIANTS differing only in the dense leg

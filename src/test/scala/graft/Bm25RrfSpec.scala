@@ -238,6 +238,94 @@ class Bm25RrfSpec extends SparkSpec {
     }
   }
 
+  // ids 0-119 random text; 120/121 and 122/123 are identical pairs
+  // (tied scores on different ids); 124 is empty and 125 all stopwords
+  // (zero-token docs)
+  private lazy val forwardCorpus = {
+    val rnd = new scala.util.Random(11)
+    val vocabulary = Seq("alpha", "beta", "gamma", "delta", "epsilon",
+      "zeta", "eta", "theta")
+    val random = (0 until 120).map { i =>
+      (i.toLong, (0 until 1 + rnd.nextInt(20))
+        .map(_ => vocabulary(rnd.nextInt(vocabulary.size)))
+        .mkString(" "))
+    }
+    (random ++ Seq((120L, "alpha gamma gamma"), (121L, "alpha gamma gamma"),
+      (122L, "theta"), (123L, "theta"), (124L, ""), (125L, "the and of")))
+      .toDF("doc_id", "text")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  private def plan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
+  test("searchTopK against a standing index scans the forward relation " +
+      "and returns the in-plan path's exact rows and scores") {
+    val standing = Bm25.buildIndex(forwardCorpus, "doc_id", "text",
+      pinStats = true).pin()
+    assert(standing.isStanding && standing.forwardBuilt)
+    val queries = Seq(
+      "alpha beta gamma",
+      "alpha alpha gamma beta alpha", // repeated query terms
+      "theta",                        // tied scores on different ids
+      "gamma",
+      "the and of",                   // stopwords only
+      "zzz qqq",                      // unknown words only
+      "theta zzz the")                // known + unknown + stopword
+    for (q <- queries; k <- Seq(1, 3, 10, 1000)) { // 1000 > every match
+      val inPlan = Bm25.searchTopK(forwardCorpus, "doc_id", "text", q, k)
+      val served = Bm25.searchTopK(forwardCorpus, "doc_id", "text", q, k,
+        index = Some(standing))
+      assert(rows(served) == rows(inPlan), s"q='$q' k=$k")
+      assert(!plan(served).contains("Join") &&
+        !plan(served).contains("Exchange"), plan(served))
+    }
+    val tied = rows(Bm25.searchTopK(forwardCorpus, "doc_id", "text",
+      "theta", 1000, index = Some(standing)))
+    val at = tied.indexWhere(_._1 == 122L)
+    assert(tied(at + 1) == ((123L, tied(at)._2)), tied)
+    assert(rows(Bm25.searchTopK(forwardCorpus, "doc_id", "text",
+      "the and of zzz", 10, index = Some(standing))).isEmpty)
+    standing.docWeights.unpersist()
+  }
+
+  test("searchTopK keeps the postings join and never builds the forward " +
+      "relation for indexes whose docWeights is not persisted") {
+    val q = "alpha theta gamma"
+    val expected = rows(Bm25.searchTopK(forwardCorpus, "doc_id", "text",
+      q, 20))
+    // per-request eligible-corpus index, as search_boolean and the
+    // spell/boolean searches derive from standing postings
+    val eligible = forwardCorpus.filter(col("doc_id") =!= 7L)
+    val perRequest = Bm25.indexFromPostings(eligible, "doc_id",
+      Bm25.postings(forwardCorpus, "doc_id", "text"), pinStats = true)
+    val got = Bm25.searchTopK(eligible, "doc_id", "text", q, 20,
+      index = Some(perRequest))
+    assert(rows(got) == rows(Bm25.searchTopK(eligible, "doc_id", "text",
+      q, 20)))
+    assert(plan(got).contains("Join"))
+    assert(!perRequest.isStanding && !perRequest.forwardBuilt)
+    // restored from disk, stats pinned, docWeights left unpersisted —
+    // the bm25_index_persist shape
+    val root = java.nio.file.Files.createTempDirectory("bm25fwd").toString
+    val built = Bm25.buildIndex(forwardCorpus, "doc_id", "text")
+    graft.search.Ingest.reindexSwapRaw(spark, built.stats, s"$root/stats")
+    graft.search.Ingest.reindexSwapRaw(spark, built.docWeights,
+      s"$root/weights")
+    val restored = Bm25.Index(
+      stats = graft.search.Ingest.readCurrent(spark, s"$root/stats")
+        .coalesce(1).cache(),
+      docWeights = graft.search.Ingest.readCurrent(spark, s"$root/weights"))
+    val fromDisk = Bm25.searchTopK(forwardCorpus, "doc_id", "text", q, 20,
+      index = Some(restored))
+    assert(rows(fromDisk) == expected)
+    assert(plan(fromDisk).contains("Join"))
+    assert(!restored.isStanding && !restored.forwardBuilt)
+    restored.stats.unpersist()
+  }
+
   test("combSum: a constant-score leg normalizes to 1.0 everywhere") {
     val dense = Seq((1L, 7.0), (2L, 7.0)).toDF("doc_id", "score")
     val sparse = Seq((1L, 3.0), (2L, 1.0)).toDF("doc_id", "score")

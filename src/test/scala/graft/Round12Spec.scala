@@ -182,7 +182,8 @@ class Round12Spec extends SparkSpec {
       "query corpus re-tokenize") {
     val dir = "/root/testdata/sf0.001"
     // bm25_topk serves from docsTextIndex: the executed plan must scan
-    // the cached docWeights, and the only Generate (explode) nodes
+    // the cached docWeights or the index's checkpointed forward
+    // relation `(id, fwd)`, and the only Generate (explode) nodes
     // allowed are beneath the cache build, not in the per-query plan
     // (search_collapse's and search_ltr's final plans scan their
     // CHECKPOINTED candidate pages instead — the standing index sits
@@ -192,7 +193,9 @@ class Round12Spec extends SparkSpec {
         "search_fallback_correct")) {
       val p = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
-      assert(p.contains("InMemoryTableScan"),
+      val forwardScan = "Scan ExistingRDD\\[id#\\d+L?,fwd#".r
+      assert(p.contains("InMemoryTableScan") ||
+        forwardScan.findFirstIn(p).isDefined,
         s"$q does not serve from the standing cache:\n$p")
     }
   }

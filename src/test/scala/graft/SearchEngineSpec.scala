@@ -345,4 +345,37 @@ class SearchEngineSpec extends SparkSpec {
     assert(req.denseQuery == expanded && req.query == "spark join")
     assert(SearchEngine.search(chunks, req).collect().nonEmpty)
   }
+
+  test("search against a standing index (forward-scan sparse leg) " +
+      "returns the in-plan index's exact rows in every mode") {
+    // docs 6/7 are identical (tied scores on different chunk ids), doc 8
+    // is all stopwords (a zero-token chunk)
+    val more = docs.unionByName(Seq(
+      (6L, "tomato sauce for spark clusters."),
+      (7L, "tomato sauce for spark clusters."),
+      (8L, "it is not what it was, but all of this is the same."))
+      .toDF("doc_id", "text"))
+    val table = Ingest.buildChunks(more, "c1", "doc_id", "text",
+      strategy = "recursive",
+      cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1,
+        maxTokens = 50),
+      dim = Dim).cache()
+    val standing = graft.operators.Bm25.buildIndex(table, "chunk_id",
+      "content", pinStats = true).pin()
+    // repeated terms; stopwords and unknown words only; k = 100 is
+    // above every query's match count
+    val queries = Seq("spark join", "tomato tomato sauce spark",
+      "the of and zzz")
+    for (q <- queries; mode <- Seq("dense", "sparse", "hybrid");
+         rerank <- Seq(false, true); k <- Seq(10, 100)) {
+      val req = SearchRequest(query = q, searchMode = mode, k = k,
+        useReranker = rerank, scoreThreshold = -1e9, vectorDim = Dim)
+      val inPlan = SearchEngine.search(table, req).collect().toSeq
+      val served = SearchEngine.search(table, req,
+        sparseIndex = Some(standing)).collect().toSeq
+      assert(served == inPlan, s"q='$q' mode=$mode rerank=$rerank k=$k")
+    }
+    standing.docWeights.unpersist()
+    table.unpersist()
+  }
 }
