@@ -60,12 +60,6 @@ object TextFunctions {
       Tokenize(org.apache.spark.sql.graftbridge.ColumnBridge.expression(text),
         removeStopwords))
 
-  /** SQL snippet equivalent of [[tokensCol]] for DuckDB oracles:
-    * produces a one-token-per-row relation when wrapped in unnest. */
-  def tokenSqlPredicate(termExpr: String): String =
-    s"length($termExpr) >= $MinTokenLength AND $termExpr NOT IN (" +
-      EnglishStopwordsSorted.map(s => s"'$s'").mkString(", ") + ")"
-
   // -------------------------------------------------------------------
   // Mock embedding — THE deterministic test-mode embedding. Bit-exact
   // with the reference: sha256(text) → eight 4-byte big-endian uints →
@@ -176,13 +170,6 @@ object TextFunctions {
       val union = sa.union(sb).size
       if (union == 0) 0.0 else sa.intersect(sb).size.toDouble / union
     }
-  }
-
-  /** Column Jaccard over two token-array columns. */
-  def jaccardCol(a: Column, b: Column): Column = {
-    val u = size(array_union(a, b))
-    when(u === 0, lit(0.0))
-      .otherwise(size(array_intersect(a, b)).cast("double") / u.cast("double"))
   }
 
   /** Unicode NFC canonicalization — see [[NfcNormalize]]. Run BEFORE

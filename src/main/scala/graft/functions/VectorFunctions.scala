@@ -37,38 +37,11 @@ object VectorFunctions {
       lit(0.0),
       (acc, v) => acc + v)
 
-  /** Cosine for pre-normalized vectors — just the dot product. Use this
-    * in the k-NN path when the store guarantees unit vectors. */
-  def cosinePreNormalized(a: Column, b: Column): Column = dot(a, b)
-
-  /** L2-normalize, preserving element type double.
-    * Ref: shared/embedding/dense.py:420-426 (normalize_embeddings). */
-  def l2Normalize(a: Column): Column = {
-    val n = norm(a)
-    when(n === 0.0, transform(a, _.cast("double")))
-      .otherwise(transform(a, v => v.cast("double") / n))
-  }
-
-  /** Squared Euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v)
-
   // ---- pure-Scala twins for unit tests / driver-side constants ----
 
   def dotS(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s
-  }
-
-  def cosineS(a: Array[Double], b: Array[Double]): Double = {
-    val d = math.sqrt(dotS(a, a)) * math.sqrt(dotS(b, b))
-    if (d == 0.0) 0.0 else dotS(a, b) / d
   }
 }

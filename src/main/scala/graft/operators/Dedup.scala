@@ -17,9 +17,14 @@ import graft.functions.TextFunctions
   *
   * Scale posture: every variant is a hash-partition + equi-join — no
   * all-pairs comparison ever leaves a bucket. Exact dedup shuffles once
-  * on the hash; MinHash LSH shuffles on (band, band_hash); SimHash
-  * pigeonholes 64-bit fingerprints into 4×16-bit blocks so Hamming≤3
-  * candidates meet on an exact block join.
+  * on the hash; SimHash pigeonholes 64-bit fingerprints into 4×16-bit
+  * blocks so Hamming≤3 candidates meet on an exact block join. MinHash
+  * LSH keeps ONE row per doc, its shingle set ([[shingleSets]]: one
+  * shuffle on id, localCheckpointed per call): signatures are an array
+  * expression over the row, candidates shuffle on (band, band_hash),
+  * and a candidate pair's exact Jaccard reads its two set rows — no
+  * exploded (id, shingle) rows are shuffled or joined, and no call
+  * leaves a relation in the session's cache.
   */
 object Dedup {
 
@@ -70,69 +75,111 @@ object Dedup {
       .drop("__h")
   }
 
-  /** Distinct token n-gram shingles per doc: (id, shingle).
-    * The token array is projected FIRST so the gram lambda references a
-    * materialized attribute — inlining the tokenizer expression into the
-    * lambda would re-run the regex once per gram (O(tokens²)/doc). */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val toks = col("_toks")
+  /** Token n-grams of a materialized token-array attribute, one array
+    * per row. `toks` must be an ATTRIBUTE: inlining the tokenizer into
+    * the gram lambda would re-run the regex once per gram
+    * (O(tokens²)/doc). */
+  private def gramsOf(toks: Column, n: Int): Column =
     // sequence(0, -1) would count DOWN; guard short docs with an
     // explicit empty array instead
-    val grams = when(size(toks) < n, array().cast("array<string>"))
+    when(size(toks) < n, array().cast("array<string>"))
       .otherwise(transform(
         sequence(lit(0), size(toks) - n),
         i => array_join(slice(toks, i + 1, lit(n)), " ")))
+
+  private def tokenized(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame =
     df.select(col(idCol).as("id"),
-        TextFunctions.tokensCol(col(textCol), removeStopwords = false).as("_toks"))
-      .select(col("id"), explode(grams).as("shingle"))
-      .distinct()
-  }
+      TextFunctions.tokensCol(col(textCol), removeStopwords = false)
+        .as("_toks"))
 
-  /** Pairwise n-gram Jaccard for a given candidate pair set
-    * `pairs(id_a, id_b)` — pure relational: |A∩B| via an equi-join on
-    * shingle, |A∪B| = |A|+|B|−|A∩B|. Never all-pairs: feed it LSH
-    * candidates (or any bounded pair relation). */
-  def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-                   pairs: DataFrame, n: Int): DataFrame =
-    // pinPairs: the verify references `pairs` three times (id
-    // semi-filter, intersection join, final join) — an uncached pair
-    // pipeline would re-evaluate per reference
-    ngramJaccardFrom(shingles(df, idCol, textCol, n).cache(),
-      pinPairs(pairs))
+  /** Token n-gram rows per doc, repeats kept: (id, shingle). The gram
+    * EXPRESSION is exploded directly — exploding a projected gram
+    * attribute instead lets InferFiltersFromGenerate add a
+    * `size(grams) > 0` filter that is pushed below the projections with
+    * the tokenizer inlined into the gram lambda (measured 0.8 s → 20 s
+    * on the curate decontamination pass). */
+  private def gramRows(df: DataFrame, idCol: String, textCol: String,
+                       n: Int): DataFrame =
+    tokenized(df, idCol, textCol)
+      .select(col("id"), explode(gramsOf(col("_toks"), n)).as("shingle"))
 
-  /** [[ngramJaccard]] over a precomputed (id, shingle) relation. */
-  def ngramJaccardFrom(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    // verification scales with the CANDIDATE set, not the corpus: the
-    // shingle relation semi-filters to docs that appear in a pair
-    // BEFORE any shuffle — without this, the (id_b, shingle) join
-    // would shuffle the whole-corpus shingle relation to verify a
-    // bounded pair set (at 10⁹ docs: a full-corpus shuffle for maybe
-    // 10⁶ candidates). AQE broadcasts the id set while it stays small;
-    // a caller passing corpus-sized pairs degrades to one keyed shuffle.
-    val candIds = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    // cache: three consumers (sizes, the a-side, the b-side) would
-    // otherwise each re-run the semi-join against the corpus shingle
-    // relation — profiled as the dominant cost of the verify at sf0.1
-    // (the relation is bounded by candidate docs × shingles/doc)
-    val shc = sh.join(candIds, Seq("id"), "left_semi").cache()
-    val sizes = shc.groupBy("id").agg(count("*").as("n_shingles"))
-    val a = shc.select(col("id").as("id_a"), col("shingle"))
-    val b = shc.select(col("id").as("id_b"), col("shingle"))
-    val inters = pairs.join(a, "id_a").join(b, Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count("*").as("n_inter"))
+  /** Distinct token n-gram shingles per doc, one row each:
+    * (id, shingle). The exploded form, for consumers keyed on the
+    * shingle (df prunes, postings self-joins, eval-set joins); the
+    * near-dup passes work on [[shingleSets]] instead. Docs shorter than
+    * `n` tokens yield no rows. */
+  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    gramRows(df, idCol, textCol, n).distinct()
+
+  /** Distinct token n-gram shingles per doc as ONE set row:
+    * (id, shingles ARRAY<STRING>) — `array_distinct(flatten(
+    * collect_list(grams)))` grouped by id, so a repeated id gets the
+    * union of its texts' shingles (the set [[shingles]] would give it).
+    * Docs without shingles are dropped. One map-side-combinable shuffle
+    * on id and one row per doc: the MinHash signature is an array
+    * expression over the row and a pair's Jaccard reads two rows,
+    * where the exploded form needs a shuffle per consumer. Callers
+    * reading it more than once (signatures, both verify sides)
+    * localCheckpoint it, so the tokenize and set build run once; the
+    * checkpoint also keeps the set build a leaf under the 16 seed
+    * lambdas, which a projected (unfiltered) form let CollapseProject
+    * inline into every lambda (0.18 s → 10.1 s). */
+  def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                  n: Int): DataFrame =
+    tokenized(df, idCol, textCol).groupBy("id")
+      .agg(array_distinct(flatten(collect_list(gramsOf(col("_toks"), n))))
+        .as("shingles"))
+      .filter(size(col("shingles")) > 0)
+
+  /** Exact n-gram Jaccard of each pair `(id_a, id_b)` from the two docs'
+    * shingle sets: the pair joins one set row per side,
+    * |A∩B| = size(array_intersect), |A∪B| = |A|+|B|−|A∩B|. A pair whose
+    * doc has no shingles is dropped. Every verify in this object goes
+    * through here. Output: (id_a, id_b, n_inter, n_a, n_b, jaccard). */
+  private def jaccardOfSets(pairs: DataFrame, setsA: DataFrame,
+                            setsB: DataFrame): DataFrame = {
+    val (sa, sb) = (col("_sa"), col("_sb"))
     pairs
-      .join(inters, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.withColumnRenamed("id", "id_a")
-              .withColumnRenamed("n_shingles", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("n_shingles", "n_b"), "id_b")
+      .join(setsA.select(col("id").as("id_a"), col("shingles").as("_sa")),
+        "id_a")
+      .join(setsB.select(col("id").as("id_b"), col("shingles").as("_sb")),
+        "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(sa, sb)).cast("long").as("n_inter"),
+        size(sa).cast("long").as("n_a"), size(sb).cast("long").as("n_b"))
       .withColumn("jaccard",
         when(col("n_a") + col("n_b") - col("n_inter") === 0, lit(0.0))
           .otherwise(col("n_inter").cast("double") /
             (col("n_a") + col("n_b") - col("n_inter"))))
-      .select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
+  }
+
+  /** Pairwise n-gram Jaccard for a given candidate pair set
+    * `pairs(id_a, id_b)`. Never all-pairs: feed it LSH candidates (or
+    * any bounded pair relation). A pair given twice is output twice,
+    * each with the same exact counts. */
+  def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
+                   pairs: DataFrame, n: Int): DataFrame =
+    // the verify collapses rows to sets itself: no distinct shuffle
+    ngramJaccardFrom(gramRows(df, idCol, textCol, n), pairs)
+
+  /** [[ngramJaccard]] over a precomputed (id, shingle) relation (repeated
+    * rows are harmless). Verification scales with the CANDIDATE set,
+    * not the corpus: the rows semi-filter to docs that appear in a pair
+    * BEFORE any shuffle — AQE broadcasts the id set while it stays
+    * small — and collapse to one set row per candidate doc, which
+    * [[jaccardOfSets]] reads. The pairs (read by the id filter and the
+    * verify) and the candidate sets (read by both verify sides) are
+    * localCheckpointed, not cached: nothing stays pinned in the
+    * session's cache after the call. */
+  def ngramJaccardFrom(sh: DataFrame, pairs: DataFrame): DataFrame = {
+    val p = pairs.select("id_a", "id_b").localCheckpoint()
+    val candIds = p.select(col("id_a").as("id"))
+      .union(p.select(col("id_b").as("id"))).distinct()
+    val sets = sh.join(candIds, Seq("id"), "left_semi")
+      .groupBy("id").agg(collect_set("shingle").as("shingles"))
+      .localCheckpoint()
+    jaccardOfSets(p, sets, sets)
   }
 
   /** Corpus-level exact span dedup (the C4/RefinedWeb "line dedup"
@@ -315,6 +362,18 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature"))
   }
 
+  /** [[minhashSignaturesFrom]] over a [[shingleSets]] relation: one
+    * `array_min(transform(shingles, x => hashFamily(seed, x)))` per seed,
+    * a narrow projection with no shuffle. Identical signatures to the
+    * exploded form (the min of the same hashes over the same set).
+    * Pass a checkpointed set relation (see [[shingleSets]]). */
+  def minhashSignaturesFromSets(sets: DataFrame, numHashes: Int,
+                                hashFamily: (Int, Column) => Column =
+                                  xxHashFamily): DataFrame =
+    sets.select(col("id"), array((0 until numHashes).map(s =>
+      array_min(transform(col("shingles"), x => hashFamily(s, x)))): _*)
+      .as("signature"))
+
   /** Banded LSH bucket keys for a signature relation: (id, band,
     * band_hash) — one row per band. The joined string IS the bucket
     * key (hashing it again only fixed the width; the string form is
@@ -346,16 +405,24 @@ object Dedup {
   }
 
   /** Full MinHash-LSH near-dup: candidates verified by exact n-gram
-    * Jaccard ≥ threshold. */
+    * Jaccard ≥ threshold. Runs on ONE per-doc [[shingleSets]] relation,
+    * localCheckpointed once per call: the signatures are an array
+    * expression over each set row, the candidates come from
+    * [[minhashCandidates]], and each candidate pair reads its two set
+    * rows once ([[jaccardOfSets]]). Three shuffles in all (the set
+    * build, the band self-join and its distinct) and nothing left in
+    * the session's cache. Output: (id_a < id_b, jaccard). */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.8,
                       hashFamily: (Int, Column) => Column =
                         xxHashFamily): DataFrame = {
-    // one shingle relation feeds both the signature and the verify
-    // branches (otherwise the explode+distinct shuffle runs twice)
-    val sh = shingles(df, idCol, textCol, n).cache()
-    minhashNearDupsFrom(sh, numHashes, bands, threshold, hashFamily)
+    val sets = shingleSets(df, idCol, textCol, n).localCheckpoint()
+    val cands = minhashCandidates(
+      minhashSignaturesFromSets(sets, numHashes, hashFamily), numHashes, bands)
+    jaccardOfSets(cands, sets, sets)
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** [[minhashNearDups]] over a precomputed (id, shingle) relation —
@@ -392,12 +459,7 @@ object Dedup {
         numHashes,
       lit(s"precomputed signature width != numHashes=$numHashes " +
         "(stale or mismatched standing artifact)")).isNull)
-    // pin the candidate relation: ngramJaccardFrom references its pair
-    // argument three times (candidate-id semi-filter, intersection join,
-    // final join) — uncached, the LSH banding self-join re-evaluates per
-    // reference (r4: dedup_minhash 3.4s→7.9s for exactly this)
-    val cands = pinPairs(minhashCandidates(checked, numHashes, bands))
-    ngramJaccardFrom(sh, cands)
+    ngramJaccardFrom(sh, minhashCandidates(checked, numHashes, bands))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -572,31 +634,33 @@ object Dedup {
     * exactIncremental's history).
     * Output: (id_a incoming, id_b standing, jaccard ≥ threshold).
     *
-    * Cache lifetime (ADVICE r10): the two shingle caches below live
-    * for the session — the repo's cache-and-forget bench convention
-    * (Spark's cache manager dedups by canonical plan, so repeated
-    * calls over the same inputs reuse one entry; eviction is LRU
-    * under storage-memory pressure). A long-lived driver invoking
-    * this over MANY DISTINCT inputs should unpersist the returned
-    * plan's caches between corpora. */
+    * Each side is one [[shingleSets]] relation read by its signatures
+    * and by the verify, so each is localCheckpointed for the call — no
+    * cache entry outlives it (the [[minhashNearDups]] shape). */
   def minhashIncremental(incoming: DataFrame, standing: DataFrame,
       idCol: String, textCol: String, n: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.8,
-      hashFamily: (Int, Column) => Column = xxHashFamily): DataFrame = {
-    // each shingle relation feeds its signature branch AND the verify
-    val shIn = shingles(incoming, idCol, textCol, n).cache()
-    val shOld = shingles(standing, idCol, textCol, n).cache()
-    val bIn = minhashBandKeys(
-        minhashSignaturesFrom(shIn, numHashes, hashFamily),
+      hashFamily: (Int, Column) => Column = xxHashFamily): DataFrame =
+    crossNearDups(shingleSets(incoming, idCol, textCol, n),
+      shingleSets(standing, idCol, textCol, n), numHashes, bands,
+      threshold, hashFamily)
+
+  /** Near-dup pairs BETWEEN two set relations: a-bands ⨝ b-bands on
+    * (band, band_hash), then [[jaccardOfSets]]. Each side is read by
+    * its signatures and by the verify, so both are localCheckpointed.
+    * Output: (id_a from `a`, id_b from `b`, jaccard ≥ threshold). */
+  private def crossNearDups(a: DataFrame, b: DataFrame, numHashes: Int,
+      bands: Int, threshold: Double,
+      hashFamily: (Int, Column) => Column): DataFrame = {
+    val (setsA, setsB) = (a.localCheckpoint(), b.localCheckpoint())
+    def bandsOf(sets: DataFrame, id: String) = minhashBandKeys(
+        minhashSignaturesFromSets(sets, numHashes, hashFamily),
         numHashes, bands)
-      .select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val bOld = minhashBandKeys(
-        minhashSignaturesFrom(shOld, numHashes, hashFamily),
-        numHashes, bands)
-      .select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val cands = pinPairs(bIn.join(bOld, Seq("band", "band_hash"))
-      .select("id_a", "id_b").distinct())
-    ngramJaccardFrom(shIn.unionByName(shOld), cands)
+      .select(col("band"), col("band_hash"), col("id").as(id))
+    val cands = bandsOf(setsA, "id_a")
+      .join(bandsOf(setsB, "id_b"), Seq("band", "band_hash"))
+      .select("id_a", "id_b").distinct()
+    jaccardOfSets(cands, setsA, setsB)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -615,9 +679,8 @@ object Dedup {
                            threshold: Double = 0.5, prefixLen: Int = 256,
                            hashFamily: (Int, Column) => Column =
                              xxHashFamily): DataFrame = {
-    // unlike minhashNearDups, the shingle relation has exactly ONE
-    // consumer here (the signatures) — caching it would pin a
-    // corpus-sized relation for the JVM lifetime for nothing
+    // the shingle relation has exactly ONE consumer here (the
+    // signatures) — pinning it would buy nothing
     val sh = shingles(df, idCol, textCol, n)
     val sigs = minhashSignaturesFrom(sh, numHashes, hashFamily)
     val cands = pinPairs(minhashCandidates(sigs, numHashes, bands))
@@ -986,16 +1049,20 @@ object Dedup {
     * pipeline-composition form of [[contamination]]: contaminated ids
     * (any shared n-gram with the broadcast eval shingles) are
     * anti-joined away in ONE join, instead of a contaminated-flag
-    * relation plus a join-back. Surviving set is identical to
+    * relation plus a join-back. Only EXISTENCE of a shared n-gram
+    * matters, so the train side is the raw exploded gram stream — no
+    * distinct shuffle per (doc, shingle), no distinct on the ids —
+    * left-semi-joined map-side against the broadcast distinct eval
+    * shingles. Surviving set is identical to
     * `contamination(...).filter(!contaminated)` re-joined to train. */
   def decontaminateRows(train: DataFrame, trainId: String, trainText: String,
                         evalDf: DataFrame, evalId: String, evalText: String,
                         n: Int = 3): DataFrame = {
-    val evalSh = shingles(evalDf, evalId, evalText, n)
+    val evalSh = gramRows(evalDf, evalId, evalText, n)
       .select("shingle").distinct()
-    val contaminatedIds = shingles(train, trainId, trainText, n)
-      .join(broadcast(evalSh), "shingle")
-      .select(col("id").as(trainId)).distinct()
+    val contaminatedIds = gramRows(train, trainId, trainText, n)
+      .join(broadcast(evalSh), Seq("shingle"), "left_semi")
+      .select(col("id").as(trainId))
     train.join(contaminatedIds, Seq(trainId), "left_anti")
   }
 
@@ -1090,55 +1157,20 @@ object Dedup {
     * benchmark-sized, so at scale they ride a broadcast while the
     * train side streams map-side. Every candidate is then verified by
     * exact cross-corpus n-gram Jaccard ≥ `threshold` (separate shingle
-    * relations per side: the two id spaces may overlap), so a bucket
-    * collision alone never drops a doc.
-    *
-    * The verify joins are bounded by the candidate set (semi-filter
-    * before shuffle, the [[ngramJaccardFrom]] discipline). The
-    * contaminated-id relation is pinned eagerly and all four cached
-    * intermediates are released before returning (the
-    * [[decontaminateBloom]] cache-lifetime discipline). */
+    * set relations per side: the two id spaces may overlap), so a
+    * bucket collision alone never drops a doc. Same shape as
+    * [[minhashIncremental]]: per-side [[shingleSets]], checkpointed for
+    * the call, and the [[jaccardOfSets]] verify. */
   def decontaminateFuzzy(train: DataFrame, trainId: String,
       trainText: String, evalDf: DataFrame, evalId: String,
       evalText: String, n: Int = 3, numHashes: Int = 16, bands: Int = 8,
       threshold: Double = 0.2,
       hashFamily: (Int, Column) => Column = xxHashFamily): DataFrame = {
-    // each side's shingles feed its signatures AND the verify join
-    val trainSh = shingles(train, trainId, trainText, n).cache()
-    val evalSh = shingles(evalDf, evalId, evalText, n).cache()
-    val tBand = minhashBandKeys(
-      minhashSignaturesFrom(trainSh, numHashes, hashFamily), numHashes, bands)
-    val eBand = minhashBandKeys(
-      minhashSignaturesFrom(evalSh, numHashes, hashFamily), numHashes, bands)
-    val cands = pinPairs(
-      tBand.select(col("band"), col("band_hash"), col("id").as("id_a"))
-        .join(eBand.select(col("band"), col("band_hash"), col("id").as("id_b")),
-          Seq("band", "band_hash"))
-        .select("id_a", "id_b").distinct())
-    val aIds = cands.select(col("id_a").as("id")).distinct()
-    val bIds = cands.select(col("id_b").as("id")).distinct()
-    val shA = trainSh.join(aIds, Seq("id"), "left_semi").cache()
-    val shB = evalSh.join(bIds, Seq("id"), "left_semi").cache()
-    val sizesA = shA.groupBy("id").agg(count("*").as("n_a"))
-    val sizesB = shB.groupBy("id").agg(count("*").as("n_b"))
-    val inters = cands
-      .join(shA.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(shB.select(col("id").as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count("*").as("n_inter"))
-    val contaminatedIds = cands
-      .join(inters, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizesA.withColumnRenamed("id", "id_a"), "id_a")
-      .join(sizesB.withColumnRenamed("id", "id_b"), "id_b")
-      .withColumn("jaccard",
-        when(col("n_a") + col("n_b") - col("n_inter") === 0, lit(0.0))
-          .otherwise(col("n_inter").cast("double") /
-            (col("n_a") + col("n_b") - col("n_inter"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a").as(trainId)).distinct()
-      .localCheckpoint() // eager: bounded; lets the caches release now
-    Seq(trainSh, evalSh, shA, shB).foreach(_.unpersist(blocking = false))
+    val contaminatedIds = crossNearDups(
+        shingleSets(train, trainId, trainText, n),
+        shingleSets(evalDf, evalId, evalText, n), numHashes, bands,
+        threshold, hashFamily)
+      .select(col("id_a").as(trainId))
     train.join(contaminatedIds, Seq(trainId), "left_anti")
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions => V}
@@ -30,12 +29,6 @@ object Knn {
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }
-
-  /** Exact text-query k-NN using the deterministic mock embedding. */
-  def searchText(vectors: DataFrame, idCol: String, vecCol: String,
-                 queryText: String, dim: Int, k: Int): DataFrame =
-    bruteForceTopK(vectors, idCol, vecCol,
-      TextFunctions.mockEmbeddingDouble(queryText, dim), k)
 
   /** Deterministic pseudo-random unit hyperplanes for LSH, derived from
     * the mock-embedding scheme (seeded by plane index) so runs are
@@ -321,21 +314,5 @@ object Knn {
       .filter(col("cluster_id").isin(probes: _*))
       .drop("cluster_id")
       .transform(bruteForceTopK(_, idCol, vecCol, query, k))
-  }
-
-  /** All-pairs top-k similarity join (each left row → its k nearest
-    * right rows). Exact O(|L|·|R|) — use only on candidate sets or
-    * within LSH/IVF buckets at scale; the window is partitioned by the
-    * left id so ranking shuffles once on that key. */
-  def topKJoin(left: DataFrame, right: DataFrame, leftId: String,
-               rightId: String, leftVec: String, rightVec: String,
-               k: Int): DataFrame = {
-    val scored = left.select(col(leftId), col(leftVec))
-      .crossJoin(right.select(col(rightId), col(rightVec)))
-      .withColumn("score", V.cosine(col(leftVec), col(rightVec)))
-    val w = Window.partitionBy(leftId).orderBy(col("score").desc, col(rightId))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(leftId), col(rightId), col("score"), col("rn").as("rank"))
   }
 }

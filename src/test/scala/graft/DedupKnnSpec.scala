@@ -95,6 +95,16 @@ class DedupKnnSpec extends SparkSpec {
     assert(j((1L, 4L)) == 0.0)
   }
 
+  test("ngram jaccard: a pair given twice keeps its exact counts") {
+    val pairs = Seq((1L, 3L), (1L, 3L), (1L, 4L)).toDF("id_a", "id_b")
+    val got = Dedup.ngramJaccard(docs, "doc_id", "text", pairs, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(5)))
+    // one output row per input row, each with |A∩B| = 7 of |A∪B| = 9
+    assert(got.count(r => (r._1, r._2) == ((1L, 3L))) == 2, got.toSeq)
+    got.filter(r => (r._1, r._2) == ((1L, 3L))).foreach(r =>
+      assert(r._3 == 7L && r._4 == 7.0 / 9, r))
+  }
+
   test("brute-force knn matches scala cosine; lsh returns a subset") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),
@@ -115,15 +125,6 @@ class DedupKnnSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(lsh.subsetOf(brute))
     assert(lsh.contains(1L)) // the query itself is in its own bucket
-  }
-
-  test("topKJoin ranks per left row") {
-    val left = Seq((1L, Array(1.0f, 0.0f))).toDF("lid", "lvec")
-    val right = Seq((10L, Array(1.0f, 0.0f)), (11L, Array(0.0f, 1.0f)),
-      (12L, Array(0.7f, 0.7f))).toDF("rid", "rvec")
-    val got = Knn.topKJoin(left, right, "lid", "rid", "lvec", "rvec", 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-    assert(got.toSeq == Seq((1L, 10L, 1), (1L, 12L, 2)))
   }
 
   test("duplicated substrings: maximal spans, hashKey path equivalent") {

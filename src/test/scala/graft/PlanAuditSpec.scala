@@ -170,10 +170,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"unexpected shuffle join:\n$p")
   }
 
-  test("dedup verify: semi-filter precedes any shingle shuffle; cache holds") {
-    // the r4 regression class: the candidate semi-filter drifting above
-    // the cache (3× re-evaluation of the corpus shingle build) or the
-    // shingle relation shuffling BEFORE the candidate semi-join
+  test("dedup verify: semi-filter precedes any shingle shuffle; verify " +
+      "reads the checkpointed sets") {
+    // the r4 regression class: the verify re-evaluating the corpus
+    // shingle build per consumer, or the shingle relation shuffling
+    // BEFORE the candidate semi-join
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
     val pairs = (0L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -190,24 +191,53 @@ class PlanAuditSpec extends SparkSpec {
     assert(semiPlan.contains("BroadcastHashJoin"),
       s"candidate semi-filter is not a broadcast join:\n$semiPlan")
 
-    // (2) the full verify: every LeftSemi in the plan (incl. the ones
-    // shown inside cached-relation printouts) must be a BroadcastHashJoin
-    // — a broadcast imposes no distribution on the streamed shingle
-    // side, so the corpus relation is NEVER exchanged to be filtered —
-    // and the intersection's a/b sides must read the semi-filtered
-    // CACHE (InMemoryTableScan with the id_a/id_b renames), not re-plan
-    // the semi-join per consumer (the r4 3×-re-evaluation regression)
-    val out = graft.operators.Dedup.ngramJaccardFrom(sh.cache(), pairs)
+    // (2) the full verify: the semi-filter and the set collapse run in
+    // the candidate-set checkpoint, so the verify plan reads that
+    // checkpoint (Scan ExistingRDD [id, shingles]) and never re-reads
+    // or re-tokenizes the corpus
+    val out = graft.operators.Dedup.ngramJaccardFrom(sh, pairs)
     val p = out.queryExecution.executedPlan.toString
-    val semiLines = p.linesIterator.filter(_.contains("LeftSemi")).toSeq
-    assert(semiLines.nonEmpty, p)
-    semiLines.foreach(l => assert(
-      l.contains("BroadcastHashJoin") && l.contains("BuildRight"),
-      s"candidate semi-filter shuffles the shingle relation: $l"))
-    assert("InMemoryTableScan \\[id_a#".r.findFirstIn(p).isDefined &&
-      "InMemoryTableScan \\[id_b#".r.findFirstIn(p).isDefined,
-      s"a/b intersection sides do not read the semi-filtered cache:\n$p")
-    sh.unpersist()
+    assert("Scan ExistingRDD\\[id#\\d+L?,shingles#".r.findFirstIn(p).isDefined,
+      s"verify sides do not read the checkpointed candidate sets:\n$p")
+    assert(!p.contains("FileScan"), s"verify re-reads the corpus:\n$p")
+  }
+
+  /** Every expression of `plan` and of the plans nested in it (cached
+    * relations' physical plans, subqueries). */
+  private def allExpressions(
+      plan: org.apache.spark.sql.catalyst.plans.QueryPlan[_])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    plan.expressions ++ (plan.children ++ plan.innerChildren).flatMap {
+      case q: org.apache.spark.sql.catalyst.plans.QueryPlan[_] =>
+        allExpressions(q)
+      case _ => Nil
+    }
+
+  test("dedup shingle plans never evaluate the tokenizer inside a " +
+      "lambda") {
+    // the two optimizer hazards of the shingle-set shape: an inferred
+    // `size(grams) > 0` filter pushed below the projections, and the
+    // set build collapsed into every seed's hash lambda — both inline
+    // tokenize() into a lambda and re-run it per gram or per seed
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    val docs = Tables.load(spark, dir, "documents")
+    val evalDf = docs.filter(col("doc_id") % 50 === 0)
+    val plans = Seq(
+      "shingles" -> Dedup.shingles(docs, "doc_id", "text", 3),
+      "shingleSets" -> Dedup.shingleSets(docs, "doc_id", "text", 3),
+      "minhashNearDups" -> Dedup.minhashNearDups(docs, "doc_id", "text"),
+      "decontaminateRows" -> Dedup.decontaminateRows(docs, "doc_id", "text",
+        evalDf, "doc_id", "text", 8)) ++
+      Seq("dedup_minhash", "dedup_ngram", "dedup_clusters",
+        "dedup_keep_best", "dedup_summary", "minhash_incremental",
+        "curation_pipeline").map(q => q -> SparkEntry.queries(q)(spark, dir))
+    val offending = plans.filter { case (_, df) =>
+      allExpressions(df.queryExecution.optimizedPlan)
+        .flatMap(_.collect { case l: LambdaFunction => l })
+        .exists(_.exists(_.isInstanceOf[graft.functions.Tokenize]))
+    }.map(_._1)
+    assert(offending.isEmpty, s"tokenize inside a lambda in: $offending")
   }
 
   test("substring_dedup: probe side reads the cached window relation " +
