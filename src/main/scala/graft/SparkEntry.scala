@@ -1901,18 +1901,15 @@ object SparkEntry {
        |  $bandSelects)""".stripMargin
   }
 
-  /** Shared by `lsh_band_sweep` and `dedup_tuned`: the calibration
-    * corpus (documents ∪ prefix-dropped en mutations — the raw corpus
-    * has no near-dups below sf0.1) and the per-configuration LSH
-    * banding sweep over it — recall and false-candidate counts of four
-    * (bands × rows) splits of the 16-hash signature, measured against
-    * exact Jaccard ground truth on the deterministic LINEAR pair panel
-    * (never all-pairs). Returns (shingles, sweep): the checkpointed
-    * shingle relation comes back so dedup_tuned's tuned run reuses it
-    * — the corpus is tokenized ONCE for sweep + selection + dedup.
-    * Sweep has one row per configuration: (bands, rows_per_band,
-    * n_true, n_caught, n_false_cands, recall). */
-  private def lshSweep(s: SparkSession, dir: String)
+  /** The MinHash calibration panel shared by [[lshSweep]] and
+    * `dedup_calibration`: (corpus, pairs). The raw corpus has no
+    * near-dups, so neighbor pairs (offsets 1..3) alone calibrate only
+    * the j≈0 bucket; the panel SWEEPS the range by pairing every en
+    * doc with a prefix-dropped mutation of itself (doc_id%10 tenths of
+    * the characters removed → jaccard spans ~1.0 down to ~0.1,
+    * deterministically, ASCII-only so both engines count the same
+    * characters). Linear in the corpus — never all-pairs. */
+  private def calibrationPanel(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
     val en = docs.filter(col("lang") === "en").select("doc_id", "text")
@@ -1929,30 +1926,46 @@ object SparkEntry {
       .select("id_a", "id_b")
       .unionByName(en.select(col("doc_id").as("id_a"),
         (col("doc_id") + lit(1000000L)).as("id_b")))
-    // cache, not localCheckpoint: same multi-consumer pin (sweep has
-    // four readers, the tuned dedup three more), but the cache keys on
-    // the canonical plan so repeated executions (bench min-of-3, a
-    // sweep-then-apply session) reuse ONE tokenize pass instead of
-    // re-materializing a fresh checkpoint per run
-    val sh = Dedup.shingles(corpus, "doc_id", "text", 3).cache()
+    (corpus, pairs)
+  }
+
+  /** The calibration panel's pairs scored for [[lshSweep]] and
+    * `dedup_calibration`: exact n-gram Jaccard `j` from
+    * [[Dedup.ngramJaccardFrom]] and both docs' 16-component sha-family
+    * signatures `sa`/`sb`. `sh` is the panel's (pinned) shingle
+    * relation. */
+  private def calibrationScored(sh: DataFrame, pairs: DataFrame)
+      : DataFrame = {
     val sig = Dedup.minhashSignaturesFrom(sh, 16, Dedup.shaHashFamily)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val inters = pairs
-      .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ni"))
-    val scored = pairs
-      .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
-      .join(inters, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("ni"))
+    Dedup.ngramJaccardFrom(sh, pairs)
+      .select(col("id_a"), col("id_b"), col("jaccard").as("j"))
       .join(sig.select(col("id").as("id_a"), col("signature").as("sa")),
         "id_a")
       .join(sig.select(col("id").as("id_b"), col("signature").as("sb")),
         "id_b")
-      .withColumn("j", col("ni").cast("double") /
-        (col("na") + col("nb") - col("ni")))
+  }
+
+  /** Shared by `lsh_band_sweep` and `dedup_tuned`: the calibration
+    * corpus (documents ∪ prefix-dropped en mutations — the raw corpus
+    * has no near-dups below sf0.1) and the per-configuration LSH
+    * banding sweep over it — recall and false-candidate counts of four
+    * (bands × rows) splits of the 16-hash signature, measured against
+    * exact Jaccard ground truth on the deterministic LINEAR pair panel
+    * (never all-pairs). Returns (shingles, sweep): the checkpointed
+    * shingle relation comes back so dedup_tuned's tuned run reuses it
+    * — the corpus is tokenized ONCE for sweep + selection + dedup.
+    * Sweep has one row per configuration: (bands, rows_per_band,
+    * n_true, n_caught, n_false_cands, recall). */
+  private def lshSweep(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val (corpus, pairs) = calibrationPanel(s, dir)
+    // cache, not localCheckpoint: same multi-consumer pin (sweep and
+    // tuned dedup each read it twice), but the cache keys on
+    // the canonical plan so repeated executions (bench min-of-3, a
+    // sweep-then-apply session) reuse ONE tokenize pass instead of
+    // re-materializing a fresh checkpoint per run
+    val sh = Dedup.shingles(corpus, "doc_id", "text", 3).cache()
+    val scored = calibrationScored(sh, pairs)
     def caught(b: Int, r: Int): Column =
       (0 until b).map { k =>
         (0 until r).map(i =>
@@ -3490,50 +3503,13 @@ object SparkEntry {
     //      identical doubles from identical integer counts, so the
     //      floor-binning is engine-exact ----
     "dedup_calibration" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // the raw corpus has no near-dups, so neighbor pairs alone
-      // calibrate only the j≈0 bucket; SWEEP the range by pairing
-      // every en doc with a prefix-dropped mutation of itself
-      // (doc_id%10 tenths of the characters removed → jaccard spans
-      // ~1.0 down to ~0.1, deterministically, ASCII-only so both
-      // engines count the same characters)
-      val en = docs.filter(col("lang") === "en").select("doc_id", "text")
-      val start = (floor(length(col("text")) *
-        ((col("doc_id") % 10).cast("double") / 10.0)) + 1).cast("int")
-      val mutated = en.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        col("text").substr(start, length(col("text"))).as("text"))
-      val corpus = docs.select("doc_id", "text").unionByName(mutated)
-      val ids = docs.select(col("doc_id"))
-      val pairs = ids.select(col("doc_id").as("id_a"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("d"))
-        .withColumn("id_b", col("id_a") + col("d"))
-        .join(ids.select(col("doc_id").as("id_b")), Seq("id_b"))
-        .select("id_a", "id_b")
-        .unionByName(en.select(col("doc_id").as("id_a"),
-          (col("doc_id") + lit(1000000L)).as("id_b")))
-      // FOUR consumers of the shingle relation (signatures, sizes,
-      // both inter-join sides) — pin it once; an eval harness runs on
-      // a sample at scale, so the pin is sample-bounded
+      val (corpus, pairs) = calibrationPanel(s, dir)
+      // two consumers of the shingle relation (signatures and the
+      // verify) — pin it once; an eval harness runs on a sample at
+      // scale, so the pin is sample-bounded
       val sh = Dedup.shingles(corpus, "doc_id", "text", 3)
         .localCheckpoint()
-      val sig = Dedup.minhashSignaturesFrom(sh, 16, Dedup.shaHashFamily)
-      val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-      val inters = pairs
-        .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
-        .join(sh.select(col("id").as("id_b"), col("shingle")),
-          Seq("id_b", "shingle"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("ni"))
-      val scored = pairs
-        .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-        .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
-        .join(inters, Seq("id_a", "id_b"), "left")
-        .na.fill(0L, Seq("ni"))
-        .join(sig.select(col("id").as("id_a"), col("signature").as("sa")),
-          "id_a")
-        .join(sig.select(col("id").as("id_b"), col("signature").as("sb")),
-          "id_b")
-        .withColumn("j", col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")))
+      val scored = calibrationScored(sh, pairs)
         .withColumn("est", size(filter(
           zip_with(col("sa"), col("sb"), (x, y) => x === y),
           b => b)).cast("double") / lit(16.0))

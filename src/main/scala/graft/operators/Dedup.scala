@@ -132,11 +132,45 @@ object Dedup {
         .as("shingles"))
       .filter(size(col("shingles")) > 0)
 
+  /** Candidate pairs `(id_a, id_b)`, localCheckpointed, and their row
+    * count `n`, observed by the checkpoint job itself: sizing the
+    * [[candidateRows]] broadcast costs no extra job. */
+  private final case class Candidates(pairs: DataFrame, n: Long)
+
+  private def pinCandidates(pairs: DataFrame): Candidates = {
+    val seen = org.apache.spark.sql.Observation()
+    val pinned = pairs.select("id_a", "id_b")
+      .observe(seen, count(lit(1)).as("n")).localCheckpoint()
+    Candidates(pinned, seen.get("n").asInstanceOf[Long])
+  }
+
+  /** The rows of `rel` (keyed `id`) whose id appears in any of the
+    * candidates' columns `cols`: the semi-filter every verify applies
+    * to a corpus-sized relation BEFORE it is shuffled or joined. The
+    * ids are broadcast while n·|cols| of them fit the session's
+    * broadcast threshold at 8 bytes an id, so the corpus side streams
+    * map-side. The decision cannot be left to AQE: a candidate
+    * relation's size estimate is a join's, so the static plan is a
+    * sort-merge semi-join, and AQE demotes it to a broadcast only after
+    * the corpus side has been shuffled. Corpus-sized candidate sets
+    * degrade to that one keyed shuffle. */
+  private def candidateRows(rel: DataFrame, cands: Candidates,
+                            cols: String*): DataFrame = {
+    // repeated ids are harmless on a semi-join's build side: no distinct
+    val ids = cols.map(c => cands.pairs.select(col(c).as("id")))
+      .reduce(_ union _)
+    val fits = cands.n * cols.size * 8 <=
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    rel.join(if (fits) broadcast(ids) else ids, Seq("id"), "left_semi")
+  }
+
   /** Exact n-gram Jaccard of each pair `(id_a, id_b)` from the two docs'
     * shingle sets: the pair joins one set row per side,
     * |A∩B| = size(array_intersect), |A∪B| = |A|+|B|−|A∩B|. A pair whose
-    * doc has no shingles is dropped. Every verify in this object goes
-    * through here. Output: (id_a, id_b, n_inter, n_a, n_b, jaccard). */
+    * doc has no shingles is dropped. Every n-gram Jaccard and
+    * containment verify in graft goes through here, over sets already
+    * restricted to the candidate docs ([[candidateRows]]).
+    * Output: (id_a, id_b, n_inter, n_a, n_b, jaccard). */
   private def jaccardOfSets(pairs: DataFrame, setsA: DataFrame,
                             setsB: DataFrame): DataFrame = {
     val (sa, sb) = (col("_sa"), col("_sb"))
@@ -166,20 +200,17 @@ object Dedup {
   /** [[ngramJaccard]] over a precomputed (id, shingle) relation (repeated
     * rows are harmless). Verification scales with the CANDIDATE set,
     * not the corpus: the rows semi-filter to docs that appear in a pair
-    * BEFORE any shuffle — AQE broadcasts the id set while it stays
-    * small — and collapse to one set row per candidate doc, which
-    * [[jaccardOfSets]] reads. The pairs (read by the id filter and the
-    * verify) and the candidate sets (read by both verify sides) are
-    * localCheckpointed, not cached: nothing stays pinned in the
-    * session's cache after the call. */
+    * BEFORE any shuffle ([[candidateRows]]) and collapse to one set row
+    * per candidate doc, which [[jaccardOfSets]] reads. The pairs (read
+    * by the id filter and the verify) and the candidate sets (read by
+    * both verify sides) are localCheckpointed, not cached: nothing
+    * stays pinned in the session's cache after the call. */
   def ngramJaccardFrom(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    val p = pairs.select("id_a", "id_b").localCheckpoint()
-    val candIds = p.select(col("id_a").as("id"))
-      .union(p.select(col("id_b").as("id"))).distinct()
-    val sets = sh.join(candIds, Seq("id"), "left_semi")
+    val cands = pinCandidates(pairs)
+    val sets = candidateRows(sh, cands, "id_a", "id_b")
       .groupBy("id").agg(collect_set("shingle").as("shingles"))
       .localCheckpoint()
-    jaccardOfSets(p, sets, sets)
+    jaccardOfSets(cands.pairs, sets, sets)
   }
 
   /** Corpus-level exact span dedup (the C4/RefinedWeb "line dedup"
@@ -408,19 +439,24 @@ object Dedup {
     * Jaccard ≥ threshold. Runs on ONE per-doc [[shingleSets]] relation,
     * localCheckpointed once per call: the signatures are an array
     * expression over each set row, the candidates come from
-    * [[minhashCandidates]], and each candidate pair reads its two set
-    * rows once ([[jaccardOfSets]]). Three shuffles in all (the set
-    * build, the band self-join and its distinct) and nothing left in
-    * the session's cache. Output: (id_a < id_b, jaccard). */
+    * [[minhashCandidates]] (checkpointed too: the candidate-id filter
+    * and the verify both read them), and each candidate pair reads its
+    * two set rows, semi-filtered to the candidate docs, once
+    * ([[jaccardOfSets]]). No shuffle carries shingle rows: the set
+    * build shuffles once on id, the band self-join's distinct and the
+    * candidate-id distinct shuffle id pairs and ids. Nothing is left
+    * in the session's cache. Output: (id_a < id_b, jaccard). */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.8,
                       hashFamily: (Int, Column) => Column =
                         xxHashFamily): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, n).localCheckpoint()
-    val cands = minhashCandidates(
-      minhashSignaturesFromSets(sets, numHashes, hashFamily), numHashes, bands)
-    jaccardOfSets(cands, sets, sets)
+    val cands = pinCandidates(minhashCandidates(
+      minhashSignaturesFromSets(sets, numHashes, hashFamily), numHashes,
+      bands))
+    val near = candidateRows(sets, cands, "id_a", "id_b")
+    jaccardOfSets(cands.pairs, near, near)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -554,8 +590,8 @@ object Dedup {
     * a pair is detectable when the two docs share ≥ minShared
     * discriminative (df ≤ maxDf) shingles — real excerpts share
     * dozens. Survivors verify EXACTLY over the full shingle sets of
-    * candidate docs only ([[ngramJaccardFrom]]'s semi-join
-    * discipline). Output: directed pairs
+    * candidate docs only: [[ngramJaccardFrom]] gives n_inter and
+    * |S(a)| = n_a. Output: directed pairs
     * (id_a, id_b, n_inter, size_a, containment) with C(a→b) ≥
     * `threshold`; containment is an exact integer ratio, so the value
     * is engine-order-independent. */
@@ -565,15 +601,13 @@ object Dedup {
     require(maxDf >= 2, s"bad containment maxDf: $maxDf")
     require(minShared >= 1, s"bad containment minShared: $minShared")
     // sh feeds the df prune, the postings join, and the exact verify;
-    // pruned feeds both candidate self-join sides; shc three verify
-    // consumers — pin all three (each unpinned consumer re-runs the
-    // tokenize+shingle plan; the pin sweep measured 4× on this shape).
-    // Cache LIFETIME (ADVICE r11): the caches live only for THIS
-    // call — the result is eagerly checkpointed below with the caches
-    // hot, then all three are unpersisted before returning, so a
-    // long-lived session accumulates nothing. (An eager checkpoint
-    // per relation instead would serialize three materialization jobs
-    // — measured slower than letting the final action pipeline them.)
+    // pruned feeds both candidate self-join sides — pin both (each
+    // unpinned consumer re-runs the tokenize+shingle plan; the pin
+    // sweep measured 4× on this shape). Cache LIFETIME (ADVICE r11):
+    // the caches live only for THIS call — the result is eagerly
+    // checkpointed below with the caches hot, then both are
+    // unpersisted before returning, so a long-lived session
+    // accumulates nothing.
     val sh = shingles(corpus, idCol, textCol, n).cache()
     val prunable = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
@@ -586,37 +620,23 @@ object Dedup {
     // time 47 s → 69 s). relatedPostings wins because its encode runs
     // ONCE into a standing artifact; here it would run per call.
     val pruned = sh.join(prunable, "shingle").cache()
-    val cands = pinPairs(
-      pruned.select(col("shingle"), col("id").as("id_a"))
-        .join(pruned.select(col("shingle"), col("id").as("id_b")),
-          "shingle")
-        .filter(col("id_a") =!= col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("__shared"))
-        .filter(col("__shared") >= minShared)
-        .select("id_a", "id_b"))
-    val candIds = cands.select(col("id_a").as("id"))
-      .union(cands.select(col("id_b").as("id"))).distinct()
-    // three consumers (sizes + both intersection sides) — the
-    // ngramJaccardFrom pin, same rationale and the same call-scoped
-    // lifetime
-    val shc = sh.join(candIds, Seq("id"), "left_semi").cache()
-    val sizes = shc.groupBy("id").agg(count(lit(1)).as("size_a"))
-    val inters = cands
-      .join(shc.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(shc.select(col("id").as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
+    val cands = pruned.select(col("shingle"), col("id").as("id_a"))
+      .join(pruned.select(col("shingle"), col("id").as("id_b")),
+        "shingle")
+      .filter(col("id_a") =!= col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__shared"))
+      .filter(col("__shared") >= minShared)
     // eager checkpoint: the (pair-bounded) result materializes NOW,
     // with the caches hot; the caches then release immediately
-    val out = inters.join(sizes.withColumnRenamed("id", "id_a"), "id_a")
+    val out = ngramJaccardFrom(sh, cands)
+      .select(col("id_a"), col("id_b"), col("n_inter"),
+        col("n_a").as("size_a"))
       .withColumn("containment",
         col("n_inter").cast("double") / col("size_a").cast("double"))
       .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "n_inter", "size_a", "containment")
       .localCheckpoint()
     sh.unpersist(blocking = false)
     pruned.unpersist(blocking = false)
-    shc.unpersist(blocking = false)
     out
   }
 
@@ -646,8 +666,10 @@ object Dedup {
       threshold, hashFamily)
 
   /** Near-dup pairs BETWEEN two set relations: a-bands ⨝ b-bands on
-    * (band, band_hash), then [[jaccardOfSets]]. Each side is read by
-    * its signatures and by the verify, so both are localCheckpointed.
+    * (band, band_hash), then [[jaccardOfSets]] over each side's sets
+    * semi-filtered to its candidate ids. Each side is read by its
+    * signatures and by the verify, and the candidates by both id
+    * filters and the verify, so all three are localCheckpointed.
     * Output: (id_a from `a`, id_b from `b`, jaccard ≥ threshold). */
   private def crossNearDups(a: DataFrame, b: DataFrame, numHashes: Int,
       bands: Int, threshold: Double,
@@ -657,10 +679,11 @@ object Dedup {
         minhashSignaturesFromSets(sets, numHashes, hashFamily),
         numHashes, bands)
       .select(col("band"), col("band_hash"), col("id").as(id))
-    val cands = bandsOf(setsA, "id_a")
+    val cands = pinCandidates(bandsOf(setsA, "id_a")
       .join(bandsOf(setsB, "id_b"), Seq("band", "band_hash"))
-      .select("id_a", "id_b").distinct()
-    jaccardOfSets(cands, setsA, setsB)
+      .select("id_a", "id_b").distinct())
+    jaccardOfSets(cands.pairs, candidateRows(setsA, cands, "id_a"),
+      candidateRows(setsB, cands, "id_b"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -1051,9 +1074,11 @@ object Dedup {
     * anti-joined away in ONE join, instead of a contaminated-flag
     * relation plus a join-back. Only EXISTENCE of a shared n-gram
     * matters, so the train side is the raw exploded gram stream — no
-    * distinct shuffle per (doc, shingle), no distinct on the ids —
-    * left-semi-joined map-side against the broadcast distinct eval
-    * shingles. Surviving set is identical to
+    * distinct shuffle per (doc, shingle) — left-semi-joined map-side
+    * against the broadcast distinct eval shingles. The matching ids
+    * are de-duplicated (partial-aggregated map-side) before the
+    * anti-join: a train doc copying an eval doc matches once per gram.
+    * Surviving set is identical to
     * `contamination(...).filter(!contaminated)` re-joined to train. */
   def decontaminateRows(train: DataFrame, trainId: String, trainText: String,
                         evalDf: DataFrame, evalId: String, evalText: String,
@@ -1062,7 +1087,7 @@ object Dedup {
       .select("shingle").distinct()
     val contaminatedIds = gramRows(train, trainId, trainText, n)
       .join(broadcast(evalSh), Seq("shingle"), "left_semi")
-      .select(col("id").as(trainId))
+      .select(col("id").as(trainId)).distinct()
     train.join(contaminatedIds, Seq(trainId), "left_anti")
   }
 
@@ -1160,7 +1185,12 @@ object Dedup {
     * set relations per side: the two id spaces may overlap), so a
     * bucket collision alone never drops a doc. Same shape as
     * [[minhashIncremental]]: per-side [[shingleSets]], checkpointed for
-    * the call, and the [[jaccardOfSets]] verify. */
+    * the call, and the [[jaccardOfSets]] verify.
+    *
+    * The verify joins are bounded by the candidate set: each side's
+    * sets semi-filter to its candidate ids before any shuffle (the
+    * [[ngramJaccardFrom]] discipline), so a corpus-sized train side
+    * never crosses an exchange to be verified. */
   def decontaminateFuzzy(train: DataFrame, trainId: String,
       trainText: String, evalDf: DataFrame, evalId: String,
       evalText: String, n: Int = 3, numHashes: Int = 16, bands: Int = 8,

@@ -204,5 +204,11 @@ class DedupSetsSpec extends SparkSpec {
     Dedup.minhashIncremental(corpus.filter(col("doc_id") >= 100L),
       corpus.filter(col("doc_id") < 100L), "doc_id", "text").collect()
     assert(cm.isEmpty, "minhashIncremental")
+    Dedup.containment(corpus, "doc_id", "text").collect()
+    assert(cm.isEmpty, "containment")
+    Dedup.decontaminateFuzzy(corpus.filter(col("doc_id") >= 100L),
+      "doc_id", "text", corpus.filter(col("doc_id") < 100L), "doc_id",
+      "text").collect()
+    assert(cm.isEmpty, "decontaminateFuzzy")
   }
 }

@@ -191,15 +191,73 @@ class PlanAuditSpec extends SparkSpec {
     assert(semiPlan.contains("BroadcastHashJoin"),
       s"candidate semi-filter is not a broadcast join:\n$semiPlan")
 
-    // (2) the full verify: the semi-filter and the set collapse run in
-    // the candidate-set checkpoint, so the verify plan reads that
-    // checkpoint (Scan ExistingRDD [id, shingles]) and never re-reads
-    // or re-tokenizes the corpus
-    val out = graft.operators.Dedup.ngramJaccardFrom(sh, pairs)
+    // (2) the real operator: the semi-filter and the set collapse run
+    // inside its candidate-set checkpoint job, so audit EVERY plan the
+    // call executes — each LeftSemi must be a BroadcastHashJoin building
+    // the id set (BuildRight): a broadcast imposes no distribution on
+    // the streamed shingle side, so the corpus relation is NEVER
+    // exchanged to be filtered
+    val (out, executed) = executedPlans {
+      val verified = graft.operators.Dedup.ngramJaccardFrom(sh, pairs)
+      verified.collect()
+      verified
+    }
+    assertSemiFiltersBroadcast(executed)
+    // ... and the verify reads that checkpoint (Scan ExistingRDD [id,
+    // shingles]), never re-reading or re-tokenizing the corpus
     val p = out.queryExecution.executedPlan.toString
     assert("Scan ExistingRDD\\[id#\\d+L?,shingles#".r.findFirstIn(p).isDefined,
       s"verify sides do not read the checkpointed candidate sets:\n$p")
     assert(!p.contains("FileScan"), s"verify re-reads the corpus:\n$p")
+  }
+
+  test("minhashNearDups: the verify semi-filters the corpus sets to the " +
+      "candidate docs through a broadcast") {
+    val docs = Tables.load(spark, dir, "documents")
+    val (_, executed) = executedPlans {
+      graft.operators.Dedup.minhashNearDups(docs, "doc_id", "text",
+        threshold = 0.2).collect()
+    }
+    assertSemiFiltersBroadcast(executed)
+  }
+
+  /** `body`'s value and the executed physical plans of every query it
+    * runs (eager checkpoint jobs included). Listener events arrive
+    * asynchronously but in order, so a trailing marker query bounds
+    * the wait. */
+  private def executedPlans[T](body: => T): (T, Seq[String]) = {
+    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit =
+        captured.synchronized { captured += qe.executedPlan.toString }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val marker = "plan_audit_marker"
+    def plans() = captured.synchronized { captured.toSeq }
+    spark.listenerManager.register(listener)
+    try {
+      val value = body
+      spark.range(1).select(lit(marker).as(marker)).collect()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!plans().exists(_.contains(marker)) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(plans().exists(_.contains(marker)),
+        "query listener events did not arrive")
+      (value, plans().filterNot(_.contains(marker)))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def assertSemiFiltersBroadcast(plans: Seq[String]): Unit = {
+    val semiLines = plans.flatMap(_.linesIterator.filter(_.contains("LeftSemi")))
+    assert(semiLines.nonEmpty, plans.mkString("\n----\n"))
+    semiLines.foreach(l => assert(
+      l.contains("BroadcastHashJoin") && l.contains("BuildRight"),
+      s"candidate semi-filter shuffles the shingle relation: $l\n" +
+        plans.mkString("\n----\n")))
   }
 
   /** Every expression of `plan` and of the plans nested in it (cached
