@@ -439,17 +439,16 @@ object SparkEntry {
 
   // ---- data-dependent fits, shared by query AND oracle ----------------
   // The IVF centroids / PCA components are fitted ONCE per sf dir and
-  // memoized; the ann_ivf/pca_project queries and their oracle literals
-  // both read the same cached values. Running the fit twice would risk
-  // last-ulp divergence (float aggregation order is not pinned across
+  // session and held as standing artifacts ([[StandingArtifacts]]); the
+  // ann_ivf/pca_project queries and their oracle literals both read the
+  // same fitted values. Running the fit twice would risk last-ulp
+  // divergence (float aggregation order is not pinned across
   // executions), exactly the class of bug the rake fix addressed.
-  // Embeddings DIFFER per scale factor, so the cache is keyed by dir.
-
-  private val ivfFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Array[Double]]]
+  // Embeddings DIFFER per scale factor, and an entry is rebuilt when
+  // its dir's files change.
 
   private def ivfCentroidsFor(s: SparkSession, dir: String): Seq[Array[Double]] =
-    ivfFitCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "ivfCentroids")(
       Knn.ivfFit(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         64, k = 8, iters = 2))
 
@@ -465,12 +464,12 @@ object SparkEntry {
     * memoized fit either way. */
   private def ivfBaseCentroidsFor(s: SparkSession,
       dir: String): Seq[Array[Double]] =
-    ivfFitCache.getOrElseUpdate(dir + "#base", {
+    StandingArtifacts(s, dir, "ivfBaseCentroids") {
       val base = Tables.load(s, dir, "embeddings")
         .filter(col("vec_id") % 5 =!= 0)
       Knn.ivfFit(base, "vec_id", "embedding", 64,
         k = Knn.scaledCellCount(base.count()), iters = 2)
-    })
+    }
 
   /** Quantizer for the MUTUAL-kNN candidate structure: cell count
     * scales with the corpus (k = max(8, ⌈n/256⌉), the FAISS-style
@@ -482,29 +481,23 @@ object SparkEntry {
     * literals are unchanged. */
   private def mutualCentroidsFor(s: SparkSession,
       dir: String): Seq[Array[Double]] =
-    ivfFitCache.getOrElseUpdate(dir + "#mutual", {
+    StandingArtifacts(s, dir, "mutualCentroids") {
       val n = Tables.load(s, dir, "embeddings").count() // 1-value
       val k = Knn.scaledCellCount(n)
       if (k == 8) ivfCentroidsFor(s, dir)
       else Knn.ivfFit(Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", 64, k = k, iters = 2)
-    })
-
-  private val pqFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Pq.Codebook]
+    }
 
   private def pqCodebookFor(s: SparkSession, dir: String): Pq.Codebook =
-    pqFitCache.getOrElseUpdate(dir,
-      Pq.fit(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
-        dim = 64, m = 8, k = 16, iters = 2))
+    pqCodebookForM(s, dir, 8)
 
-  /** Per-m codebook fits for the ann_pq_tuned sweep; m = 8 shares the
+  /** Per-m codebook fits for the ann_pq_tuned sweep; m = 8 is the
     * [[pqCodebookFor]] fit every other PQ query uses, so the tuned
     * loop's m=8 legs and ann_pq/ann_pq_refine can never diverge. */
   private def pqCodebookForM(s: SparkSession, dir: String,
       m: Int): Pq.Codebook =
-    if (m == 8) pqCodebookFor(s, dir)
-    else pqFitCache.getOrElseUpdate(s"$dir#m$m",
+    StandingArtifacts(s, dir, s"pqCodebook/$m")(
       Pq.fit(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         dim = 64, m = m, k = 16, iters = 2))
 
@@ -519,35 +512,13 @@ object SparkEntry {
   private val PqTunedGrid: Seq[(Int, Int)] =
     Seq((4, 30), (4, 50), (8, 30), (8, 50))
 
-  /** Standing per-dir (cfg, panel_recall, selected encoded codes) for
-    * ann_pq_tuned — the dedup_tuned standing-fit pattern: sweep inputs
-    * are corpus-deterministic, so selection is a memoized fit and only
-    * the tuned run serves on the query clock. The SELECTED m's encoded
-    * relation is stored in the fit itself (ADVICE r13): the serving
-    * path reads this handle directly instead of rebuilding the codes
-    * plan and relying on canonical-plan cache identity, and the
-    * non-selected m's codes are unpersisted at selection time. */
-  private val pqTunedFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Double, DataFrame)]
-
-  /** Standing per-dir (cfg, w_dense, sum_ndcg_micro) pick for
-    * hybrid_tuned — same standing-fit rationale. */
-  private val hybridTunedFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Double, Long)]
-
-  /** Standing per-dir (cfg, panel_recall) picks for ann_tuned /
-    * ivf_tuned — same standing-fit rationale. */
-  private val annTunedFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Double)]
-  private val ivfTunedFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Double)]
-
-  /** The standing ann_tuned selection fit (r13): sweep + selection
-    * memoized per dir; only the tuned run is on the query clock. The
-    * oracle still replays sweep + selection + run. Extracted from the
-    * query closure (r14) so the fit-sidecar writer can force it. */
+  /** The standing ann_tuned selection fit (r13), a (cfg, panel_recall)
+    * pick: sweep inputs are corpus-deterministic, so sweep + selection
+    * run once per dir and only the tuned run is on the query clock.
+    * The oracle still replays sweep + selection + run. Extracted from
+    * the query closure (r14) so the fit-sidecar writer can force it. */
   private def annTunedFit(s: SparkSession, dir: String): (Int, Double) =
-    annTunedFitCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "annTunedFit") {
       val e = t(s, dir, "embeddings")
       // pin each panel query's 10-row exact top-10 ONCE — the 12
       // unioned recall legs otherwise re-run the full exact scan per
@@ -582,11 +553,11 @@ object SparkEntry {
         (if (mr >= 0.5) 0 else 1,
           if (mr >= 0.5) annTunedFrac(cfg) else 0.0, -mr, cfg)
       }.head
-    })
+    }
 
   /** The standing ivf_tuned selection fit — see [[annTunedFit]]. */
   private def ivfTunedFit(s: SparkSession, dir: String): (Int, Double) =
-    ivfTunedFitCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "ivfTunedFit") {
       val e = t(s, dir, "embeddings")
       val centroids = ivfCentroidsFor(s, dir)
       // pin each panel query's exact top-10 once — the |grid| recall
@@ -620,16 +591,17 @@ object SparkEntry {
           if (mr >= 0.5) IvfTunedGrid(cfg).toDouble / IvfTunedNlist
           else 0.0, -mr, cfg)
       }.head
-    })
+    }
 
   /** The standing ann_pq_tuned selection fit — see [[annTunedFit]].
     * Returns (cfg, panel_recall, the SELECTED m's pinned encoded
     * codes): the fit owns the serving artifact (ADVICE r13), so the
-    * serving path reads this handle directly and the losing m's codes
-    * are released at selection time. */
+    * serving path reads this handle directly instead of rebuilding the
+    * codes plan and relying on canonical-plan cache identity, and the
+    * losing m's codes are released at selection time. */
   private def pqTunedFit(s: SparkSession,
       dir: String): (Int, Double, DataFrame) =
-    pqTunedFitCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "pqTunedFit") {
       val e = t(s, dir, "embeddings")
       val exactByQid = AnnRecallQids.map { qid =>
         qid -> Knn.bruteForceTopK(e, "vec_id", "embedding",
@@ -715,7 +687,7 @@ object SparkEntry {
       encodedByM.foreach { case (m, df) =>
         if (m != mPick) df.unpersist(blocking = false) }
       (cfgPick, mrPick, encodedByM(mPick))
-    })
+    }
 
   /** The hybrid_tuned wDense sweep grid. */
   private val HybridTunedGrid: Seq[Double] = Seq(0.25, 0.5, 0.75, 1.0)
@@ -724,7 +696,7 @@ object SparkEntry {
     * Returns (cfg, w_dense, sum_ndcg_micro). */
   private def hybridTunedFit(s: SparkSession,
       dir: String): (Int, Double, Long) =
-    hybridTunedFitCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "hybridTunedFit") {
       val docs = t(s, dir, "documents")
       val spark = s
       import spark.implicits._
@@ -765,10 +737,7 @@ object SparkEntry {
       }
       val cfg = totals.maxBy { case (i, m) => (m, -i) }._1
       (cfg, HybridTunedGrid(cfg), totals(cfg)._2)
-    })
-
-  private val chunksSnapshotCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    }
 
   /** Per-session snapshot of the §3.3-ingested chunks table for the
     * search_hybrid query: built ONCE per sfDir, blue/green-swapped to a
@@ -779,7 +748,7 @@ object SparkEntry {
     * Without this, each of the bench's 3 passes re-ran chunk+embed+
     * index into a fresh cache. */
   private def ingestedChunksSnapshot(s: SparkSession, dir: String): DataFrame =
-    chunksSnapshotCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "ingestedChunksSnapshot") {
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         "graft-chunks-" + Integer.toHexString(dir.hashCode)).getPath
       val chunks = Ingest.buildChunks(t(s, dir, "documents"), "docs",
@@ -787,10 +756,7 @@ object SparkEntry {
         Chunking.ChunkConfig(minTokens = 5, maxTokens = 40), dim = 32)
       Ingest.reindexSwap(s, chunks, root)
       Ingest.readCurrent(s, root)
-    })
-
-  private val sparseIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Bm25.Index]
+    }
 
   /** The ingested collection's STANDING sparse index (A1/A2), built and
     * persisted once per session beside the chunk snapshot — the
@@ -798,11 +764,8 @@ object SparkEntry {
     * (vecpipe/sparse.py), so per-query searches must not re-derive
     * corpus statistics. */
   private def ingestedSparseIndex(s: SparkSession, dir: String): Bm25.Index =
-    sparseIndexCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "ingestedSparseIndex")(
       pinnedSparseIndex(ingestedChunksSnapshot(s, dir)))
-
-  private val hierIndexCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, Bm25.Index)]
 
   /** The STANDING (64,16) hierarchy + its leaf BM25 index, built once
     * per sf dir — the ingested-index discipline (search_hybrid's): the
@@ -813,7 +776,7 @@ object SparkEntry {
     * same definition the oracles replay. */
   private def hierLeafIndex(s: SparkSession,
       dir: String): (DataFrame, Bm25.Index) =
-    hierIndexCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "hierLeafIndex") {
       val docs = t(s, dir, "documents")
       val hier = Chunking.chunkHierarchical(docs, "doc_id", "text",
         Chunking.ChunkConfig(hierarchicalSizes = Seq(64, 16))).cache()
@@ -827,28 +790,25 @@ object SparkEntry {
             "end_offset - start_offset)").as("chunk_text"))
       (hier, Bm25.buildIndex(leaves, "chunk_id", "chunk_text",
         pinStats = true).pin())
-    })
+    }
 
   /** Build a STANDING index over a chunks table: stats pinned,
     * docWeights and the forward relation materialized once, off the
     * query clock ([[Bm25.Index.pin]] — the standing-index discipline
-    * every per-dir index cache uses). */
+    * every per-dir standing index uses). */
   private def pinnedSparseIndex(chunks: DataFrame): Bm25.Index =
     Bm25.buildIndex(chunks, "chunk_id", "content", pinStats = true).pin()
-
-  private val dsirModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, TextAnalysis.DsirModel]
 
   /** The standing DSIR fit for the dir's target/raw split — the ratio
     * table is a durable fit artifact (like the BM25 stats or IVF
     * centroids): fit once per corpus, score per query. */
   private def dsirModelFor(s: SparkSession, dir: String): TextAnalysis.DsirModel =
-    dsirModelCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "dsirModel") {
       val docs = Tables.load(s, dir, "documents")
       TextAnalysis.dsirFit(
         docs.filter(col("doc_id") % 10 =!= 0), "text",
         docs.filter(col("doc_id") % 10 === 0), "text", buckets = 64)
-    })
+    }
 
   /** events with a normalized `ts_utc` timestamp column. ts arrives
     * either as TIMESTAMP(NANOS) — which Tables.load surfaces as a
@@ -866,16 +826,13 @@ object SparkEntry {
     }
   }
 
-  private val stagedEventsCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Three ts-ordered event micro-batch files for the streaming window
     * query, staged ONCE per sf dir with explicit strictly-increasing
     * mtimes (the StreamingStatsSpec discipline — wall-clock mtimes can
     * coalesce under coarse filesystem timestamps, making batch order
     * nondeterministic). */
   private def stagedEventBatches(s: SparkSession, dir: String): String =
-    stagedEventsCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "stagedEventBatches") {
       val ev = eventsWithTsUtc(s, dir)
       val t1 = lit("2024-01-11").cast("timestamp")
       val t2 = lit("2024-01-21").cast("timestamp")
@@ -884,7 +841,7 @@ object SparkEntry {
         sel.filter(col("ts_utc") < t1),
         sel.filter(col("ts_utc") >= t1 && col("ts_utc") < t2),
         sel.filter(col("ts_utc") >= t2)))
-    })
+    }
 
   /** Write each part as ONE parquet file under `<tmp>/in` with
     * explicit strictly-increasing mtimes, so the file stream source's
@@ -913,16 +870,13 @@ object SparkEntry {
     in
   }
 
-  private val stagedDocsCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Three id-ordered document micro-batch files for the streaming
     * dedup query — the [[stagedEventBatches]] discipline (explicit
     * strictly-increasing mtimes) applied to the documents table, split
     * on doc_id thirds so duplicates land both within and across
     * batches. */
   private def stagedDocBatches(s: SparkSession, dir: String): String =
-    stagedDocsCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "stagedDocBatches") {
       // every 7th doc collapses to one of three canned texts: the raw
       // synthetic corpus has NO exact duplicates below sf0.1, which
       // would make the streaming-dedup oracle an empty-result check;
@@ -936,10 +890,7 @@ object SparkEntry {
         docs.filter(col("doc_id") < n / 3),
         docs.filter(col("doc_id") >= n / 3 && col("doc_id") < 2 * n / 3),
         docs.filter(col("doc_id") >= 2 * n / 3)))
-    })
-
-  private val docsChunksCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    }
 
   /** The docs-as-chunks relation (each document = one chunk, mock
     * embedding attached) that every chunker-free search twin queries —
@@ -947,7 +898,7 @@ object SparkEntry {
     * expensive part, and the reference searches a standing collection,
     * not one re-embedded per request. */
   private def docsAsChunksSnapshot(s: SparkSession, dir: String): DataFrame =
-    docsChunksCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "docsAsChunksSnapshot")(
       Tables.load(s, dir, "documents").select(
         col("doc_id").cast("string").as("doc_id"),
         col("doc_id").cast("string").as("chunk_id"),
@@ -965,7 +916,7 @@ object SparkEntry {
     * so the standing per-half BM25 indexes are shared. */
   private def heteroHalfSnapshot(s: SparkSession, dir: String,
       parity: Int, dim: Int): DataFrame =
-    docsChunksCache.getOrElseUpdate(s"$dir#hetero$parity-$dim",
+    StandingArtifacts(s, dir, s"heteroHalfSnapshot/$parity/$dim")(
       Tables.load(s, dir, "documents")
         .filter(col("doc_id").cast("long") % 2 === parity)
         .select(
@@ -978,36 +929,19 @@ object SparkEntry {
           TextFunctions.mockEmbeddingCol(col("text"), dim).as("vector"))
         .localCheckpoint())
 
-  private val docsIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Bm25.Index]
-
   /** Standing BM25 index over the docs-as-chunks collection, built once
     * per sf dir (the ingestedSparseIndex discipline: stats pinned,
     * docWeights materialized off the query clock). */
   private def docsSparseIndex(s: SparkSession, dir: String): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "docsSparseIndex")(
       pinnedSparseIndex(docsAsChunksSnapshot(s, dir)))
-
-  private val standingRelCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Cache + materialize a standing relation ONCE per key, off the
-    * query clock — the serving-path discipline (VERDICT r11 #1): the
-    * reference keeps persistent per-collection index files
-    * (vecpipe/sparse.py) and serves every online request from them;
-    * re-deriving a corpus-sized relation inside a per-request plan is
-    * the anti-pattern these caches exist to kill. */
-  private def standingRel(key: String)(build: => DataFrame): DataFrame =
-    standingRelCache.getOrElseUpdate(key, {
-      val df = build.cache(); df.count(); df
-    })
 
   /** Standing raw postings (id, term, tf, doc_len) over the documents
     * table — the per-doc-local half of the persisted sparse index;
     * [[docsTextIndex]] and every filtered-collection search derive
     * their statistics from it without re-tokenizing. */
   private def docsPostings(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#posts")(
+    StandingArtifacts.relation(s, dir, "docsPostings")(
       Bm25.postings(t(s, dir, "documents"), "doc_id", "text"))
 
   /** Standing DISTINCT keep-stopword (id, tok) relation — the
@@ -1015,7 +949,7 @@ object SparkEntry {
     * (whose terms may be stopwords, so the scoring tokenizer's
     * stopword removal must not apply). */
   private def docsGateToks(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#gatetoks")(
+    StandingArtifacts.relation(s, dir, "docsGateToks")(
       t(s, dir, "documents").select(col("doc_id").as("id"),
           explode(TextFunctions.tokensCol(col("text"),
             removeStopwords = false)).as("tok"))
@@ -1025,7 +959,7 @@ object SparkEntry {
     * the positional half of the index (Lucene stores positions in the
     * postings for exactly this), behind phrase/proximity gates. */
   private def docsPosToks(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#postoks")(
+    StandingArtifacts.relation(s, dir, "docsPosToks")(
       t(s, dir, "documents").select(col("doc_id"),
         posexplode(TextFunctions.tokensCol(col("text"),
           removeStopwords = false)).as(Seq("pos", "tok"))))
@@ -1037,14 +971,14 @@ object SparkEntry {
     * index time beside the other sidecars; re-deriving it per
     * invocation was the suite's most expensive honest row). */
   private def docsRelatedPostings(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#relposts")(
+    StandingArtifacts.relation(s, dir, "docsRelatedPostings")(
       graft.operators.Dedup.relatedPostings(t(s, dir, "documents"),
         "doc_id", "text", n = 3, maxDf = 50L))
 
   /** Standing spell vocabulary (term, df) — the suggester's fit
     * artifact, shared by every spell/suggest/fallback query. */
   private def docsVocab(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#vocab")(
+    StandingArtifacts.relation(s, dir, "docsVocab")(
       graft.operators.Spell.vocabulary(t(s, dir, "documents"),
         "doc_id", "text"))
 
@@ -1057,7 +991,7 @@ object SparkEntry {
     * is pricing the read-back + refit path. */
   private def docsVocabVariants(s: SparkSession, dir: String,
       maxDist: Int): DataFrame =
-    standingRel(s"$dir#spellvx$maxDist")(
+    StandingArtifacts.relation(s, dir, s"docsVocabVariants/$maxDist")(
       graft.operators.Spell.vocabVariants(docsVocab(s, dir), maxDist))
 
   /** Standing BM25 index over the raw documents table (doc_id, text),
@@ -1067,7 +1001,7 @@ object SparkEntry {
     * index in-plan (the bm25_index_persist / parent-context
     * precedent). */
   private def docsTextIndex(s: SparkSession, dir: String): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(s"$dir#doctext",
+    StandingArtifacts(s, dir, "docsTextIndex")(
       Bm25.indexFromPostings(t(s, dir, "documents"), "doc_id",
         docsPostings(s, dir), pinStats = true).pin())
 
@@ -1082,8 +1016,9 @@ object SparkEntry {
   /** Persist the FOUR standing search artifacts — raw postings,
     * keep-stopword gate tokens, positional postings, spell vocabulary
     * — as parquet sidecars of a blue/green generation, once per
-    * session (VERDICT r12 #4). The session caches above make the
-    * serving layer fast; THIS makes it durable: the reference keeps
+    * session (VERDICT r12 #4). The session's standing relations above
+    * ([[StandingArtifacts]]) make the serving layer fast; THIS makes
+    * it durable: the reference keeps
     * persistent per-collection index files (vecpipe/sparse.py) that
     * survive a process restart, and the `*_index_persist` rows serve
     * from the READ-BACK files to prove the parquet round-trip is
@@ -1091,11 +1026,11 @@ object SparkEntry {
     * atomic pointer flip, so a crashed rewrite can never serve a
     * half-written index. */
   private def searchIdxRoot(s: SparkSession, dir: String): String =
-    stagedEventsCache.getOrElseUpdate(s"$dir#searchidx", {
+    StandingArtifacts(s, dir, "searchIdxRoot") {
       val r = tempDirCleanedOnExit("graft-searchidx").toString
       writeSearchSidecars(s, dir, r)
       r
-    })
+    }
 
   /** Write the four standing search sidecars to `root` — shared by
     * [[searchIdxRoot]] (session-temp generations) and the
@@ -1160,8 +1095,9 @@ object SparkEntry {
   }
 
   /** Persist the five tuned-loop FITS as on-disk sidecars (VERDICT
-    * r13 #2): the r13 standing fits are session TrieMaps — a restart
-    * refits everything — while the reference persists per-collection
+    * r13 #2): the standing fits live in the session's
+    * [[StandingArtifacts]] registry — a restart refits everything —
+    * while the reference persists per-collection
     * index params and artifacts across restarts
     * (shared/managers/qdrant_manager.py:57-66; vecpipe/sparse.py).
     * Three parquet sidecars ride [[Ingest.reindexSwapRaw]]'s atomic
@@ -1174,11 +1110,11 @@ object SparkEntry {
     * twins via shared oracles, the same durability proof the search
     * sidecars got in r13. */
   private def tunedFitRoot(s: SparkSession, dir: String): String =
-    stagedEventsCache.getOrElseUpdate(s"$dir#fitidx", {
+    StandingArtifacts(s, dir, "tunedFitRoot") {
       val r = tempDirCleanedOnExit("graft-fitidx").toString
       writeTunedFitSidecars(s, dir, r)
       r
-    })
+    }
 
   /** Write the three tuned-fit sidecars (picks, ivf_centroids,
     * pq_codebooks — covering all five tuned loops) to `root` — shared
@@ -1277,7 +1213,7 @@ object SparkEntry {
     * online search: from a persisted collection, not an in-plan
     * rebuild (the r11 verdict's one weak row). */
   private def collapseCorpus(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#collapse") {
+    StandingArtifacts.relation(s, dir, "collapseCorpus") {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val shadows = docs.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
@@ -1287,7 +1223,7 @@ object SparkEntry {
     }
 
   private def collapseIndex(s: SparkSession, dir: String): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(s"$dir#collapse",
+    StandingArtifacts(s, dir, "collapseIndex")(
       Bm25.buildIndex(collapseCorpus(s, dir), "doc_id", "text",
         pinStats = true).pin())
 
@@ -1301,7 +1237,7 @@ object SparkEntry {
     * shingle relation (measured: the 12M-row cache scan cost more
     * than the 50-doc explode it replaced). */
   private def collapseSigs(s: SparkSession, dir: String): DataFrame =
-    standingRel(s"$dir#collapsesigs")(
+    StandingArtifacts.relation(s, dir, "collapseSigs")(
       Dedup.minhashSignaturesFrom(
         Dedup.shingles(collapseCorpus(s, dir), "doc_id", "text", 3),
         16, Dedup.shaHashFamily))
@@ -1311,9 +1247,19 @@ object SparkEntry {
     * stats). */
   private def halfSparseIndex(s: SparkSession, dir: String,
       parity: Int): Bm25.Index =
-    docsIndexCache.getOrElseUpdate(s"$dir#half$parity",
+    StandingArtifacts(s, dir, s"halfSparseIndex/$parity")(
       pinnedSparseIndex(docsAsChunksSnapshot(s, dir)
         .filter(col("doc_id").cast("long") % 2 === parity)))
+
+  /** Per-stream state parallelism (one state store per shuffle
+    * partition per stateful operator per micro-batch): a deployment
+    * sizes this by state VOLUME; the staged fixtures' state is tiny,
+    * so a fixed 4 optimizes store-commit I/O, and it stays a constant
+    * (never a function of the host's core count) so a lower-core
+    * bench run measures the same stream layout. r14
+    * measured 8→4 at −10% on the join rows; the r15 A/B of 4 vs 2 is
+    * recorded in OPTIMIZATION_r15.md. */
+  private val StreamStateParts = "4"
 
   /** Run a streaming DataFrame to a memory sink and return the result
     * table: fresh checkpoint, dir-hashed view name, and state-store
@@ -1328,36 +1274,6 @@ object SparkEntry {
     * because the driver runs queries serially on this session; a
     * concurrent caller would need a cloned session (`s.newSession()`)
     * instead. */
-  /** Per-stream state parallelism (one state store per shuffle
-    * partition per stateful operator per micro-batch): a deployment
-    * sizes this by state VOLUME; the staged fixtures' state is tiny,
-    * so the local default optimizes store-commit I/O, and the knob
-    * stays an env parameter (never a function of the host's core
-    * count) so the driver's lower-core bench run measures the same
-    * stream layout. r14 measured 8→4 at −10% on the join rows; the
-    * r15 A/B of 4 vs 2 is recorded in OPTIMIZATION_r15.md. */
-  private val StreamStateParts =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-
-  /** State-store provider A/B knob (r16, VERDICT r15 #5): "rocksdb"
-    * swaps every staged stream's per-partition store for
-    * RocksDBStateStoreProvider; unset = Spark's default HDFS-backed
-    * store. The provider changes WHERE state lives, never what a
-    * stateful operator emits, so results are identical either way —
-    * the knob exists so the store-commit share of the streaming
-    * family's floor is measurable on any host (the driver never sets
-    * it; the measured pick is recorded in OPTIMIZATION_r16.md). */
-  private val StreamStateProvider: Option[String] =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").map {
-      case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider"
-      case other => other
-    }
-
-  private def applyStreamConfs(s: SparkSession): Unit =
-    StreamStateProvider.foreach(p =>
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-
   private def runStreamToTable(s: SparkSession, out: DataFrame,
       prefix: String, dir: String,
       outputMode: String = "append"): DataFrame = {
@@ -1366,7 +1282,6 @@ object SparkEntry {
     s.catalog.dropTempView(name)
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamStateParts)
-    applyStreamConfs(s)
     try {
       val q = out.writeStream.outputMode(outputMode).format("memory")
         .queryName(name).option("checkpointLocation", ck).start()
@@ -1380,14 +1295,9 @@ object SparkEntry {
     * earlier jobs' task tails; FIFO scheduling is exactly that
     * back-fill). Results return in submission order. The ONE shared
     * implementation of the r15 A4 pattern (cdc_reindex /
-    * compact_zorder / zorder_skipping), with the A/B measurement knob
-    * VERDICT r15 #3 asked for: SPARK_GRAFT_NO_OVERLAP=1 runs the same
-    * work sequentially on the caller's thread (the driver never sets
-    * it — it exists so the overlap's benefit is measurable in
-    * isolation on any host). */
+    * compact_zorder / zorder_skipping). */
   private def runOverlapped[T](work: Seq[() => T]): Seq[T] =
-    if (work.size <= 1 || sys.env.get("SPARK_GRAFT_NO_OVERLAP")
-        .contains("1")) work.map(_())
+    if (work.size <= 1) work.map(_())
     else {
       val pool = java.util.concurrent.Executors
         .newFixedThreadPool(work.size)
@@ -1437,9 +1347,6 @@ object SparkEntry {
         col("text")).cast("binary"))
       .select("mailbox", "uid", "uidvalidity", "content")
 
-  private val imapStagingCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** On-disk staged mailbox tree for the DSv2 connector query — the
     * SAME synthetic messages the in-plan imap_scan stages, written once
     * per sf dir as `{root}/{mailbox}/{uid}.eml`. The foreachPartition
@@ -1449,7 +1356,7 @@ object SparkEntry {
     * root would live on shared storage (and a real deployment reads an
     * actual IMAP server through the connector, staging nothing). */
   private def stagedImapRoot(s: SparkSession, dir: String): String =
-    imapStagingCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "stagedImapRoot") {
       val root = tempDirCleanedOnExit("graft-imap").toString
       Seq("INBOX" -> 7L, "Archive" -> 12L, "Reports" -> 5L).foreach {
         case (mb, uv) =>
@@ -1472,13 +1379,10 @@ object SparkEntry {
         }
       }
       root
-    })
+    }
 
   /** Merge-table size for the corpus-trained BPE tokenizer (A8). */
   private val BpeMergeCount = 40
-
-  private val bpeModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, Bpe.Trained]
 
   /** The standing BPE fit for the dir's corpus: the merge table is a
     * durable tokenizer artifact — train once per corpus, encode per
@@ -1487,7 +1391,7 @@ object SparkEntry {
     * so unlike the float fits there is no shared-literal risk: both
     * sides are integer/string-exact. */
   private def bpeModelFor(s: SparkSession, dir: String): Bpe.Trained =
-    bpeModelCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "bpeModel")(
       Bpe.train(Tables.load(s, dir, "documents"), BpeMergeCount,
         partitions = 1))
 
@@ -1497,12 +1401,12 @@ object SparkEntry {
     * encode) — the cl100k drop-in shape, where the merge table comes
     * from one corpus and the corpus being encoded is another. */
   private def bpeForeignModelFor(s: SparkSession, dir: String): Bpe.Trained =
-    bpeModelCache.getOrElseUpdate(dir + "#foreign", {
+    StandingArtifacts(s, dir, "bpeForeignModel") {
       val docs = Tables.load(s, dir, "documents")
       val sub = Bpe.train(docs.where(col("doc_id") % 3 === 0),
         BpeMergeCount, partitions = 1)
       Bpe.Trained(sub.merges, Bpe.mergeVocab(docs, sub.merges))
-    })
+    }
 
   /** Staged corpus for the quality classifier: the synthetic corpus
     * has no natural quality signal, so the "reference corpus" slices
@@ -1524,11 +1428,8 @@ object SparkEntry {
       (col("doc_id") % 10 === 0 || col("doc_id") % 10 === 5)
         .cast("double").as("y"))
 
-  private val qcModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, TextAnalysis.QualityClassifier]
-
   private def qcModelFor(s: SparkSession, dir: String): TextAnalysis.QualityClassifier =
-    qcModelCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "qcModel")(
       // BALANCED fit sample (all positives vs the same-sized %10==1
       // negative slice): with the full 9:1 imbalance the gradient is
       // dominated by the negative class, every weight goes negative,
@@ -1542,24 +1443,17 @@ object SparkEntry {
   private val QualityTunedGrid: Seq[Double] =
     Seq(0.3, 0.4, 0.5, 0.6, 0.7)
 
-  private val queryVecCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-
   /** The probe vector (vec_id = 0's embedding), shared by every
     * ANN query AND its oracle literal generation — one definition so
     * the two sides can never diverge. */
   private def queryVecFor(s: SparkSession, dir: String): Array[Double] =
-    queryVecCache.getOrElseUpdate(dir,
-      Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray)
+    queryVecNFor(s, dir, 0L)
 
   /** Arbitrary-id variant of [[queryVecFor]] (the ann_recall panel
-    * probes several query vectors); id 0 shares the original cache
-    * entry. */
+    * probes several query vectors). */
   private def queryVecNFor(s: SparkSession, dir: String,
       qid: Long): Array[Double] =
-    if (qid == 0L) queryVecFor(s, dir)
-    else queryVecCache.getOrElseUpdate(s"$dir#q$qid",
+    StandingArtifacts(s, dir, s"queryVec/$qid")(
       Tables.load(s, dir, "embeddings").filter(col("vec_id") === qid)
         .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray)
 
@@ -1588,20 +1482,14 @@ object SparkEntry {
   private val IvfTunedGrid: Seq[Int] = Seq(1, 2, 3, 4)
   private val IvfTunedNlist: Int = 8
 
-  private val int8FitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-
   private def int8ScalesFor(s: SparkSession, dir: String): Array[Double] =
-    int8FitCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "int8Scales")(
       graft.operators.Quant.fitInt8(
         Tables.load(s, dir, "embeddings"), "embedding", 64))
 
-  private val pcaFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Double], Array[Double], Array[Double])]
-
   private def pcaFitFor(s: SparkSession,
                         dir: String): (Array[Double], Array[Double], Array[Double]) =
-    pcaFitCache.getOrElseUpdate(dir,
+    StandingArtifacts(s, dir, "pcaFit")(
       graft.operators.Projection.fitPca(
         Tables.load(s, dir, "embeddings"), "embedding", 64,
         sampleLimit = 500, orderCol = Some("vec_id")))
@@ -1990,9 +1878,6 @@ object SparkEntry {
     (sh, sweep)
   }
 
-  private val lshFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-
   /** Standing per-dir LSH banding fit (VERDICT r12 #3): the sweep's
     * inputs are corpus-deterministic — same calibration corpus, same
     * hash family, same grid — so the banding selection is a FIT,
@@ -2008,10 +1893,10 @@ object SparkEntry {
     * invisible to the values. */
   private def lshSweepFit(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    lshFitCache.getOrElseUpdate(dir, {
+    StandingArtifacts(s, dir, "lshSweepFit") {
       val (sh, sweep) = lshSweep(s, dir)
       (sh, sweep.localCheckpoint())
-    })
+    }
 
   /** The dedup_tuned banding selection off the standing sweep — among
     * configs with recall >= 0.9 at the j>=0.5 truth line, the fewest
@@ -2670,14 +2555,14 @@ object SparkEntry {
     //      path a production deployment actually serves from ----
     "bm25_index_persist" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = stagedEventsCache.getOrElseUpdate(s"$dir#bm25idx", {
+      val root = StandingArtifacts(s, dir, "bm25_index_persist/root") {
         val r = tempDirCleanedOnExit("graft-bm25idx").toString
         val idx = Bm25.buildIndex(docs, "doc_id", "text")
         graft.search.Ingest.reindexSwapRaw(s, idx.stats, s"$r/stats")
         graft.search.Ingest.reindexSwapRaw(s, idx.docWeights,
           s"$r/weights")
         r
-      })
+      }
       val restored = Bm25.Index(
         stats = graft.search.Ingest.readCurrent(s, s"$root/stats")
           .coalesce(1).cache(),
@@ -4251,7 +4136,7 @@ object SparkEntry {
     "ann_index_persist" -> ((s, dir) => {
       lastDir = dir
       val e = t(s, dir, "embeddings")
-      val root = stagedEventsCache.getOrElseUpdate(s"$dir#annidx", {
+      val root = StandingArtifacts(s, dir, "ann_index_persist/root") {
         val r = tempDirCleanedOnExit("graft-annidx").toString
         val centroids = ivfBaseCentroidsFor(s, dir)
         import s.implicits._
@@ -4276,7 +4161,7 @@ object SparkEntry {
             .unionByName(newAssign),
           s"$r/assign")
         r
-      })
+      }
       val cents = graft.search.Ingest
         .readCurrent(s, s"$root/centroids")
         .orderBy("cid").collect()
@@ -4309,12 +4194,12 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       val centroids = ivfBaseCentroidsFor(s, dir)
       val arrivals = e.filter(col("vec_id") % 5 === 0)
-      val in = stagedEventsCache.getOrElseUpdate(s"$dir#annup", {
+      val in = StandingArtifacts(s, dir, "streaming_ann_upsert/batches") {
         stageOrderedBatches("graft-annup", Seq(
           arrivals.filter(col("vec_id") % 3 === 0),
           arrivals.filter(col("vec_id") % 3 === 1),
           arrivals.filter(col("vec_id") % 3 === 2)))
-      })
+      }
       val ckpt = java.nio.file.Files.createTempDirectory("graft-annupck")
         .resolve("ck").toString
       var assigns = Knn.ivfAssign(e.filter(col("vec_id") % 5 =!= 0),
@@ -4571,7 +4456,7 @@ object SparkEntry {
     //      the same values from the parquet ORIGINALS, so any encode/
     //      decode infidelity (escaping, unicode, nesting) hash-fails ----
     "jsonl_scan" -> ((s, dir) => {
-      val in = stagedEventsCache.getOrElseUpdate(s"$dir#jsonl", {
+      val in = StandingArtifacts(s, dir, "jsonl_scan/input") {
         val d = tempDirCleanedOnExit("graft-jsonl").resolve("in").toString
         t(s, dir, "documents")
           .select(col("doc_id"), col("text"),
@@ -4579,7 +4464,7 @@ object SparkEntry {
               .as("meta"))
           .coalesce(1).write.json(d)
         d
-      })
+      }
       s.read.schema("doc_id LONG, text STRING, " +
           "meta STRUCT<lang: STRING, n: INT>").json(in)
         .select(col("doc_id"), length(col("text")).as("text_len"),
@@ -4693,7 +4578,7 @@ object SparkEntry {
     //      table hits. Oracle derives the same split arithmetic from
     //      the originals ----
     "schema_evolution" -> ((s, dir) => {
-      val root = stagedEventsCache.getOrElseUpdate(s"$dir#evo", {
+      val root = StandingArtifacts(s, dir, "schema_evolution/root") {
         val d = tempDirCleanedOnExit("graft-evo").toString
         val docs = t(s, dir, "documents")
         docs.filter(col("doc_id") % 2 === 0)
@@ -4704,7 +4589,7 @@ object SparkEntry {
             length(col("text")).as("text_len"))
           .write.parquet(s"$d/batch=new")
         d
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(root)
         .groupBy("batch")
         .agg(count(lit(1)).as("n_docs"),
@@ -5934,13 +5819,14 @@ object SparkEntry {
       // the 3 staged batch files are a fixture (written once per sf
       // dir); the measured work is the stream run itself, which
       // executes fresh per call with a fresh checkpoint
-      val in = stagedEventsCache.getOrElseUpdate(s"$dir#t3in", {
+      val in = StandingArtifacts(s, dir,
+          "t3_incremental_stats_stream/batches") {
         val d = tempDirCleanedOnExit("graft-t3").resolve("in").toString
         for (b <- 0 until 3)
           docs.filter(col("doc_id") % 3 === b)
             .coalesce(1).write.mode("append").parquet(d)
         d
-      })
+      }
       val ckpt = java.nio.file.Files.createTempDirectory("graft-t3ck")
         .resolve("ck").toString
       var state = Sync.emptyBm25State(s)
@@ -5972,12 +5858,13 @@ object SparkEntry {
     //      the surviving corpus (t3_incremental_remove's, verbatim) ----
     "t3_incremental_remove_stream" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val in = stagedEventsCache.getOrElseUpdate(s"$dir#t3rm", {
+      val in = StandingArtifacts(s, dir,
+          "t3_incremental_remove_stream/batches") {
         stageOrderedBatches("graft-t3rm", Seq(
           docs.filter(col("doc_id") % 2 === 0).withColumn("op", lit("A")),
           docs.filter(col("doc_id") % 2 === 1).withColumn("op", lit("A")),
           docs.filter(col("doc_id") % 7 === 0).withColumn("op", lit("R"))))
-      })
+      }
       val schema = docs.withColumn("op", lit("A")).schema
       val ckpt = java.nio.file.Files.createTempDirectory("graft-t3rmck")
         .resolve("ck").toString
@@ -7501,7 +7388,6 @@ object SparkEntry {
           "ts_utc", horizonUs = 50L * 1000000L)
         val prevParts = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", StreamStateParts)
-        applyStreamConfs(s)
         try {
           val q = out.writeStream.outputMode("append").format("parquet")
             .option("path", outP.toString)
@@ -7731,7 +7617,7 @@ object SparkEntry {
       // the encoded GIFs are a fixture (memoized per sf dir, like the
       // staged mailbox trees); the measured work is the multi-frame
       // DECODE + sampling, which runs fresh per call
-      val staged = docsChunksCache.getOrElseUpdate(s"$dir#gifs",
+      val staged = StandingArtifacts(s, dir, "multimodal_real_frames/gifs")(
         Multimodal.SyntheticImages.stageGif(
           // repartition the ID INPUT, not the staged output: the
           // parquet scan arrives in 1-2 partitions at this size, and a
@@ -8016,7 +7902,7 @@ object SparkEntry {
         .select(lit("I").as("op"), col("source"),
           lit(null).cast("long").as("before_val"),
           (col("n_chars") * 2L).as("after_val"))
-      val in = stagedEventsCache.getOrElseUpdate(s"$dir#ivm",
+      val in = StandingArtifacts(s, dir, "streaming_ivm/batches")(
         stageOrderedBatches("graft-ivm", Seq(ins, upd, del)))
       val ckpt = java.nio.file.Files.createTempDirectory("graft-ivmck")
         .resolve("ck").toString
@@ -16058,9 +15944,8 @@ object SparkEntry {
         // base-fit centroids (the frozen quantizer), arrivals assigned
         // in — same probe algebra as ann_ivf over the union
         "ann_ivf_upsert" -> {
-          val cents = ivfFitCache.getOrElse(lastDir + "#base",
-            ivfBaseCentroidsFor(
-              org.apache.spark.sql.SparkSession.active, lastDir))
+          val cents = ivfBaseCentroidsFor(
+            org.apache.spark.sql.SparkSession.active, lastDir)
           val cvals = cents.zipWithIndex
             .map { case (c, i) => s"($i, ${sqlDoubleList(c)})" }
             .mkString(",\n    ")
@@ -16097,9 +15982,8 @@ object SparkEntry {
         // arrival-cells ⨝ standing-cells under the frozen BASE
         // quantizer literals; exact cosine verify
         "dedup_semantic_incremental" -> {
-          val cents = ivfFitCache.getOrElse(lastDir + "#base",
-            ivfBaseCentroidsFor(
-              org.apache.spark.sql.SparkSession.active, lastDir))
+          val cents = ivfBaseCentroidsFor(
+            org.apache.spark.sql.SparkSession.active, lastDir)
           val cvals = cents.zipWithIndex
             .map { case (c, i) => s"($i, ${sqlDoubleList(c)})" }
             .mkString(",\n    ")

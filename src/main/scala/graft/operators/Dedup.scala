@@ -706,7 +706,7 @@ object Dedup {
     // signatures) — pinning it would buy nothing
     val sh = shingles(df, idCol, textCol, n)
     val sigs = minhashSignaturesFrom(sh, numHashes, hashFamily)
-    val cands = pinPairs(minhashCandidates(sigs, numHashes, bands))
+    val cands = minhashCandidates(sigs, numHashes, bands)
     val txt = df.select(col(idCol).as("id"),
       substring(col(textCol), 1, prefixLen).as("t"))
     // banded DP: any dist that could still pass the filter satisfies
@@ -784,7 +784,9 @@ object Dedup {
     def blockVal(i: Int): Column =
       shiftrightunsigned(col("simhash"), i * blockBits).bitwiseAND(mask)
     val combos = (0 until numBlocks).combinations(numBlocks - maxDist).toSeq
-    val fp = simhash(df, idCol, textCol, bits, hashFamily).cache()
+    // read by both join sides: checkpoint, not cache — nothing is left
+    // in the session's cache
+    val fp = simhash(df, idCol, textCol, bits, hashFamily).localCheckpoint()
     val keyed = fp.select(col("id"), col("simhash"),
       posexplode(array(combos.map(combo =>
         concat_ws(",", combo.map(i => blockVal(i).cast("string")): _*)): _*)))
@@ -957,30 +959,16 @@ object Dedup {
     * id from `all` joined in (singletons form their own cluster), the
     * min-id member kept as the canonical survivor. Output:
     * (id, cluster_rep, cluster_size, is_kept). */
-  /** Compact the candidate-pair relation to the cluster's parallelism
-    * (never one partition) before caching — a pathological corpus can
-    * produce corpus-sized pair sets and a coalesce(1) would serialize
-    * them through a single task. Exposed for the scale spec. */
-  private[graft] def pinPairs(pairs: DataFrame): DataFrame = {
-    val parallelism =
-      math.max(1, pairs.sparkSession.sparkContext.defaultParallelism)
-    pairs.select("id_a", "id_b").coalesce(parallelism).cache()
-  }
-
   def resolveClusters(all: DataFrame, idCol: String,
                       pairs: DataFrame): DataFrame = {
-    // Pin the pairs so the (often deep) candidate pipeline runs once,
-    // not once per propagation round — but NOT to one partition: at
-    // pathological dup rates the pair relation is corpus-sized and a
-    // coalesce(1) would serialize it through a single task. Compact to
-    // the cluster's parallelism instead; the cache keeps it hot across
-    // propagation rounds either way.
-    val pinned = pinPairs(pairs)
+    // connectedComponents pins the (often deep) candidate pipeline
+    // itself, at the pairs' own partitioning, and releases the pin
+    // before returning.
     // No broadcast hint: labels are bounded by the ids in `pairs`, which
     // is usually tiny (AQE converts the join to broadcast at runtime)
     // but can be corpus-sized on a degenerate corpus, where a forced
     // broadcast would OOM the driver.
-    val labels = connectedComponents(pinned)
+    val labels = connectedComponents(pairs)
     val full = all.select(col(idCol).as("id")).distinct()
       .join(labels, Seq("id"), "left")
       .withColumn("cluster_rep", coalesce(col("rep"), col("id")))

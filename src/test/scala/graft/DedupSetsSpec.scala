@@ -210,5 +210,11 @@ class DedupSetsSpec extends SparkSpec {
       "doc_id", "text", corpus.filter(col("doc_id") < 100L), "doc_id",
       "text").collect()
     assert(cm.isEmpty, "decontaminateFuzzy")
+    Dedup.editDistanceNearDups(corpus, "doc_id", "text").collect()
+    assert(cm.isEmpty, "editDistanceNearDups")
+    Dedup.simhashNearDups(corpus, "doc_id", "text").collect()
+    assert(cm.isEmpty, "simhashNearDups")
+    Dedup.resolveClusters(corpus, "doc_id", pairs).collect()
+    assert(cm.isEmpty, "resolveClusters")
   }
 }
