@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the two as-of implementations (the ann_recall /
@@ -25,15 +25,7 @@ import org.apache.spark.sql.functions._
 object AsOfCrossover {
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(32))
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def frames(nKeys: Long): (DataFrame, DataFrame) = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at the driver-supplied
   * scale factor and prints ONE JSON line.
   *
@@ -24,7 +22,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val suiteT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     // WALL-BUDGET GUARD (VERDICT r15 #1b): the driver runs the bench in
     // a bounded window (r15's 8-core scaling run hit rc=124 — timed out,
     // zero scaling data). The bench must DEGRADE rather than die: when
@@ -36,23 +34,7 @@ object Bench {
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
       .map(_.toDouble).getOrElse(2700.0)
     def elapsedSec: Double = (System.nanoTime() - suiteT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing targets BYTES (parallelismFirst still floors at
-      // minPartitionSize=1m), but several pipelines do CPU-heavy work
-      // AFTER a shuffle whose payload is small — e.g. the shingle
-      // explode downstream of curation_pipeline's dedup window — and a
-      // few-MB shuffle coalesced to 1-3 partitions serializes that work
-      // on a 32-core host. 64k keeps small-shuffle stages parallel; at
-      // production scale partitions dwarf both floors and the setting
-      // is inert (it only LOWERS the merge floor, never splits).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(cpus)
     // session warm-up: scan + shuffle + codegen once before timing
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -281,7 +263,7 @@ object Bench {
     // proportionally slower clean probe — without the scale factor every
     // window of an 8-core run would read "dirty" and the retry phase
     // would burn its cap re-measuring clean rows.
-    val coreScale = 32.0 / math.max(1, cpus.toInt)
+    val coreScale = 32.0 / math.max(1, cpus)
     val FloorSha = 1.4 * coreScale
     val FloorShf = 0.55 * coreScale
     val gateSha = math.max(medSha, FloorSha) * 1.5

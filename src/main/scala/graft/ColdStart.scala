@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold-start serving measurement (VERDICT r13 #6): the
   * `*_index_persist` rows read back sidecars inside a WARM session —
   * a production restart also pays JVM + session + first-parquet-read
@@ -35,19 +33,7 @@ object ColdStart {
       .getRuntimeMXBean.getStartTime
     val mainEntryMs = System.currentTimeMillis() - jvmStart
     val t0 = System.nanoTime()
-    // honor SPARK_GRAFT_CPUS like Bench/Verify (ADVICE r14: a
-    // hardcoded local[32] silently measures a different parallelism
-    // than the bench it is compared against when cut on another host)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(32))
     val sessionSec = (System.nanoTime() - t0) / 1e9
     mode match {
       case "write" =>

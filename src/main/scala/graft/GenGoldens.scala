@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the committed projection goldens
   * (`src/main/resources/goldens/{sf}_{umap,tsne}_project.csv`): the
   * frozen 2-D fits the `umap_project` / `tsne_project` oracles compare
@@ -18,13 +16,8 @@ import org.apache.spark.sql.SparkSession
 object GenGoldens {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // not SPARK_GRAFT_CPUS: the committed goldens are fit at local[8]
+    val spark = GraftSession(8)
     Files.createDirectories(Paths.get(outDir))
     val sf = new java.io.File(sfDir).getName
     val fp = SparkEntry.projectionInputFingerprint(spark, sfDir)

@@ -1,191 +1,129 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-/** Scratch profiling main (not part of the driver contract): runs the
-  * queries named in PROF_QUERIES (comma-separated) N times each and
-  * prints per-run wall + stage/task counts, so once-per-dir standing
-  * builds are visible separately from the steady-state serve cost. */
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** Profiling and plan-capture main (a tool, not a declared query):
+  *
+  * {{{
+  * SPARK_GRAFT_SF_DIR=<sfDir> PROF_QUERIES=<q,...> PROF_RUNS=<n> \
+  *   PROF_EXPLAIN=<dir> sbt "runMain graft.Prof"
+  * }}}
+  *
+  * Runs each query in PROF_QUERIES (comma-separated; unset, every
+  * declared query, sorted) PROF_RUNS times (default 1) and prints one
+  * line per run: wall time, its build / optimize / execute split, and
+  * the jobs, stages, tasks and task time the run scheduled. Run 1 pays
+  * the once-per-dir standing builds, so later runs show the
+  * steady-state serve cost. Deep composite plans at small SF are
+  * stage-count-bound (~100-200 ms fixed cost per stage: codegen + AQE
+  * materialization + scheduling), so locally the stage count, not the
+  * task time, is what to optimize. Every stage over 500 ms prints its
+  * own `[stage]` line, and every streaming micro-batch a `[stream]`
+  * line with its duration attribution and state-operator metrics.
+  *
+  * PROF_EXPLAIN=<dir>: after a query's runs (standing artifacts built,
+  * so the plan is the steady-state serve plan), write its
+  * explain("formatted") to `<dir>/<name>.txt` — the before/after
+  * plan-identity channel that `tools/compare_plans.py` diffs.
+  *
+  * Exits 1 naming every query that failed. */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = sys.env.getOrElse("PROF_QUERIES", "search_collapse")
-      .split(',').toSeq
-    val runs = sys.env.getOrElse("PROF_RUNS", "4").toInt
-    // same parallelism contract as Bench/Verify/ColdStart so scratch
-    // numbers stay comparable to the channels they are judged against
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = sys.env.get("PROF_QUERIES")
+      .fold(SparkEntry.queries.keys.toSeq.sorted)(_.split(',').toSeq)
+    val runs = sys.env.getOrElse("PROF_RUNS", "1").toInt
+    val explainDir = sys.env.get("PROF_EXPLAIN")
+    val spark = GraftSession(GraftSession.cpus(32))
     spark.range(1000000).selectExpr("sum(id)").collect()
 
+    // written only by the listener bus thread
+    @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
-    @volatile var taskNanos = 0L
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages += 1
-          tasks += sc.stageInfo.numTasks
-          taskNanos += sc.stageInfo.taskMetrics.executorRunTime * 1000000L
-        }
-      })
+    @volatile var taskMs = 0L
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val info = s.stageInfo
+        val m = info.taskMetrics
+        stages += 1; tasks += info.numTasks; taskMs += m.executorRunTime
+        val ms = (for (a <- info.completionTime; b <- info.submissionTime)
+          yield a - b).getOrElse(0L)
+        if (ms > 500)
+          println(f"[stage] ${ms}%6dms tasks=${info.numTasks}%3d " +
+            f"run=${m.executorRunTime}%dms cpu=${m.executorCpuTime / 1000000}%dms " +
+            f"deser=${m.executorDeserializeTime}%dms " +
+            info.name.take(80) + " | rdds: " +
+            info.rddInfos.map(r => s"${r.name}@${r.scope.map(_.name).getOrElse("?")}")
+              .mkString(", ").take(300))
+      }
+    })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val dur = p.durationMs.asScala.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"$k=$v" }.mkString(" ")
+        val st = p.stateOperators.map(so =>
+          s"(rows=${so.numRowsTotal} updated=${so.numRowsUpdated} " +
+          s"commitMs=${so.allUpdatesTimeMs + so.allRemovalsTimeMs + so.commitTimeMs} " +
+          s"mem=${so.memoryUsedBytes})").mkString(" ")
+        println(s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
+          s"durMs{$dur} state$st")
+      }
+    })
 
-    def time[T](name: String)(f: => T): T = {
-      val s0 = stages; val k0 = tasks; val n0 = taskNanos
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(50) // let listener drain
-      println(f"[prof] $name%-34s $wall%.2fs  stages=${stages - s0} " +
-        f"tasks=${tasks - k0} taskTime=${(taskNanos - n0) / 1e9}%.2fs")
-      r
+    def run(name: String, i: Int): Unit = {
+      val (j0, s0, k0, ms0) = (jobs, stages, tasks, taskMs)
+      val t0 = System.nanoTime
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val t1 = System.nanoTime
+      df.queryExecution.executedPlan // force analysis + optimization
+      val t2 = System.nanoTime
+      val rows = df.count()
+      val t3 = System.nanoTime
+      Thread.sleep(100) // listener events arrive asynchronously
+      def ms(a: Long, b: Long) = (b - a) / 1e6
+      println(f"[prof] $name%-28s run$i ${(t3 - t0) / 1e9}%6.2fs " +
+        f"build=${ms(t0, t1)}%8.1fms optimize=${ms(t1, t2)}%8.1fms " +
+        f"exec=${ms(t2, t3)}%8.1fms rows=$rows%6d jobs=${jobs - j0} " +
+        f"stages=${stages - s0} tasks=${tasks - k0} " +
+        f"taskTime=${(taskMs - ms0) / 1e3}%.2fs")
     }
 
-    if (sys.env.get("PROF_COLLAPSE_BREAKDOWN").contains("1")) {
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Bm25, Dedup}
-      // replicate search_collapse's pieces with bench-like count()
-      // actions, twice (run 2 = steady state, standing caches warm)
-      for (pass <- 1 to 2) {
-        println(s"--- collapse pass $pass ---")
-        val full = SparkEntry.queries("search_collapse")
-        time("collapse full (count)") { full(spark, sfDir).count() }
-      }
-      val docs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"))
-      val shadows = docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + lit(1L << 41)).as("doc_id"),
-          concat(col("text"),
-            lit(" collapsed duplicate variant")).as("text"))
-      val corpus = docs.unionByName(shadows).cache()
-      time("corpus count") { corpus.count() }
-      val pinned = time("index build") {
-        Bm25.buildIndex(corpus, "doc_id", "text", pinStats = true).pin()
-      }
-      for (pass <- 1 to 3) {
-        println(s"--- piece pass $pass ---")
-        val top = time("searchTopK+ckpt") {
-          Bm25.searchTopK(corpus, "doc_id", "text",
-            "spark data table", 50, index = Some(pinned))
-          .select(col("id").as("doc_id"),
-            round(col("score"), 6).as("score"))
-          .localCheckpoint()
+    explainDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val failed = names.filterNot { name =>
+      try {
+        for (i <- 1 to runs) run(name, i)
+        explainDir.foreach { d =>
+          val plan = SparkEntry.queries(name)(spark, sfDir)
+            .queryExecution.explainString(FormattedMode)
+          Files.write(Paths.get(d, s"$name.txt"),
+            plan.getBytes(StandardCharsets.UTF_8))
         }
-        val candIds = broadcast(top.select(col("doc_id").as("id")))
-        val candDocs = corpus.join(
-          candIds.select(col("id").as("doc_id")), "doc_id")
-        val shCand = Dedup.shingles(candDocs, "doc_id", "text", 3)
-        time("shingles(cand) count") { shCand.count() }
-        val sigs = Dedup.minhashSignaturesFrom(
-          Dedup.shingles(corpus, "doc_id", "text", 3), 16,
-          Dedup.shaHashFamily).cache()
-        time("standing sigs count") { sigs.count() }
-        val pairs = time("neardups from sigs") {
-          val p = Dedup.minhashNearDupsFromSigs(shCand,
-            sigs.join(candIds, "id"), 16, 8, 0.5)
-            .select(col("id_a"), col("id_b"))
-          p.count(); p
-        }
-      }
-      spark.stop(); return
-    }
-    // r15 related_docs shape A/B, interleaved so host drift hits all
-    // variants equally: old string-keyed fresh plan vs sid-encoded
-    // fresh plan vs sid-encoded over a pinned standing postings
-    // relation.
-    if (sys.env.get("PROF_RELATED_BREAKDOWN").contains("1")) {
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Bm25, Dedup, TopK}
-      val docs = Tables.load(spark, sfDir, "documents")
-      def oldShape() = {
-        val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-        val nDocs = broadcast(docs.agg(count(lit(1)).as("__n")))
-        val dfRel = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") >= 2 && col("__df") <= 50)
-        val w = sh.join(dfRel, "shingle").crossJoin(nDocs)
-          .select(col("shingle"), col("id"),
-            log(col("__n").cast("double") / col("__df").cast("double"))
-              .as("__w"))
-        val scored = w.select(col("shingle"), col("id").as("id_a"),
-            col("__w"))
-          .join(w.select(col("shingle"), col("id").as("id_b")), "shingle")
-          .filter(col("id_a") =!= col("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(round(Bm25.sparseScore(col("__w"), col("shingle")), 6)
-            .as("score"))
-        TopK.perGroup(scored.select(col("id_a").cast("string").as("grp"),
-            col("id_b").cast("string").as("doc_id"),
-            col("id_b").cast("string").as("chunk_id"), col("score")),
-            "grp", 3)
-      }
-      val standing = Dedup.relatedPostings(docs, "doc_id", "text").cache()
-      time("standing w build") { standing.count() }
-      for (pass <- 1 to 3) {
-        println(s"--- related pass $pass ---")
-        time("old string fresh") { oldShape().count() }
-        time("new sid fresh") {
-          Dedup.relatedDocs(docs, "doc_id", "text").count() }
-        time("new sid standing") {
-          Dedup.relatedDocsFrom(standing, 3).count() }
-      }
-      spark.stop(); return
-    }
-
-    // PROF_STREAM_PROGRESS=1: attach a StreamingQueryListener that
-    // prints every micro-batch's durationMs attribution (addBatch /
-    // getBatch / queryPlanning / walCommit / commitOffsets / trigger)
-    // and state-operator metrics — the per-batch breakdown VERDICT r15
-    // #5 asks for on streaming_join_outer. Listeners are session-
-    // global, so the declared query runs unmodified.
-    if (sys.env.get("PROF_STREAM_PROGRESS").contains("1")) {
-      import org.apache.spark.sql.streaming.StreamingQueryListener
-      spark.streams.addListener(new StreamingQueryListener {
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          import scala.jdk.CollectionConverters._
-          val dur = p.durationMs.asScala.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString(" ")
-          val st = p.stateOperators.map(so =>
-            s"(rows=${so.numRowsTotal} updated=${so.numRowsUpdated} " +
-            s"commitMs=${so.allUpdatesTimeMs + so.allRemovalsTimeMs + so.commitTimeMs} " +
-            s"mem=${so.memoryUsedBytes})").mkString(" ")
-          println(s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durMs{$dur} state$st")
-        }
-      })
-    }
-
-    // PROF_EXPLAIN=<dir>: after the timed runs (standing caches warm,
-    // so the plan is the steady-state serve plan), write each query's
-    // explain("formatted") to <dir>/<name>.txt — the r15 plan-evidence
-    // channel (plans/r15/*_before.txt / *_after.txt).
-    val explainDir = sys.env.get("PROF_EXPLAIN")
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      for (i <- 1 to runs)
-        time(s"$name run$i") { fn(spark, sfDir).count() }
-      explainDir.foreach { d =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name.txt"),
-          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        true
+      } catch { case e: Throwable =>
+        println(s"[prof] $name FAILED: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[prof] ${failed.size} failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -252,29 +252,8 @@ object Bm25 {
     *   pin is the scale-right fix: the cached relation is
     *   vocabulary-sized, never corpus-sized. */
   def buildIndex(corpus: DataFrame, idCol: String, textCol: String,
-                 p: Params = Default, pinStats: Boolean = false): Index = {
-    // ONE tokenizing scan of the corpus: doc_len rides the explode as a
-    // constant-per-doc column through the tf aggregation, so docW needs
-    // no separate doc-lengths scan or join. (The tokenizer is evaluated
-    // twice inside the same narrow stage — size() and explode() — which
-    // beats a second full corpus read + shuffle join at any scale.)
-    // doc_len MUST be projected in its own select BELOW the explode:
-    // a generator is extracted into a Generate node and every OTHER
-    // expression in the same select is planned in a Project ABOVE it —
-    // which would re-run the full tokenizer once per exploded token
-    // (O(tokens²) per doc; measured 10× on bm25_topk). Split this way,
-    // the tokenizer runs twice per DOC (size + generator), both inside
-    // the narrow scan stage.
-    val tfRows = corpus
-      .select(col(idCol).as("id"),
-        size(TextFunctions.tokensCol(col(textCol))).as("doc_len"),
-        col(textCol).as("_text"))
-      .select(col("id"), col("doc_len"),
-        explode(TextFunctions.tokensCol(col("_text"))).as("term"))
-      .groupBy("id", "term")
-      .agg(count(lit(1)).as("tf"), max("doc_len").as("doc_len"))
-    indexFromTf(corpus, idCol, tfRows, p, pinStats)
-  }
+                 p: Params = Default, pinStats: Boolean = false): Index =
+    indexFromTf(corpus, idCol, postings(corpus, idCol, textCol), p, pinStats)
 
   /** Assemble an [[Index]] from a STANDING postings relation (the
     * [[postings]] schema `(id, term, tf, doc_len)`) instead of
@@ -321,18 +300,29 @@ object Bm25 {
       .unionByName(tfRows.select(lit(0L).as("_doc"), tokExpr.as("_tok")))
       .agg(coalesce(sum("_doc"), lit(0L)).as("n_docs"),
         coalesce(sum("_tok"), lit(0L)).as("_tot"))
-    val globals = broadcast(counts
-      .select(col("n_docs"),
-        when(col("n_docs") > 0,
-          col("_tot").cast("double") / col("n_docs").cast("double"))
-          .otherwise(lit(0.0)).as("avg_doc_len")))
     // df(term) = tf's row count per term — derives from tf's shuffle
     // instead of a second full-token countDistinct pass; map-side
     // combines to ≤|vocab| rows per partition. count(tf+0*doc_len)
     // ≡ count(1) (both non-null) but keeps the subplan reuse-identical
     // — see tokExpr above.
-    val statsRaw = tfRows.groupBy("term").agg(count(tokExpr).as("df"))
-      .crossJoin(globals)
+    indexFrom(tfRows, tfRows.groupBy("term").agg(count(tokExpr).as("df")),
+      counts, "_tot", p, pinStats)
+  }
+
+  /** The assembly both index sources share: broadcast globals
+    * `(n_docs, avg_doc_len)` from `counts`' `n_docs` and token total
+    * `totCol`, the `(term, df)` rows joined to them into the idf stats
+    * (pinned when `pinStats`, see [[buildIndex]]), and the doc weights
+    * of the `(id, term, tf, doc_len)` rows `tfRows`. */
+  private def indexFrom(tfRows: DataFrame, termDf: DataFrame,
+      counts: DataFrame, totCol: String, p: Params,
+      pinStats: Boolean): Index = {
+    val globals = broadcast(counts
+      .select(col("n_docs"),
+        when(col("n_docs") > 0,
+          col(totCol).cast("double") / col("n_docs").cast("double"))
+          .otherwise(lit(0.0)).as("avg_doc_len")))
+    val statsRaw = termDf.crossJoin(globals)
       .withColumn("idf", idfCol(col("df"), col("n_docs")))
     val stats = if (pinStats) statsRaw.coalesce(1).cache() else statsRaw
     val lengthNorm = when(col("avg_doc_len") > 0.0,
@@ -359,9 +349,21 @@ object Bm25 {
     * Σlen → idf/avgdl) lives in the additive stats state
     * ([[graft.streaming.Sync.mergeBm25Stats]] /
     * [[graft.streaming.Sync.removeBm25Stats]]); [[indexFromParts]]
-    * reassembles a queryable [[Index]] from the two. Same
-    * single-tokenize scan shape as [[buildIndex]]'s first stage. */
+    * reassembles a queryable [[Index]] from the two. It is
+    * [[buildIndex]]'s first stage. */
   def postings(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
+    // ONE tokenizing scan of the corpus: doc_len rides the explode as a
+    // constant-per-doc column through the tf aggregation, so docW needs
+    // no separate doc-lengths scan or join. (The tokenizer is evaluated
+    // twice inside the same narrow stage — size() and explode() — which
+    // beats a second full corpus read + shuffle join at any scale.)
+    // doc_len MUST be projected in its own select BELOW the explode:
+    // a generator is extracted into a Generate node and every OTHER
+    // expression in the same select is planned in a Project ABOVE it —
+    // which would re-run the full tokenizer once per exploded token
+    // (O(tokens²) per doc; measured 10× on bm25_topk). Split this way,
+    // the tokenizer runs twice per DOC (size + generator), both inside
+    // the narrow scan stage.
     corpus
       .select(col(idCol).as("id"),
         size(TextFunctions.tokensCol(col(textCol))).as("doc_len"),
@@ -382,26 +384,8 @@ object Bm25 {
     * rebuild, the property the cdc_reindex oracle replays. */
   def indexFromParts(posts: DataFrame, termStats: DataFrame,
                      globals: DataFrame, p: Params = Default,
-                     pinStats: Boolean = false): Index = {
-    val g = broadcast(globals.select(col("n_docs"),
-      when(col("n_docs") > 0,
-        col("total_doc_len").cast("double") / col("n_docs").cast("double"))
-        .otherwise(lit(0.0)).as("avg_doc_len")))
-    val statsRaw = termStats.crossJoin(g)
-      .withColumn("idf", idfCol(col("df"), col("n_docs")))
-    val stats = if (pinStats) statsRaw.coalesce(1).cache() else statsRaw
-    val lengthNorm = when(col("avg_doc_len") > 0.0,
-      lit(1.0 - p.b) + lit(p.b) * col("doc_len").cast("double") / col("avg_doc_len"))
-      .otherwise(lit(1.0))
-    val docW = posts
-      .join(stats, "term")
-      .withColumn("weight",
-        col("idf") * (col("tf").cast("double") * lit(p.k1 + 1.0)) /
-          (col("tf").cast("double") + lit(p.k1) * lengthNorm))
-      .filter(col("weight") > 0.0)
-      .select(col("id"), col("term"), col("tf"), col("weight"))
-    Index(stats, docW)
-  }
+                     pinStats: Boolean = false): Index =
+    indexFrom(posts, termStats, globals, "total_doc_len", p, pinStats)
 
   /** Sparse dot-product top-k — operator W2: (id, score) for the top-k
     * docs sharing a term with the query, ranked (score desc, id asc).

@@ -702,10 +702,14 @@ object Dedup {
                            threshold: Double = 0.5, prefixLen: Int = 256,
                            hashFamily: (Int, Column) => Column =
                              xxHashFamily): DataFrame = {
-    // the shingle relation has exactly ONE consumer here (the
-    // signatures) — pinning it would buy nothing
-    val sh = shingles(df, idCol, textCol, n)
-    val sigs = minhashSignaturesFrom(sh, numHashes, hashFamily)
+    // checkpointed: the band self-join reads the signatures twice,
+    // and each read would otherwise re-tokenize the corpus. From the
+    // exploded shingles, not [[shingleSets]]: nothing here reads the
+    // sets again, and the per-seed min() combines map-side to numHashes
+    // longs per doc where the set build shuffles every shingle
+    // (dedup_editdist at sf0.01: ~2x the task time over sets)
+    val sigs = minhashSignaturesFrom(shingles(df, idCol, textCol, n),
+      numHashes, hashFamily).localCheckpoint()
     val cands = minhashCandidates(sigs, numHashes, bands)
     val txt = df.select(col(idCol).as("id"),
       substring(col(textCol), 1, prefixLen).as("t"))

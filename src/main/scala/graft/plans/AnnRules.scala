@@ -85,8 +85,8 @@ case class AnnLshRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** Session-extension installer: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
+/** Session-extension installer: a session builder's
+  * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.plans.GraftExtensions`) registers the
   * vec_dot/vec_cosine SQL functions and the opt-in ANN rewrite. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

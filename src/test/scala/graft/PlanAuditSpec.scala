@@ -221,6 +221,41 @@ class PlanAuditSpec extends SparkSpec {
     assertSemiFiltersBroadcast(executed)
   }
 
+  test("editDistanceNearDups plans one tokenize pass per call") {
+    // the band self-join reads the signatures on both sides: built
+    // from an uncheckpointed shingle relation, each side plans the
+    // whole scan → tokenize → shuffle → aggregate chain, and only AQE's
+    // runtime exchange reuse (which can miss) keeps it from running
+    // twice. Count the passes as planned: the initial adaptive plan,
+    // which an adaptive plan prints below its final plan.
+    val docs = Tables.load(spark, dir, "documents")
+    val (_, executed) = executedPlans {
+      graft.operators.Dedup.editDistanceNearDups(docs, "doc_id", "text")
+        .collect()
+    }
+    val planned = executed.map(_.split("== Initial Plan ==").last)
+    val passes = planned.map("tokenize\\(".r.findAllIn(_).size).sum
+    assert(passes == 1, s"$passes tokenize passes:\n" +
+      planned.mkString("\n----\n"))
+  }
+
+  test("Prof writes each query's plan and exits 1 naming every failed " +
+      "query") {
+    // Prof stops its session and exits, so it runs in a child JVM
+    val explainDir = java.nio.file.Files.createTempDirectory("graft-prof")
+    val (code, log) = ChildJvm.run("graft.Prof", env = Map(
+      "SPARK_GRAFT_SF_DIR" -> dir,
+      "SPARK_GRAFT_CPUS" -> "2",
+      "PROF_QUERIES" -> "bm25_topk,no_such_query",
+      "PROF_EXPLAIN" -> explainDir.toString))
+    assert(code == 1, log.takeRight(4000))
+    assert(log.contains("no_such_query"), log.takeRight(4000))
+    val plan = explainDir.resolve("bm25_topk.txt")
+    assert(java.nio.file.Files.exists(plan), log.takeRight(4000))
+    assert(new String(java.nio.file.Files.readAllBytes(plan), "UTF-8")
+      .contains("== Physical Plan =="))
+  }
+
   /** `body`'s value and the executed physical plans of every query it
     * runs (eager checkpoint jobs included). Listener events arrive
     * asynchronously but in order, so a trailing marker query bounds

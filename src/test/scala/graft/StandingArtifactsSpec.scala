@@ -67,21 +67,9 @@ class StandingArtifactsSpec extends SparkSpec {
   }
 
   test("a new session rebuilds what a stopped session built") {
-    // a JVM holds one SparkContext at a time, so the stop-and-restart
-    // runs in a child JVM and the shared session is never stopped
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
-    val cmd = Seq(
-      java.nio.file.Paths.get(sys.props("java.home"), "bin", "java")
-        .toString) ++ jvmArgs ++ Seq("-Xmx1g",
-      "-cp", sys.props("java.class.path"),
-      "graft.StandingSessionProbe", corpusDir().toString)
-    val out = Files.createTempFile("graft-standing-probe", ".log").toFile
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(out).start()
-    assert(p.waitFor(5, TimeUnit.MINUTES), "probe JVM timed out")
-    val log = new String(Files.readAllBytes(out.toPath), "UTF-8")
-    assert(p.exitValue() == 0, log.takeRight(4000))
+    val (code, log) = ChildJvm.run("graft.StandingSessionProbe",
+      Seq(corpusDir().toString))
+    assert(code == 0, log.takeRight(4000))
     val counts = log.linesIterator.filter(_.startsWith("[probe] rows"))
       .map(_.split(' ').last.toLong).toSeq
     assert(counts.size == 2 && counts.head > 0 &&

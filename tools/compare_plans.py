@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Compare two ExplainTool plan dumps query by query.
+"""Compare two plan dumps (`graft.Prof` with PROF_EXPLAIN) query by query.
 
 Usage: python3 tools/compare_plans.py <dirA> <dirB>
 
 Each <name>.txt plan is normalized before comparing. These carry no
 meaning across runs, so they are replaced by fixed tokens: expression
-ids (`#123`, also in `id=#123`), `plan_id=` markers, the random digits
+ids (`#123`, also in `id=#123`), higher-order-function variable numbers
+(`lambda x_12`), `plan_id=` markers, the random digits
 that createTempDirectory appends to a `graft-...` prefix, blue/green
 generation numbers (`/gen-3`), JVM lambda class names and identity
 hash codes (`@1a2b3c`), RDD ids and the Scala source lines that created
@@ -24,6 +25,9 @@ SHOW = 6  # differing lines printed per query
 
 NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
+    # higher-order-function variables (`lambda x_12`) number from one
+    # JVM-wide counter, so they shift with every lambda built before
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     # createTempDirectory("graft-x") -> graft-x<random digits>
     (re.compile(r"(graft-[\w-]*[A-Za-z_-])\d+(?!\w)"), r"\1N"),
