@@ -1240,7 +1240,7 @@ object SparkEntry {
     StandingArtifacts.relation(s, dir, "collapseSigs")(
       Dedup.minhashSignaturesFrom(
         Dedup.shingles(collapseCorpus(s, dir), "doc_id", "text", 3),
-        16, Dedup.shaHashFamily))
+        16, Dedup.HashFamily.Sha256Slice))
 
   /** Standing per-collection indexes for the multi-collection twin
     * (each parity half is its own collection with its own corpus
@@ -1824,7 +1824,7 @@ object SparkEntry {
     * relation. */
   private def calibrationScored(sh: DataFrame, pairs: DataFrame)
       : DataFrame = {
-    val sig = Dedup.minhashSignaturesFrom(sh, 16, Dedup.shaHashFamily)
+    val sig = Dedup.minhashSignaturesFrom(sh, 16, Dedup.HashFamily.Sha256Slice)
     Dedup.ngramJaccardFrom(sh, pairs)
       .select(col("id_a"), col("id_b"), col("jaccard").as("j"))
       .join(sig.select(col("id").as("id_a"), col("signature").as("sa")),
@@ -3416,7 +3416,7 @@ object SparkEntry {
       Dedup.minhashNearDups(t(s, dir, "documents"),
           "doc_id", "text",
           n = 3, numHashes = 16, bands = 8, threshold = 0.2,
-          hashFamily = Dedup.shaHashFamily)
+          hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")
     }),
@@ -3445,7 +3445,7 @@ object SparkEntry {
         .unionByName(mutated)
       Dedup.minhashIncremental(incoming, history, "doc_id", "text",
           n = 3, numHashes = 16, bands = 8, threshold = 0.5,
-          hashFamily = Dedup.shaHashFamily)
+          hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(col("id_a"), col("id_b"),
           round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")
@@ -3458,7 +3458,7 @@ object SparkEntry {
       Dedup.editDistanceNearDups(graft.operators.Par.floor(
           t(s, dir, "documents")), "doc_id", "text",
           n = 3, numHashes = 16, bands = 8, threshold = 0.3,
-          prefixLen = 256, hashFamily = Dedup.shaHashFamily)
+          prefixLen = 256, hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(col("id_a"), col("id_b"), col("dist"),
           round(col("sim"), 6).as("sim"))
         .orderBy("id_a", "id_b")
@@ -3538,7 +3538,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
         n = 3, numHashes = 16, bands = 8, threshold = 0.2,
-        hashFamily = Dedup.shaHashFamily)
+        hashFamily = Dedup.HashFamily.Sha256Slice)
       Dedup.resolveClusters(docs, "doc_id", pairs)
         .select(col("id").as("doc_id"), col("cluster_rep"),
           col("cluster_size"), col("is_kept"))
@@ -3553,7 +3553,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
         n = 3, numHashes = 16, bands = 8, threshold = 0.2,
-        hashFamily = Dedup.shaHashFamily)
+        hashFamily = Dedup.HashFamily.Sha256Slice)
       Dedup.keepBestOfCluster(docs, "doc_id", "n_chars", pairs)
         .select(col("id").as("doc_id"), col("cluster_rep"),
           col("cluster_size"), col("quality").cast("long").as("n_chars"),
@@ -3570,7 +3570,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
         n = 3, numHashes = 16, bands = 8, threshold = 0.2,
-        hashFamily = Dedup.shaHashFamily)
+        hashFamily = Dedup.HashFamily.Sha256Slice)
       Dedup.resolveClusters(docs, "doc_id", pairs)
         .groupBy("cluster_size")
         .agg(count_distinct(col("cluster_rep")).as("n_clusters"),
@@ -3648,7 +3648,7 @@ object SparkEntry {
     "dedup_simhash" -> ((s, dir) => {
       Dedup.simhashNearDups(
           t(s, dir, "documents"), "doc_id", "text",
-          maxDist = 3, bits = 32, hashFamily = Dedup.shaHashFamily)
+          maxDist = 3, bits = 32, hashFamily = Dedup.HashFamily.Sha256Slice)
         .orderBy("id_a", "id_b")
     }),
 
@@ -4075,7 +4075,7 @@ object SparkEntry {
       val (b, r) = (picks("bands").toInt, picks("rows_per_band").toInt)
       Dedup.minhashNearDupsFrom(lshSweepFit(s, dir)._1, numHashes = 16,
           bands = b, threshold = 0.5,
-          hashFamily = Dedup.shaHashFamily)
+          hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(lit(b).as("bands"), lit(r).as("rows_per_band"),
           col("id_a"), col("id_b"),
           round(col("jaccard"), 6).as("jaccard"))
@@ -6016,7 +6016,7 @@ object SparkEntry {
 
     // ---- SPLADE-shaped sparse encoding (F12 activation shape) ----
     "splade_mock" -> ((s, dir) => {
-      graft.plugins.Providers.SpladeLikeMockIndexer(Dedup.shaHashFamily)
+      graft.plugins.Providers.SpladeLikeMockIndexer(Dedup.HashFamily.Sha256Slice)
         .encodeDocuments(t(s, dir, "documents"), "doc_id", "text")
         .select(col("id").cast("long").as("doc_id"), col("term"),
           round(col("weight"), 6).as("weight"))
@@ -6384,7 +6384,7 @@ object SparkEntry {
       // the tuned run REUSES the sweep's checkpointed shingles — the
       // corpus is tokenized once across sweep + selection + dedup
       Dedup.minhashNearDupsFrom(sh, numHashes = 16, bands = b,
-          threshold = 0.5, hashFamily = Dedup.shaHashFamily)
+          threshold = 0.5, hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(lit(b).as("bands"), lit(r).as("rows_per_band"),
           col("id_a"), col("id_b"),
           round(col("jaccard"), 6).as("jaccard"))
@@ -7239,7 +7239,7 @@ object SparkEntry {
       val evalSet = docs.filter(col("doc_id") % 10 === 0)
       Dedup.decontaminateFuzzy(train, "doc_id", "text",
           evalSet, "doc_id", "text", n = 3, numHashes = 16, bands = 8,
-          threshold = 0.2, hashFamily = Dedup.shaHashFamily)
+          threshold = 0.2, hashFamily = Dedup.HashFamily.Sha256Slice)
         .select(col("doc_id"))
         .orderBy("doc_id")
     }),

@@ -2,11 +2,17 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.operators.Dedup.HashFamily
 
 /** Single-pass tokenizer as a custom Catalyst expression.
   *
@@ -194,4 +200,306 @@ case class HexSliceToLong(child: Expression, offset: Int)
 
   override protected def withNewChildInternal(newChild: Expression): HexSliceToLong =
     copy(child = newChild)
+}
+
+/** Token n-grams of a token array — THE n-gram definition every
+  * shingle consumer reads ([[graft.operators.Dedup]]'s `gramsOf`):
+  * element i is tokens i..i+n-1 joined by one space, so a row of
+  * `len` tokens yields `len - n + 1` grams in token order, and a row
+  * shorter than `n` yields none. Null tokens are skipped in the join
+  * and a null array gives null, both as in the declarative
+  * `transform(sequence(0, size - n), i => array_join(slice(toks,
+  * i + 1, n), " "))` form it replaces, whose lambda ran interpreted
+  * (CodegenFallback) once per gram. */
+case class NGrams(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"n-gram length must be >= 1: $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+
+  def grams(toks: ArrayData): ArrayData = {
+    val len = toks.numElements()
+    if (len < n) return new GenericArrayData(Array.empty[AnyRef])
+    val t = new Array[UTF8String](len)
+    var i = 0
+    while (i < len) {
+      if (!toks.isNullAt(i)) t(i) = toks.getUTF8String(i)
+      i += 1
+    }
+    val out = new Array[AnyRef](len - n + 1)
+    i = 0
+    while (i < out.length) { out(i) = join(t, i); i += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** `array_join(t[from, from + n), " ")`: the non-null tokens, one
+    * space between each two. */
+  private def join(t: Array[UTF8String], from: Int): UTF8String = {
+    var bytes = 0
+    var parts = 0
+    var j = from
+    while (j < from + n) {
+      if (t(j) != null) { bytes += t(j).numBytes; parts += 1 }
+      j += 1
+    }
+    val buf = new Array[Byte](bytes + math.max(0, parts - 1))
+    var pos = 0
+    j = from
+    while (j < from + n) {
+      val s = t(j)
+      if (s != null) {
+        s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+        pos += s.numBytes
+        // bytes left over belong to later tokens and their separators
+        if (pos < buf.length) { buf(pos) = ' '; pos += 1 }
+      }
+      j += 1
+    }
+    UTF8String.fromBytes(buf)
+  }
+
+  override def nullSafeEval(input: Any): Any = grams(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("ngrams", this, classOf[NGrams].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.grams($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NGrams =
+    copy(child = newChild)
+}
+
+/** Generated code shared by the kernels below, whose result is never
+  * null: `$ref.$method(child)`, with a null child passed as Java null. */
+private[functions] object KernelCodegen {
+  def callNullTolerant(ctx: CodegenContext, ev: ExprCode, child: Expression,
+      ref: String, method: String, dataType: DataType): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $ref.$method(${c.isNull} ? null : ${c.value});
+      |""".stripMargin)
+  }
+}
+
+/** MinHash signature of one shingle-set row: for each seed s in
+  * `0 until numHashes`, the min over the set of `family(s, x)` —
+  * element s of `array(array_min(transform(set, x => family(s, x))),
+  * ...)`, the declarative form it replaces, which ran `numHashes`
+  * interpreted lambdas per row. Here one pass over the set computes
+  * every seed's hash of an element:
+  *
+  *  - xxhash64: `xxhash64(lit(s), x)` is XXH64(x) seeded with
+  *    XXH64(int s, 42), so the per-seed seeds are computed once and
+  *    each element costs `numHashes` [[XXH64]] passes over its bytes
+  *    (the calls the builtin's generated code makes); a null element
+  *    hashes to the seed itself, as the builtin skips nulls.
+  *  - sha256-slice: seed s reads bytes (s%8)·4 until +4 of
+  *    sha256("{s/8}:" || x) as an unsigned big-endian int — the 8 hex
+  *    chars at (s%8)·8 of the hex digest — so each element costs
+  *    ⌈numHashes/8⌉ digests; a null element hashes to null.
+  *
+  * A seed with no non-null hash (an empty set, or a null one) is a null
+  * element, as `array_min` of nothing is; the array itself is never
+  * null. */
+case class MinHashSignature(child: Expression, numHashes: Int,
+    family: HashFamily) extends UnaryExpression {
+  require(numHashes >= 1, s"numHashes must be >= 1: $numHashes")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+
+  @transient private lazy val xxSeeds: Array[Long] =
+    Array.tabulate(numHashes)(s => XXH64.hashInt(s, 42L))
+  @transient private lazy val shaPrefixes: Array[Array[Byte]] =
+    Array.tabulate((numHashes + 7) / 8)(g => s"$g:".getBytes("UTF-8"))
+  // one digest per task thread (the MockEmbed discipline)
+  @transient private lazy val digests: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() =>
+      java.security.MessageDigest.getInstance("SHA-256"))
+
+  def signature(set: ArrayData): ArrayData = {
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var seen = false
+    if (set != null) family match {
+      case HashFamily.XxHash64 => seen = xxMins(set, mins)
+      case HashFamily.Sha256Slice => seen = shaMins(set, mins)
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mins)
+    else new GenericArrayData(new Array[Any](numHashes))
+  }
+
+  private def xxMins(set: ArrayData, mins: Array[Long]): Boolean = {
+    val n = set.numElements()
+    var i = 0
+    while (i < n) {
+      val x = if (set.isNullAt(i)) null else set.getUTF8String(i)
+      var s = 0
+      while (s < numHashes) {
+        val h = if (x == null) xxSeeds(s) else XXH64.hashUTF8String(x, xxSeeds(s))
+        if (h < mins(s)) mins(s) = h
+        s += 1
+      }
+      i += 1
+    }
+    n > 0
+  }
+
+  private def shaMins(set: ArrayData, mins: Array[Long]): Boolean = {
+    val md = digests.get()
+    val digest = new Array[Byte](32)
+    var seen = false
+    val n = set.numElements()
+    var i = 0
+    while (i < n) {
+      if (!set.isNullAt(i)) {
+        seen = true
+        val x = set.getUTF8String(i)
+        var g = 0
+        while (g < shaPrefixes.length) {
+          md.reset()
+          md.update(shaPrefixes(g))
+          md.update(x.getByteBuffer)
+          md.digest(digest, 0, 32)
+          var s = g * 8
+          while (s < math.min(g * 8 + 8, numHashes)) {
+            val o = (s % 8) * 4
+            val h = ((digest(o) & 0xffL) << 24) | ((digest(o + 1) & 0xffL) << 16) |
+              ((digest(o + 2) & 0xffL) << 8) | (digest(o + 3) & 0xffL)
+            if (h < mins(s)) mins(s) = h
+            s += 1
+          }
+          g += 1
+        }
+      }
+      i += 1
+    }
+    seen
+  }
+
+  override def eval(input: InternalRow): Any =
+    signature(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("minhash", this, classOf[MinHashSignature].getName)
+    KernelCodegen.callNullTolerant(ctx, ev, child, ref, "signature", dataType)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : MinHashSignature = copy(child = newChild)
+}
+
+/** The nine raw per-document counts of the Gopher quality rules
+  * ([[graft.operators.TextAnalysis.gopherQuality]]) in one pass over
+  * the text, as one struct of longs:
+  *
+  *  - words: the nonempty pieces of `split(text, "\\s+")` — `n_words`,
+  *    `word_chars` (Σ `length`), `n_alpha_words` (containing an ASCII
+  *    letter, `rlike("[A-Za-z]")`), and `n_stop_hits` (the distinct
+  *    [[graft.operators.TextAnalysis.GopherStopWords]] among the
+  *    `lower`ed words);
+  *  - `n_hash` ('#' chars) and `n_ellipsis` ("..." occurrences, counted
+  *    left to right without overlap as `replace` removes them, plus
+  *    "…" occurrences);
+  *  - lines: the nonempty `trim`med pieces of `split(text, "\n")` —
+  *    `n_lines`, `n_bullet_lines` (first char •, - or *) and
+  *    `n_ellipsis_lines` (ending in "..." or "…").
+  *
+  * The pieces come from the routines the builtins call (UTF8String
+  * `split`, the binary-collation `trim` and `lower`, `numChars`), so
+  * the counts are those of the eight-lambda staged projection this
+  * replaces. A null text gives a struct of nulls. */
+case class GopherCounts(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = GopherCounts.Schema
+  override def nullable: Boolean = false
+
+  // read where the expression is built, as `lower` reads it
+  private val icuCaseMappings =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  def counts(text: UTF8String): InternalRow = {
+    import GopherCounts._
+    if (text == null) return new GenericInternalRow(Schema.size)
+    var nWords, wordChars, nAlpha = 0L
+    var stopMask = 0
+    for (w <- text.split(WordSplit, -1) if w.numBytes > 0) {
+      nWords += 1
+      wordChars += w.numChars
+      if (hasAsciiLetter(w)) nAlpha += 1
+      val stop = StopIndex.get(CollationSupport.Lower.exec(w,
+        CollationFactory.UTF8_BINARY_COLLATION_ID, icuCaseMappings))
+      if (stop != null) stopMask |= 1 << stop
+    }
+    var nLines, nBullet, nEllipsisLines = 0L
+    for (raw <- text.split(LineSplit, -1)) {
+      val l = CollationSupport.StringTrim.exec(raw)
+      if (l.numBytes > 0) {
+        nLines += 1
+        if (Bullets.exists(l.startsWith)) nBullet += 1
+        if (l.endsWith(Dots) || l.endsWith(Ellipsis)) nEllipsisLines += 1
+      }
+    }
+    val bytes = text.getBytes
+    new GenericInternalRow(Array[Any](nWords, wordChars,
+      count(bytes, Hash), count(bytes, Dots) + count(bytes, Ellipsis),
+      nBullet, nEllipsisLines, nLines, nAlpha,
+      java.lang.Integer.bitCount(stopMask).toLong))
+  }
+
+  override def eval(input: InternalRow): Any =
+    counts(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("gopher", this, classOf[GopherCounts].getName)
+    KernelCodegen.callNullTolerant(ctx, ev, child, ref, "counts", dataType)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
+    copy(child = newChild)
+}
+
+object GopherCounts {
+  val Schema: StructType = StructType(Seq("n_words", "word_chars", "n_hash",
+    "n_ellipsis", "n_bullet_lines", "n_ellipsis_lines", "n_lines",
+    "n_alpha_words", "n_stop_hits").map(StructField(_, LongType)))
+
+  private val WordSplit = UTF8String.fromString("\\s+")
+  private val LineSplit = UTF8String.fromString("\n")
+  private val Hash = UTF8String.fromString("#")
+  private val Dots = UTF8String.fromString("...")
+  private val Ellipsis = UTF8String.fromString("…")
+  private val Bullets = Seq("•", "-", "*").map(UTF8String.fromString)
+  private val StopIndex: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer]()
+    graft.operators.TextAnalysis.GopherStopWords.zipWithIndex
+      .foreach { case (w, i) => m.put(UTF8String.fromString(w), i) }
+    m
+  }
+
+  /** Occurrences of `pat` in the bytes `sb`, left to right without overlap — the
+    * matches `replace(s, pat, "")` removes. */
+  private def count(sb: Array[Byte], pat: UTF8String): Long = {
+    val pb = pat.getBytes
+    var n = 0L
+    var i = 0
+    while (i + pb.length <= sb.length) {
+      var j = 0
+      while (j < pb.length && sb(i + j) == pb(j)) j += 1
+      if (j == pb.length) { n += 1; i += pb.length } else i += 1
+    }
+    n
+  }
+
+  /** Any byte in [A-Za-z]: UTF-8 continuation and lead bytes are all
+    * ≥ 0x80, so this is `rlike("[A-Za-z]")` on the decoded text. */
+  private def hasAsciiLetter(w: UTF8String): Boolean = {
+    var i = 0
+    while (i < w.numBytes) {
+      val b = w.getByte(i)
+      if ((b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z')) return true
+      i += 1
+    }
+    false
+  }
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Custom Catalyst expressions for the vector-scoring hot path.
   *
@@ -131,6 +131,93 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
+}
+
+/** A centroid matrix as an expression field: compared by value (bit
+  * for bit, `java.util.Arrays.deepEquals`), so two fits with equal
+  * centroids canonicalize alike, and printed as its shape, so a plan
+  * string stays short at any k. */
+final class CentroidMatrix(val rows: Array[Array[Double]]) extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case m: CentroidMatrix => java.util.Arrays.deepEquals(
+      rows.asInstanceOf[Array[AnyRef]], m.rows.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override def hashCode: Int =
+    java.util.Arrays.deepHashCode(rows.asInstanceOf[Array[AnyRef]])
+  override def toString: String =
+    s"${rows.length} centroids, hash ${Integer.toHexString(hashCode)}"
+}
+
+/** The nearest centroid of a vector: the index of the largest dot
+  * product, ties to the lowest index — what
+  * `-greatest(struct(dot(v, c_i), -i) ...).negi`, the k-struct form it
+  * replaces, returns. Scores are [[DotProduct]]'s (Σ over the shorter
+  * length, in double) and compare as Spark orders doubles
+  * (`SQLOrderingUtil.compareDoubles`: NaN above every number, -0.0 equal
+  * to 0.0). A null vector scores null against every centroid, so, as
+  * with the struct form, it goes to centroid 0; the result is never
+  * null. The k-struct form's generated code grew with k and fell off
+  * whole-stage codegen near k = 200; this one is a loop at any k. */
+case class NearestCentroid(child: Expression, centroids: CentroidMatrix)
+    extends UnaryExpression {
+  require(centroids.rows.nonEmpty, "nearest centroid of no centroids")
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case t =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"expected an array<float|double> input, got ${t.simpleString}")
+  }
+
+  @transient private lazy val isFloat =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  def assign(vec: ArrayData): Int = {
+    if (vec == null) return 0
+    val x = new Array[Double](vec.numElements())
+    var j = 0
+    while (j < x.length) {
+      x(j) = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
+      j += 1
+    }
+    val rows = centroids.rows
+    var best = 0
+    var bestScore = dot(x, rows(0))
+    var i = 1
+    while (i < rows.length) {
+      val s = dot(x, rows(i))
+      if (SQLOrderingUtil.compareDoubles(s, bestScore) > 0) {
+        best = i; bestScore = s
+      }
+      i += 1
+    }
+    best
+  }
+
+  private def dot(x: Array[Double], c: Array[Double]): Double = {
+    val n = math.min(x.length, c.length)
+    var s = 0.0
+    var j = 0
+    while (j < n) { s += x(j) * c(j); j += 1 }
+    s
+  }
+
+  override def eval(input: InternalRow): Any =
+    assign(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearest", this, classOf[NearestCentroid].getName)
+    KernelCodegen.callNullTolerant(ctx, ev, child, ref, "assign", dataType)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : NearestCentroid = copy(child = newChild)
 }
 
 object VectorExpressions {

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.TextFunctions
+import graft.functions.{MinHashSignature, NGrams, TextFunctions}
 
 /** Corpus deduplication operators for large-scale training-data
   * pipelines: exact (content-hash), n-gram Jaccard, MinHash+LSH,
@@ -75,17 +76,13 @@ object Dedup {
       .drop("__h")
   }
 
-  /** Token n-grams of a materialized token-array attribute, one array
-    * per row. `toks` must be an ATTRIBUTE: inlining the tokenizer into
-    * the gram lambda would re-run the regex once per gram
-    * (O(tokens²)/doc). */
+  /** Token n-grams of a token array, one array per row: THE n-gram
+    * definition of every shingle, window and decontamination pass, the
+    * single-pass [[graft.functions.NGrams]] kernel (gram i = tokens
+    * i..i+n-1 joined by a space; docs shorter than `n` tokens give an
+    * empty array). */
   private def gramsOf(toks: Column, n: Int): Column =
-    // sequence(0, -1) would count DOWN; guard short docs with an
-    // explicit empty array instead
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
+    ColumnBridge.column(NGrams(ColumnBridge.expression(toks), n))
 
   private def tokenized(df: DataFrame, idCol: String, textCol: String)
       : DataFrame =
@@ -97,7 +94,8 @@ object Dedup {
     * EXPRESSION is exploded directly — exploding a projected gram
     * attribute instead lets InferFiltersFromGenerate add a
     * `size(grams) > 0` filter that is pushed below the projections with
-    * the tokenizer inlined into the gram lambda (measured 0.8 s → 20 s
+    * the tokenizer inlined into it, so each doc is tokenized twice (with
+    * the former per-gram lambda, once per gram: measured 0.8 s → 20 s
     * on the curate decontamination pass). */
   private def gramRows(df: DataFrame, idCol: String, textCol: String,
                        n: Int): DataFrame =
@@ -122,9 +120,9 @@ object Dedup {
     * where the exploded form needs a shuffle per consumer. Callers
     * reading it more than once (signatures, both verify sides)
     * localCheckpoint it, so the tokenize and set build run once; the
-    * checkpoint also keeps the set build a leaf under the 16 seed
-    * lambdas, which a projected (unfiltered) form let CollapseProject
-    * inline into every lambda (0.18 s → 10.1 s). */
+    * checkpoint also keeps the set build a leaf under the signature,
+    * which a projected (unfiltered) form let CollapseProject inline
+    * into each of the former 16 per-seed lambdas (0.18 s → 10.1 s). */
   def shingleSets(df: DataFrame, idCol: String, textCol: String,
                   n: Int): DataFrame =
     tokenized(df, idCol, textCol).groupBy("id")
@@ -299,7 +297,7 @@ object Dedup {
     * window starts. Complements [[dedupSpans]] (line-granularity
     * boilerplate) with arbitrary-position repeats.
     *
-    * Shape: window generation is a narrow per-doc array transform (no
+    * Shape: window generation is the per-doc n-gram kernel (no
     * self-join, no suffix array materialization); the corpus-wide
     * duplicate test is ONE groupBy on the window key; the island merge
     * is a per-doc window function. With `hashKey` (the scale default)
@@ -310,12 +308,6 @@ object Dedup {
     * vanishingly-rare extra candidates, asserted equal in DedupKnnSpec. */
   def duplicatedSubstrings(df: DataFrame, idCol: String, textCol: String,
                            k: Int = 8, hashKey: Boolean = true): DataFrame = {
-    val toksArr = col("_toks")
-    val winStruct = when(size(toksArr) < k,
-        array().cast("array<struct<ti:int,win:string>>"))
-      .otherwise(transform(sequence(lit(0), size(toksArr) - k),
-        i => struct(i.as("ti"),
-          array_join(slice(toksArr, i + 1, lit(k)), " ").as("win"))))
     // localCheckpoint, not cache(): two consumers (the duplicate
     // groupBy and the semi-join probe side) would otherwise re-run the
     // corpus-wide tokenize + window build, but a per-call cache is
@@ -323,12 +315,11 @@ object Dedup {
     // the session — the checkpoint's blocks are released by the
     // ContextCleaner once the plan is garbage-collected (the
     // semanticDedup discipline)
-    val wins = df.select(col(idCol).as("id"),
-        TextFunctions.tokensCol(col(textCol), removeStopwords = false)
-          .as("_toks"))
-      .select(col("id"), explode(winStruct).as("w"))
-      .select(col("id"), col("w.ti").as("ti"),
-        (if (hashKey) xxhash64(col("w.win")) else col("w.win")).as("wkey"))
+    val wins = tokenized(df, idCol, textCol)
+      .select(col("id"), posexplode(gramsOf(col("_toks"), k))
+        .as(Seq("ti", "win")))
+      .select(col("id"), col("ti"),
+        (if (hashKey) xxhash64(col("win")) else col("win")).as("wkey"))
       .localCheckpoint()
     val dup = wins.groupBy("wkey").agg(count(lit(1)).as("occ"))
       .filter(col("occ") > 1)
@@ -346,27 +337,38 @@ object Dedup {
       .drop("_island")
   }
 
-  /** Seeded hash families for MinHash/SimHash.
-    * - xxhash64: the scale default (cheapest; codegen'd)
-    * - sha-32-bit: slower but expressible in the DuckDB oracle
-    *   (('0x' || substr(sha256(seed || ':' || x), 1, 8))::UBIGINT),
-    *   so the full LSH pipeline can be hash-verified end-to-end */
-  def xxHashFamily(seed: Int, c: Column): Column = xxhash64(lit(seed), c)
+  /** A seeded hash family for MinHash and SimHash: `family(seed, x)`
+    * is hash number `seed` of `x` as a Column. A closed set, so the
+    * [[graft.functions.MinHashSignature]] kernel can compute every
+    * seed of a family in one pass over a set row. */
+  sealed trait HashFamily {
+    def apply(seed: Int, c: Column): Column
+  }
 
-  /** Seed s reads 8 hex chars at offset (s%8)·8 of sha256("{s/8}:" ||
-    * x): one digest yields EIGHT independent 32-bit hashes, so 16
-    * minhash seeds cost 2 sha256 evaluations per shingle (Spark's
-    * common-subexpression elimination computes each digest once). The
-    * hex slice parses through [[graft.functions.HexSliceToLong]] —
-    * bit-identical to `conv(substr, 16, 10)::long` (the form the DuckDB
-    * oracle uses) minus conv's radix string machinery, which was the
-    * dominant CPU of the minhash stages. */
-  def shaHashFamily(seed: Int, c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.HexSliceToLong(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          sha2(concat(lit(s"${seed / 8}:"), c).cast("binary"), 256)),
-        (seed % 8) * 8))
+  object HashFamily {
+    /** `xxhash64(seed, x)`: the scale default (cheapest). */
+    case object XxHash64 extends HashFamily {
+      def apply(seed: Int, c: Column): Column = xxhash64(lit(seed), c)
+    }
+
+    /** 32 bits of sha256: slower, but expressible in the DuckDB oracle
+      * (('0x' || substr(sha256(seed || ':' || x), 1, 8))::UBIGINT), so
+      * the full LSH pipeline can be hash-verified end to end. Seed s
+      * reads 8 hex chars at offset (s%8)·8 of sha256("{s/8}:" || x):
+      * one digest yields EIGHT independent 32-bit hashes, so 16 minhash
+      * seeds cost 2 sha256 evaluations per shingle (Spark's
+      * common-subexpression elimination computes each digest once). The
+      * hex slice parses through [[graft.functions.HexSliceToLong]] —
+      * bit-identical to `conv(substr, 16, 10)::long` (the form the
+      * DuckDB oracle uses) minus conv's radix string machinery. */
+    case object Sha256Slice extends HashFamily {
+      def apply(seed: Int, c: Column): Column =
+        ColumnBridge.column(graft.functions.HexSliceToLong(
+          ColumnBridge.expression(
+            sha2(concat(lit(s"${seed / 8}:"), c).cast("binary"), 256)),
+          (seed % 8) * 8))
+    }
+  }
 
   /** MinHash signature: for each of `numHashes` seeded hash functions,
     * the min over the doc's shingles of hash(seed, shingle).
@@ -379,8 +381,8 @@ object Dedup {
 
   /** [[minhashSignatures]] over a precomputed (id, shingle) relation. */
   def minhashSignaturesFrom(sh: DataFrame, numHashes: Int,
-                            hashFamily: (Int, Column) => Column =
-                              xxHashFamily): DataFrame = {
+                            hashFamily: HashFamily =
+                              HashFamily.XxHash64): DataFrame = {
     val hashed = sh.select(col("id"),
       array((0 until numHashes).map(s =>
         hashFamily(s, col("shingle"))): _*).as("hs"))
@@ -393,16 +395,17 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature"))
   }
 
-  /** [[minhashSignaturesFrom]] over a [[shingleSets]] relation: one
-    * `array_min(transform(shingles, x => hashFamily(seed, x)))` per seed,
-    * a narrow projection with no shuffle. Identical signatures to the
-    * exploded form (the min of the same hashes over the same set).
-    * Pass a checkpointed set relation (see [[shingleSets]]). */
+  /** [[minhashSignaturesFrom]] over a [[shingleSets]] relation: the
+    * [[graft.functions.MinHashSignature]] kernel, every seed's min in
+    * one pass over each set row — a narrow projection with no shuffle.
+    * Identical signatures to the exploded form (the min of the same
+    * hashes over the same set). Pass a checkpointed set relation (see
+    * [[shingleSets]]). */
   def minhashSignaturesFromSets(sets: DataFrame, numHashes: Int,
-                                hashFamily: (Int, Column) => Column =
-                                  xxHashFamily): DataFrame =
-    sets.select(col("id"), array((0 until numHashes).map(s =>
-      array_min(transform(col("shingles"), x => hashFamily(s, x)))): _*)
+                                hashFamily: HashFamily =
+                                  HashFamily.XxHash64): DataFrame =
+    sets.select(col("id"), ColumnBridge.column(MinHashSignature(
+      ColumnBridge.expression(col("shingles")), numHashes, hashFamily))
       .as("signature"))
 
   /** Banded LSH bucket keys for a signature relation: (id, band,
@@ -415,9 +418,9 @@ object Dedup {
     require(numHashes % bands == 0, s"numHashes $numHashes not divisible by $bands")
     val rows = numHashes / bands
     signatures.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => array_join(transform(slice(col("signature"), b * rows + 1, lit(rows)),
-          x => x.cast("string")), ","))))
+      posexplode(array((0 until bands).map(b => array_join(
+        slice(col("signature"), b * rows + 1, rows).cast("array<string>"),
+        ",")): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 
@@ -449,8 +452,8 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.8,
-                      hashFamily: (Int, Column) => Column =
-                        xxHashFamily): DataFrame = {
+                      hashFamily: HashFamily =
+                        HashFamily.XxHash64): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, n).localCheckpoint()
     val cands = pinCandidates(minhashCandidates(
       minhashSignaturesFromSets(sets, numHashes, hashFamily), numHashes,
@@ -468,8 +471,8 @@ object Dedup {
     * dedup. The caller owns the relation's persistence. */
   def minhashNearDupsFrom(sh: DataFrame, numHashes: Int, bands: Int,
                           threshold: Double,
-                          hashFamily: (Int, Column) => Column =
-                            xxHashFamily): DataFrame =
+                          hashFamily: HashFamily =
+                            HashFamily.XxHash64): DataFrame =
     minhashNearDupsFromSigs(sh,
       minhashSignaturesFrom(sh, numHashes, hashFamily), numHashes,
       bands, threshold)
@@ -660,7 +663,7 @@ object Dedup {
   def minhashIncremental(incoming: DataFrame, standing: DataFrame,
       idCol: String, textCol: String, n: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.8,
-      hashFamily: (Int, Column) => Column = xxHashFamily): DataFrame =
+      hashFamily: HashFamily = HashFamily.XxHash64): DataFrame =
     crossNearDups(shingleSets(incoming, idCol, textCol, n),
       shingleSets(standing, idCol, textCol, n), numHashes, bands,
       threshold, hashFamily)
@@ -673,7 +676,7 @@ object Dedup {
     * Output: (id_a from `a`, id_b from `b`, jaccard ≥ threshold). */
   private def crossNearDups(a: DataFrame, b: DataFrame, numHashes: Int,
       bands: Int, threshold: Double,
-      hashFamily: (Int, Column) => Column): DataFrame = {
+      hashFamily: HashFamily): DataFrame = {
     val (setsA, setsB) = (a.localCheckpoint(), b.localCheckpoint())
     def bandsOf(sets: DataFrame, id: String) = minhashBandKeys(
         minhashSignaturesFromSets(sets, numHashes, hashFamily),
@@ -700,8 +703,8 @@ object Dedup {
   def editDistanceNearDups(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                            threshold: Double = 0.5, prefixLen: Int = 256,
-                           hashFamily: (Int, Column) => Column =
-                             xxHashFamily): DataFrame = {
+                           hashFamily: HashFamily =
+                             HashFamily.XxHash64): DataFrame = {
     // checkpointed: the band self-join reads the signatures twice,
     // and each read would otherwise re-tokenize the corpus. From the
     // exploded shingles, not [[shingleSets]]: nothing here reads the
@@ -738,7 +741,7 @@ object Dedup {
     * 32-bit fingerprint that the DuckDB oracle reproduces. */
   def simhash(df: DataFrame, idCol: String, textCol: String,
               bits: Int = 64,
-              hashFamily: (Int, Column) => Column = xxHashFamily)
+              hashFamily: HashFamily = HashFamily.XxHash64)
       : DataFrame = {
     require(bits >= 4 && bits <= 64 && bits % 4 == 0)
     val toks = df.select(col(idCol).as("id"),
@@ -774,7 +777,7 @@ object Dedup {
     * Recall stays EXACT (pigeonhole covers every ≤ d pair). */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxDist: Int = 3, bits: Int = 64,
-                      hashFamily: (Int, Column) => Column = xxHashFamily,
+                      hashFamily: HashFamily = HashFamily.XxHash64,
                       numBlocks: Int = 4): DataFrame = {
     require(numBlocks > maxDist,
       s"need numBlocks ($numBlocks) > maxDist ($maxDist) for the pigeonhole")
@@ -1187,7 +1190,7 @@ object Dedup {
       trainText: String, evalDf: DataFrame, evalId: String,
       evalText: String, n: Int = 3, numHashes: Int = 16, bands: Int = 8,
       threshold: Double = 0.2,
-      hashFamily: (Int, Column) => Column = xxHashFamily): DataFrame = {
+      hashFamily: HashFamily = HashFamily.XxHash64): DataFrame = {
     val contaminatedIds = crossNearDups(
         shingleSets(train, trainId, trainText, n),
         shingleSets(evalDf, evalId, evalText, n), numHashes, bands,
@@ -1253,13 +1256,9 @@ object Dedup {
     // corpus-sized relation for the session; checkpoint blocks are
     // released by the ContextCleaner once the result is dropped (the
     // same lifetime pattern connectedComponents uses).
-    // ivfAssignAuto: the corpus-scaled quantizer can cross the
-    // k-struct codegen cliff (scale probe r12: ratio 24 at 10× via
-    // the struct-max form at k=79; relational assignment restored
-    // the linear profile)
-    val assigned = Knn.ivfAssignAuto(
+    val assigned = Knn.ivfAssign(
       vectors.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      "id", "vec", centroids).localCheckpoint()
+      "vec", centroids).localCheckpoint()
     val l = assigned.select(col("cluster_id"), col("id").as("id_a"),
       col("vec").as("vec_a"))
     val r = assigned.select(col("cluster_id"), col("id").as("id_b"),
@@ -1292,12 +1291,12 @@ object Dedup {
   def semanticDedupIncremental(incoming: DataFrame, standing: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Array[Double]],
       threshold: Double): DataFrame = {
-    val a = Knn.ivfAssignAuto(
+    val a = Knn.ivfAssign(
         incoming.select(col(idCol).as("id_a"), col(vecCol).as("vec_a")),
-        "id_a", "vec_a", centroids)
-    val b = Knn.ivfAssignAuto(
+        "vec_a", centroids)
+    val b = Knn.ivfAssign(
         standing.select(col(idCol).as("id_b"), col(vecCol).as("vec_b")),
-        "id_b", "vec_b", centroids)
+        "vec_b", centroids)
     a.join(b, Seq("cluster_id"))
       .withColumn("cosine",
         graft.functions.VectorFunctions.cosine(col("vec_a"), col("vec_b")))

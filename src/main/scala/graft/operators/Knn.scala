@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{TextFunctions, VectorFunctions => V}
+import graft.functions.{CentroidMatrix, NearestCentroid, TextFunctions,
+  VectorFunctions => V}
 
 /** Dense k-NN: exact brute-force cosine top-k (the correctness
   * baseline — operator W1) and a random-hyperplane LSH bucketed variant
@@ -119,7 +121,8 @@ object Knn {
     math.max(8, math.ceil(n / 256.0).toInt)
 
   /** Fit `k` coarse centroids with `iters` Lloyd steps. Assignment is
-    * a broadcast of k centroids against a narrow scan; the update step
+    * [[ivfAssign]] over a narrow scan (the centroids ride inside its
+    * expression, so no k-dependent plan); the update step
     * aggregates (cluster, dim) sums — k·dim rows to the driver, never
     * the data. */
   def ivfFit(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
@@ -141,11 +144,7 @@ object Knn {
       .orderBy(col(idCol)).limit(k)
       .select(col(vecCol)).collect().map(r => toDouble(r.getSeq[Any](0))).toSeq
     for (_ <- 0 until iters) {
-      val assigned =
-        if (centroids.size > RelationalAssignThreshold)
-          ivfAssignByKey(vectors, idCol, vecCol, centroids)
-        else ivfAssign(vectors, vecCol, centroids)
-      val sums = assigned
+      val sums = ivfAssign(vectors, vecCol, centroids)
         .select(col("cluster_id"), posexplode(col(vecCol)))
         .groupBy("cluster_id", "pos")
         .agg(sum(col("col").cast("double")).as("s"), count("*").as("n"))
@@ -204,7 +203,7 @@ object Knn {
       s"mutualTopK requires an integral id column; '$idCol' is " +
         vectors.schema(idCol).dataType.typeName)
     val base = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val assigned = ivfAssignAuto(base, "id", "vec", centroids)
+    val assigned = ivfAssign(base, "vec", centroids)
       .localCheckpoint() // two pair sides, one scan
     val l = assigned.select(col("cluster_id"), col("id").as("a"),
       col("vec").as("vec_a"))
@@ -234,64 +233,22 @@ object Knn {
         col("cosine"), col("rank_ab"), col("rank_ba"))
   }
 
-  /** Above this many centroids the assignment runs relationally: the
-    * k-struct `greatest` expression grows generated code linearly in k
-    * (k ≈ 200 measured as an interpreted-fallback cliff), where the
-    * exploded-centroid join keeps ONE codegen'd dot expression at any
-    * k. */
-  val RelationalAssignThreshold = 16
-
-  /** [[ivfAssign]] for LARGE centroid counts (requires a unique key
-    * column): centroids become a broadcast RELATION, each (vector,
-    * centroid) row scores one codegen'd dot, and the per-key
-    * max(struct(score, -cid)) replays ivfAssign's exact
-    * lowest-index-on-ties argmax — same values, scale-stable codegen.
-    * The k-fold row blowup stays map-side (broadcast join + partial
-    * max before the shuffle). */
-  def ivfAssignByKey(vectors: DataFrame, keyCol: String, vecCol: String,
-                     centroids: Seq[Array[Double]]): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val cents = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toDF("__cid", "__cvec")
-    vectors.crossJoin(broadcast(cents))
-      .groupBy(col(keyCol))
-      .agg(max(struct(V.dot(col(vecCol), col("__cvec")).as("s"),
-          (-col("__cid")).as("negi"))).as("__m"),
-        first(col(vecCol)).as(vecCol))
-      .select(col(keyCol), col(vecCol), (-col("__m.negi")).as("cluster_id"))
-  }
-
-  /** [[ivfAssign]] with automatic dispatch (r12 — the scale probe
-    * measured dedup_semantic at ratio 24 on 10× data because the
-    * corpus-scaled quantizer crossed the k-struct `greatest` codegen
-    * cliff while still assigning through the struct-max form):
-    * relational above [[RelationalAssignThreshold]] centroids,
-    * struct-max below. Identical values including the
-    * lowest-index-on-ties rule (the ivfAssignByKey equivalence
-    * property test covers both, duplicate centroids included).
-    * Requires a unique key column, which every corpus-scaled caller
-    * has. */
+  /** [[ivfAssign]], for callers of this name; `keyCol` is unused. */
   def ivfAssignAuto(vectors: DataFrame, keyCol: String, vecCol: String,
                     centroids: Seq[Array[Double]]): DataFrame =
-    if (centroids.size > RelationalAssignThreshold)
-      ivfAssignByKey(vectors, keyCol, vecCol, centroids)
-    else ivfAssign(vectors, vecCol, centroids)
+    ivfAssign(vectors, vecCol, centroids)
 
-  /** Tag every vector with its nearest centroid id (max dot — vectors
-    * and centroids need not be normalized identically since ranking by
-    * cosine within probes re-scores exactly). */
+  /** Tag every vector with its nearest centroid id (max dot, ties to
+    * the lowest id — vectors and centroids need not be normalized
+    * identically since ranking by cosine within probes re-scores
+    * exactly). One [[graft.functions.NearestCentroid]] kernel per row,
+    * the centroids a field of the expression: generated code of the
+    * same size at any k. */
   def ivfAssign(vectors: DataFrame, vecCol: String,
-                centroids: Seq[Array[Double]]): DataFrame = {
-    // argmax over k dots as a struct-max: (score, -index) picks the
-    // LOWEST index on ties, deterministically
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(V.dot(col(vecCol), array(c.toIndexedSeq.map(lit): _*)).as("s"),
-        lit(-i).as("negi"))
-    }
-    vectors.withColumn("cluster_id",
-      -greatest(scored: _*).getField("negi"))
-  }
+                centroids: Seq[Array[Double]]): DataFrame =
+    vectors.withColumn("cluster_id", ColumnBridge.column(NearestCentroid(
+      ColumnBridge.expression(col(vecCol)),
+      new CentroidMatrix(centroids.map(_.clone()).toArray))))
 
   /** The `nprobe` centroid ids nearest a query (max dot, ties to the
     * lowest id) — the coarse probe set for IVF and IVF-PQ. */

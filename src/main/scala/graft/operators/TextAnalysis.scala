@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.TextFunctions
+import graft.functions.{GopherCounts, TextFunctions}
 
 /** Text-analysis operators for training-data curation: language ID,
   * quality scoring, token counting, document fingerprinting.
@@ -911,58 +912,30 @@ object TextAnalysis {
     *  - alpha_word_ratio: words containing a letter ≥ 0.8
     *  - stop_hits: distinct hits among [[GopherStopWords]] ≥ 2
     *
-    * Map-only column arithmetic — no shuffle, no UDF; at 100 TB this is
-    * a pass-through filter at scan speed. Line ratios use trimmed
-    * nonempty lines; a document with no such lines passes both line
-    * rules (ratio 0). */
+    * Map-only — no shuffle, no UDF; at 100 TB this is a pass-through
+    * filter at scan speed. The raw counts are one pass of the
+    * [[graft.functions.GopherCounts]] kernel per row (which defines
+    * words, lines and each count); the ratios, roundings and flags stay
+    * column arithmetic. Line ratios use trimmed nonempty lines; a
+    * document with no such lines passes both line rules (ratio 0). */
   def gopherQuality(df: DataFrame, idCol: String, textCol: String,
                     minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
-    // Three staged projections so each array (the word split, the line
-    // split) and each count is computed ONCE per row: a single flat
-    // select would inline the split ~20x across the flag expressions,
-    // and CollapseProject will not re-merge stages whose aliases are
-    // multiply referenced and non-cheap.
-    val text = col(textCol)
-    val staged = df.select(col(idCol).as("id"), text.as("_text"),
-      filter(split(text, "\\s+"), w => length(w) > 0).as("_words"),
-      filter(transform(split(text, "\n", -1), l => trim(l)),
-        l => length(l) > 0).as("_lines"))
-    val t = col("_text")
-    val words = col("_words")
-    val lines = col("_lines")
-    val counted = staged.select(col("id"),
-      size(words).cast("double").as("_nw"),
-      aggregate(words, lit(0L), (acc, w) => acc + length(w))
-        .cast("double").as("_wlen"),
-      (length(t) - length(replace(t, lit("#"), lit("")))).cast("double")
-        .as("_nhash"),
-      ((length(t) - length(replace(t, lit("..."), lit("")))) / 3 +
-        (length(t) - length(replace(t, lit("…"), lit(""))))).cast("double")
-        .as("_nell"),
-      size(filter(lines, l => substring(l, 1, 1).isin("•", "-", "*")))
-        .cast("double").as("_nbullet"),
-      size(filter(lines, l =>
-        (length(l) >= 3 && substring(l, -3, 3) === "...") ||
-          substring(l, -1, 1) === "…")).cast("double").as("_nelines"),
-      size(lines).cast("double").as("_nlines"),
-      size(filter(words, w => w.rlike("[A-Za-z]"))).cast("double")
-        .as("_nalpha"),
-      // array_intersect evaluates the lowered-words child ONCE; a
-      // membership lambda over the stop-word array would re-run the
-      // lowercase transform per stop word (8x/row), and a separately
-      // staged alias gets inlined right back by CollapseProject
-      // (single static reference). Distinct-hit semantics unchanged.
-      size(array_intersect(array(GopherStopWords.map(lit): _*),
-        transform(words, lower(_)))).as("_nstop"))
-    val nWords = col("_nw")
+    // the nine raw counts come from ONE kernel evaluation per row: the
+    // generator keeps it a single call, where a projected struct's
+    // fields would each be inlined into the flags below and re-run it
+    val counted = df.select(col(idCol).as("id"),
+      inline(array(ColumnBridge.column(
+        GopherCounts(ColumnBridge.expression(col(textCol)))))))
+    def count(name: String) = col(name).cast("double")
+    val nWords = count("n_words")
     val safeWords = greatest(nWords, lit(1.0))
-    val meanLen = col("_wlen") / safeWords
-    val symbolRatio = (col("_nhash") + col("_nell")) / safeWords
-    val safeLines = greatest(col("_nlines"), lit(1.0))
-    val bulletRatio = col("_nbullet") / safeLines
-    val ellipsisRatio = col("_nelines") / safeLines
-    val alphaRatio = col("_nalpha") / safeWords
-    val stopHits = col("_nstop")
+    val meanLen = count("word_chars") / safeWords
+    val symbolRatio = (count("n_hash") + count("n_ellipsis")) / safeWords
+    val safeLines = greatest(count("n_lines"), lit(1.0))
+    val bulletRatio = count("n_bullet_lines") / safeLines
+    val ellipsisRatio = count("n_ellipsis_lines") / safeLines
+    val alphaRatio = count("n_alpha_words") / safeWords
+    val stopHits = col("n_stop_hits")
     val passWords = nWords >= minWords && nWords <= maxWords
     val passMeanLen = meanLen >= 3.0 && meanLen <= 10.0
     val passSymbol = symbolRatio <= 0.1
@@ -971,13 +944,13 @@ object TextAnalysis {
     val passAlpha = alphaRatio >= 0.8
     val passStop = stopHits >= 2
     counted.select(col("id"),
-      nWords.cast("long").as("n_words"),
+      col("n_words"),
       round(meanLen, 6).as("mean_word_len"),
       round(symbolRatio, 6).as("symbol_ratio"),
       round(bulletRatio, 6).as("bullet_line_ratio"),
       round(ellipsisRatio, 6).as("ellipsis_line_ratio"),
       round(alphaRatio, 6).as("alpha_word_ratio"),
-      stopHits.cast("long").as("stop_hits"),
+      stopHits.as("stop_hits"),
       passWords.as("pass_word_count"),
       passMeanLen.as("pass_mean_word_len"),
       passSymbol.as("pass_symbol_ratio"),
@@ -1061,7 +1034,7 @@ object TextAnalysis {
       posexplode(TextFunctions.tokensCol(col(textCol),
         removeStopwords = false)).as(Seq("pos", "tok")))
     val anchored = toks.withColumn("anchor",
-      Dedup.shaHashFamily(0, concat(col("id").cast("string"), lit(":"),
+      Dedup.HashFamily.Sha256Slice(0, concat(col("id").cast("string"), lit(":"),
         col("pos").cast("string"))) % every === 0)
     val masked = anchored.withColumn("masked",
       (0 until span).map(d =>

@@ -39,7 +39,8 @@ import org.apache.spark.sql.types.LongType
   * timeline in one task (the documented [[graft.operators.AsOf]]
   * posture; the bucketed variant spreads it when that bites).
   *
-  * Measured (r9, `graft.AsOfCrossover`, 2M×2M rows, local[32],
+  * Measured (r9, a since-retired crossover main whose run is recorded
+  * in NOTES_r09.md, 2M×2M rows, local[32],
   * min-of-3 with a payload-CONSUMING action — a bare count() lets
   * Catalyst prune the window node out of the union-window plan and
   * times a plan that never computes the match, which is how r8's

@@ -63,8 +63,8 @@ object Providers {
     * (splade_indexer.py:292-344) with max-pooling over repeated terms,
     * no model. Real SPLADE replaces only `logit`. */
   final case class SpladeLikeMockIndexer(
-      hashFamily: (Int, Column) => Column =
-        graft.operators.Dedup.xxHashFamily) extends SparseIndexer {
+      hashFamily: graft.operators.Dedup.HashFamily =
+        graft.operators.Dedup.HashFamily.XxHash64) extends SparseIndexer {
     private def weightCol(term: Column): Column = {
       // logit in [-1, 3): hash-derived, deterministic
       val logit = (pmod(hashFamily(0, term), lit(4096L)).cast("double") /

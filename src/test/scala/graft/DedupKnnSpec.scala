@@ -250,25 +250,6 @@ class DedupKnnSpec extends SparkSpec {
     assert(got((1L, 2L)) == ((1, 1)) && got((3L, 4L)) == ((1, 1)))
   }
 
-  test("ivfAssignByKey (the large-k relational argmax) assigns " +
-      "identically to the expression-form ivfAssign, including the " +
-      "lowest-index tie rule") {
-    val rnd = new scala.util.Random(11)
-    val vecs = (0 until 60).map(i =>
-      (i.toLong, Array.fill(4)(rnd.nextGaussian().toFloat)))
-      .toDF("id", "vec")
-    // 20 centroids (> threshold), including a duplicate pair so the
-    // tie rule is exercised
-    val cents = (0 until 19).map(_ =>
-      Array.fill(4)(rnd.nextGaussian())) :+ Array.fill(4)(0.0)
-    val tied = cents.updated(7, cents(3)) // centroid 7 == centroid 3
-    val expr = Knn.ivfAssign(vecs, "vec", tied)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val rel = Knn.ivfAssignByKey(vecs, "id", "vec", tied)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(rel == expr, s"rel=$rel expr=$expr")
-  }
-
   test("indexStats reports the exact corpus/vocab arithmetic") {
     import graft.operators.Maintenance
     val docs = Seq(

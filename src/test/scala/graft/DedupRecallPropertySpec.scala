@@ -82,7 +82,7 @@ class DedupRecallPropertySpec extends SparkSpec {
           id -> rs.map(_.getString(1)).toSet
         }
       val sigs = Dedup.minhashSignaturesFrom(sh, numHashes,
-        Dedup.shaHashFamily)
+        Dedup.HashFamily.Sha256Slice)
       val cands = Dedup.minhashCandidates(sigs, numHashes, bands)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // planted pairs (2i, 2i+1) with their true shingle Jaccard

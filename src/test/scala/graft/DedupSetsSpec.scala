@@ -46,7 +46,7 @@ class DedupSetsSpec extends SparkSpec {
   // ---- the exploded-row reference ----
 
   private def refSignatures(sh: DataFrame, numHashes: Int,
-      hashFamily: (Int, Column) => Column): DataFrame = {
+      hashFamily: Dedup.HashFamily): DataFrame = {
     val hashed = sh.select(col("id"),
       array((0 until numHashes).map(s =>
         hashFamily(s, col("shingle"))): _*).as("hs"))
@@ -93,14 +93,14 @@ class DedupSetsSpec extends SparkSpec {
 
   test("reference corpus yields candidates and verified pairs") {
     val ref = refNearDups(sh3(corpus),
-      refSignatures(sh3(corpus), 16, Dedup.xxHashFamily), 16, 8, 0.5)
+      refSignatures(sh3(corpus), 16, Dedup.HashFamily.XxHash64), 16, 8, 0.5)
     assert(ref.count() >= 15, rows(ref))
   }
 
   test("minhashNearDups equals the exploded-row reference under both " +
       "hash families") {
-    for ((name, hf) <- Seq("xxhash" -> (Dedup.xxHashFamily _),
-        "sha" -> (Dedup.shaHashFamily _));
+    for ((name, hf) <- Seq("xxhash" -> (Dedup.HashFamily.XxHash64),
+        "sha" -> (Dedup.HashFamily.Sha256Slice));
         (bands, threshold) <- Seq((8, 0.2), (4, 0.5))) {
       val got = Dedup.minhashNearDups(corpus, "doc_id", "text", n = 3,
         numHashes = 16, bands = bands, threshold = threshold,
@@ -113,7 +113,7 @@ class DedupSetsSpec extends SparkSpec {
   }
 
   test("set-form signatures equal the per-seed min() aggregate") {
-    for (hf <- Seq(Dedup.xxHashFamily _, Dedup.shaHashFamily _)) {
+    for (hf <- Seq(Dedup.HashFamily.XxHash64, Dedup.HashFamily.Sha256Slice)) {
       val got = Dedup.minhashSignaturesFromSets(
         Dedup.shingleSets(corpus, "doc_id", "text", 3).localCheckpoint(),
         16, hf)
@@ -134,10 +134,10 @@ class DedupSetsSpec extends SparkSpec {
   test("minhashNearDupsFrom, minhashNearDupsFromSigs and ngramJaccard " +
       "equal the exploded-row reference") {
     val sh = sh3(corpus).localCheckpoint()
-    val sigs = refSignatures(sh, 16, Dedup.shaHashFamily).localCheckpoint()
+    val sigs = refSignatures(sh, 16, Dedup.HashFamily.Sha256Slice).localCheckpoint()
     val want = rows(refNearDups(sh, sigs, 16, 8, 0.3))
     assert(rows(Dedup.minhashNearDupsFrom(sh, 16, 8, 0.3,
-      Dedup.shaHashFamily)) == want)
+      Dedup.HashFamily.Sha256Slice)) == want)
     assert(rows(Dedup.minhashNearDupsFromSigs(sh, sigs, 16, 8, 0.3)) == want)
     // every id pairs with its successors up to +3 and a near copy, plus
     // pairs naming a doc without shingles (dropped on both sides)
@@ -157,10 +157,10 @@ class DedupSetsSpec extends SparkSpec {
     val incoming = corpus.filter(col("doc_id") >= 100L)
     val got = Dedup.minhashIncremental(incoming, history, "doc_id", "text",
       n = 3, numHashes = 16, bands = 8, threshold = 0.3,
-      hashFamily = Dedup.shaHashFamily)
+      hashFamily = Dedup.HashFamily.Sha256Slice)
     val (shIn, shOld) = (sh3(incoming), sh3(history))
     def keyed(sh: DataFrame, id: String) = Dedup.minhashBandKeys(
-        refSignatures(sh, 16, Dedup.shaHashFamily), 16, 8)
+        refSignatures(sh, 16, Dedup.HashFamily.Sha256Slice), 16, 8)
       .select(col("band"), col("band_hash"), col("id").as(id))
     val cands = keyed(shIn, "id_a").join(keyed(shOld, "id_b"),
       Seq("band", "band_hash")).select("id_a", "id_b").distinct()

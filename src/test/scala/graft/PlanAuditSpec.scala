@@ -257,32 +257,41 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** `body`'s value and the executed physical plans of every query it
-    * runs (eager checkpoint jobs included). Listener events arrive
-    * asynchronously but in order, so a trailing marker query bounds
-    * the wait. */
+    * runs (eager checkpoint jobs included). */
   private def executedPlans[T](body: => T): (T, Seq[String]) = {
-    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (value, qes) = queryExecutions(body)
+    (value, qes.map(_.executedPlan.toString))
+  }
+
+  /** `body`'s value and the QueryExecution of every query it runs.
+    * Listener events arrive asynchronously but in order, so a trailing
+    * marker query bounds the wait. */
+  private def queryExecutions[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    val captured = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.execution.QueryExecution]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           d: Long): Unit =
-        captured.synchronized { captured += qe.executedPlan.toString }
+        captured.synchronized { captured += qe }
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
     val marker = "plan_audit_marker"
-    def plans() = captured.synchronized { captured.toSeq }
+    def isMarker(qe: org.apache.spark.sql.execution.QueryExecution) =
+      qe.analyzed.output.exists(_.name == marker)
+    def seen() = captured.synchronized { captured.toSeq }
     spark.listenerManager.register(listener)
     try {
       val value = body
       spark.range(1).select(lit(marker).as(marker)).collect()
       val deadline = System.nanoTime() + 30_000_000_000L
-      while (!plans().exists(_.contains(marker)) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(plans().exists(_.contains(marker)),
-        "query listener events did not arrive")
-      (value, plans().filterNot(_.contains(marker)))
+      while (!seen().exists(isMarker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(seen().exists(isMarker), "query listener events did not arrive")
+      (value, seen().filterNot(isMarker))
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -333,6 +342,47 @@ class PlanAuditSpec extends SparkSpec {
     assert(offending.isEmpty, s"tokenize inside a lambda in: $offending")
   }
 
+  test("curate's per-row work plans as kernels: no lambda, each kernel " +
+      "once per producing node") {
+    // interpreted lambdas (transform/filter/aggregate are
+    // CodegenFallback) also take their whole projection out of
+    // whole-stage codegen; the kernels must also not be duplicated into
+    // several expressions of one node (a collapsed projection re-runs
+    // them per reference). Audits every optimized plan a call runs,
+    // checkpoint jobs included.
+    import graft.operators.{Dedup, Knn}
+    val docs = Tables.load(spark, dir, "documents")
+    val evalDf = docs.filter(col("doc_id") % 50 === 0)
+    val emb = Tables.load(spark, dir, "embeddings")
+    val cases = Seq(
+      ("minhashNearDups", Set("NGrams", "MinHashSignature"), () =>
+        Dedup.minhashNearDups(docs, "doc_id", "text").collect()),
+      ("decontaminateRows", Set("NGrams"), () =>
+        Dedup.decontaminateRows(docs, "doc_id", "text", evalDf, "doc_id",
+          "text", 8).collect()),
+      ("ivfFit", Set("NearestCentroid"), () =>
+        Knn.ivfFit(emb, "vec_id", "embedding", 64, 20, iters = 1)),
+      ("gopher_quality", Set("GopherCounts"), () =>
+        SparkEntry.queries("gopher_quality")(spark, dir).collect()))
+    for ((name, kernels, run) <- cases) {
+      val plans = queryExecutions(run())._2.map(_.optimizedPlan)
+      val lambdas = plans.flatMap(p => allExpressions(p).flatMap(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l
+      }))
+      assert(lambdas.isEmpty, s"$name plans a lambda:\n" +
+        plans.mkString("\n----\n"))
+      val perNode = plans.flatMap(_.collect { case node =>
+        node.expressions.flatMap(_.collect {
+          case e if kernels(e.nodeName) => e.nodeName
+        })
+      }).filter(_.nonEmpty)
+      assert(perNode.flatten.toSet == kernels, s"$name: $perNode")
+      assert(perNode.forall(ks => ks.distinct.size == ks.size),
+        s"$name evaluates a kernel twice in one node: $perNode\n" +
+          plans.mkString("\n----\n"))
+    }
+  }
+
   test("substring_dedup: probe side reads the cached window relation " +
       "and the duplicate semi-filter broadcasts") {
     val out = SparkEntry.queries("substring_dedup")(spark, dir)
@@ -372,7 +422,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"cartesian in plan:\n$p")
   }
 
-  test("gopher_quality is map-only and splits each array once per row") {
+  test("gopher_quality is map-only") {
     val p = plan("gopher_quality")
     // the final .orderBy is the dump's determinism sort; nothing before
     // it may shuffle — drop the terminal sort's exchange from the count
@@ -381,13 +431,6 @@ class PlanAuditSpec extends SparkSpec {
       .count(l => l.contains("Exchange rangepartitioning"))
     assert(exchanges == sortExchanges,
       s"gopher rules must not shuffle (found a hash exchange):\n$p")
-    // the staged projections must survive optimization: a collapsed
-    // plan would re-inline the word split into every rule flag (~10x
-    // per-row recompute of the regex split)
-    val wordSplits = "split\\(_?text".r.findAllIn(p)
-      .count(_ => true)
-    assert(wordSplits <= 2,
-      s"word/line splits recomputed $wordSplits times (expected <=2):\n$p")
   }
 
   test("semanticDedup pairs meet on cluster_id equi-join, never cartesian") {
@@ -706,9 +749,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!iv.contains("Join"), s"ivf_tuned should be joinless:\n$iv")
     // a 1-probe pick compiles the isin to an equality filter (sf0.001
     // selects nprobe=1), a multi-probe pick to IN — either way the
-    // probe filter must sit in the scan stage under the top-k heap
+    // probe filter on the assignment must sit in the scan stage under
+    // the top-k heap
     assert(iv.contains("TakeOrderedAndProject") &&
-      (iv.contains(" IN (") || iv.contains(".negi = ")),
+      iv.linesIterator.exists(l => l.contains("Filter") &&
+        l.contains("nearestcentroid(") &&
+        (l.contains(" IN (") || l.contains(") = "))),
       s"probe-set pruning or top-k heap missing:\n$iv")
     val ap = plan("ann_index_persist")
     assert(!ap.contains("CartesianProduct"), ap)
