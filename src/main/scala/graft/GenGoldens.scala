@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.queries.ProjectionQueries
+
 /** Regenerates the committed projection goldens
   * (`src/main/resources/goldens/{sf}_{umap,tsne}_project.csv`): the
   * frozen 2-D fits the `umap_project` / `tsne_project` oracles compare
@@ -20,7 +22,7 @@ object GenGoldens {
     val spark = GraftSession(8)
     Files.createDirectories(Paths.get(outDir))
     val sf = new java.io.File(sfDir).getName
-    val fp = SparkEntry.projectionInputFingerprint(spark, sfDir)
+    val fp = ProjectionQueries.projectionInputFingerprint(spark, sfDir)
     for (q <- Seq("umap_project", "tsne_project")) {
       val rows = SparkEntry.queries(q)(spark, sfDir).collect()
       val body = rows.map(r =>

@@ -3,11 +3,14 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Profiling and plan-capture main (a tool, not a declared query):
   *
@@ -29,9 +32,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * line with its duration attribution and state-operator metrics.
   *
   * PROF_EXPLAIN=<dir>: after a query's runs (standing artifacts built,
-  * so the plan is the steady-state serve plan), write its
-  * explain("formatted") to `<dir>/<name>.txt` — the before/after
-  * plan-identity channel that `tools/compare_plans.py` diffs.
+  * so the plan is the steady-state serve plan), build and run it once
+  * more into a noop sink and write the explain("formatted") of every
+  * query execution that run performed, eager checkpoint jobs included,
+  * to `<dir>/<name>.txt`. These are the plans that ran: AQE's final
+  * plan with its reused exchanges and runtime broadcast demotions, not
+  * the initial plan of a DataFrame that never executes. This is the
+  * before/after plan-identity channel that `tools/compare_plans.py`
+  * diffs.
   *
   * Exits 1 naming every query that failed. */
 object Prof {
@@ -103,15 +111,45 @@ object Prof {
         f"taskTime=${(taskMs - ms0) / 1e3}%.2fs")
     }
 
+    /** The formatted executed plan of every query execution that one
+      * build and noop-sink run of `name` performs, in completion order.
+      * Listener events arrive asynchronously but in order, so a
+      * trailing marker query bounds the wait. */
+    def executedPlans(name: String): Seq[String] = {
+      val captured = ArrayBuffer.empty[QueryExecution]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          captured.synchronized { captured += qe }
+        override def onFailure(f: String, qe: QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      val marker = "prof_explain_marker"
+      def isMarker(qe: QueryExecution) =
+        qe.analyzed.output.exists(_.name == marker)
+      def seen() = captured.synchronized { captured.toSeq }
+      spark.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        spark.range(1).select(lit(marker).as(marker)).collect()
+        val deadline = System.nanoTime() + 30_000_000_000L
+        while (!seen().exists(isMarker) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        require(seen().exists(isMarker), "query listener events did not arrive")
+      } finally spark.listenerManager.unregister(listener)
+      seen().filterNot(isMarker).map(_.explainString(FormattedMode))
+    }
+
     explainDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val failed = names.filterNot { name =>
       try {
         for (i <- 1 to runs) run(name, i)
         explainDir.foreach { d =>
-          val plan = SparkEntry.queries(name)(spark, sfDir)
-            .queryExecution.explainString(FormattedMode)
+          val plans = executedPlans(name).zipWithIndex.map { case (p, i) =>
+            s"==== execution ${i + 1} ====\n$p"
+          }
           Files.write(Paths.get(d, s"$name.txt"),
-            plan.getBytes(StandardCharsets.UTF_8))
+            plans.mkString("\n").getBytes(StandardCharsets.UTF_8))
         }
         true
       } catch { case e: Throwable =>

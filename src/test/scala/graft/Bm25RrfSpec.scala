@@ -9,6 +9,27 @@ import graft.operators.{Bm25, Rrf}
 class Bm25RrfSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A corpus with a zero-hit doc (7) and a repeated-term doc (8) for
+    * the standing-vs-inline serving equivalences. */
+  private val servingCorpus = Seq(
+    (1L, "spark streaming data big data table"),
+    (2L, "customer table error data spark"),
+    (3L, "big data spark hash join table"),
+    (4L, "error log stream data"),
+    (5L, "the spark table holds customer data rows"),
+    (6L, "hash partition data table spark big"),
+    (7L, "zebra quartz unrelated text"),
+    (8L, "data data data table table spark")
+  ).toDF("doc_id", "text")
+
+  private def standingFor(df: org.apache.spark.sql.DataFrame) =
+    Bm25.Standing(
+      posts = Bm25.postings(df, "doc_id", "text"),
+      gateToks = df.select(col("doc_id").as("id"),
+          explode(graft.functions.TextFunctions.tokensCol(col("text"),
+            removeStopwords = false)).as("tok"))
+        .distinct())
+
   private val corpus = Seq(
     (1L, "apple banana apple"),
     (2L, "banana cherry"),
@@ -332,5 +353,48 @@ class Bm25RrfSpec extends SparkSpec {
     val got = Rrf.combSum(dense, sparse, "doc_id", "score", 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got(1L) == 2.0 && got(2L) == 1.0)
+  }
+
+  // the standing serving path: statistics derived from standing
+  // postings and gates must be bit-exact vs the inline tokenize path
+  test("indexFromPostings is bit-exact vs buildIndex (stats and " +
+      "docWeights row sets identical)") {
+    val idx1 = Bm25.buildIndex(servingCorpus, "doc_id", "text")
+    val idx2 = Bm25.indexFromPostings(servingCorpus, "doc_id",
+      Bm25.postings(servingCorpus, "doc_id", "text"))
+    assert(idx1.stats.collect().toSet == idx2.stats.collect().toSet)
+    assert(idx1.docWeights.collect().toSet ==
+      idx2.docWeights.collect().toSet)
+    // and on a FILTERED servingCorpus: restricted postings == re-tokenized
+    // eligible servingCorpus
+    val eligible = servingCorpus.filter(col("doc_id") =!= 2L)
+    val f1 = Bm25.buildIndex(eligible, "doc_id", "text")
+    val f2 = Bm25.indexFromPostings(eligible, "doc_id",
+      Bm25.postings(servingCorpus, "doc_id", "text"))
+    assert(f1.stats.collect().toSet == f2.stats.collect().toSet)
+    assert(f1.docWeights.collect().toSet == f2.docWeights.collect().toSet)
+    // zero-token docs: absent from postings but MUST count toward
+    // n_docs/avgdl (buildIndex counts them from the servingCorpus relation;
+    // indexFromPostings must replicate, not infer N from posting keys)
+    val withEmpty = servingCorpus.unionByName(
+      Seq((99L, ""), (100L, "   ")).toDF("doc_id", "text"))
+    val z1 = Bm25.buildIndex(withEmpty, "doc_id", "text")
+    val z2 = Bm25.indexFromPostings(withEmpty, "doc_id",
+      Bm25.postings(withEmpty, "doc_id", "text"))
+    assert(z1.stats.collect().toSet == z2.stats.collect().toSet)
+    assert(z1.docWeights.collect().toSet == z2.docWeights.collect().toSet)
+    assert(z1.stats.select("n_docs").head().getLong(0) == 10L)
+  }
+
+  test("searchBooleanTree standing path equals the inline path") {
+    val inline = Bm25.searchBooleanTree(servingCorpus, "doc_id", "text",
+      "spark data", must = Seq("table"), should = Seq("customer"),
+      mustNot = Seq("error"), shouldBoost = 0.5, k = 10)
+    val standing = Bm25.searchBooleanTree(servingCorpus, "doc_id", "text",
+      "spark data", must = Seq("table"), should = Seq("customer"),
+      mustNot = Seq("error"), shouldBoost = 0.5, k = 10,
+      standing = Some(standingFor(servingCorpus)))
+    assert(inline.collect().toSeq == standing.collect().toSeq)
+    assert(inline.collect().nonEmpty)
   }
 }

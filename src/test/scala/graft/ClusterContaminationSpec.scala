@@ -611,4 +611,19 @@ class ClusterContaminationSpec extends SparkSpec {
         s"doc $id: weight drifts with partitioning: $w vs ${w7(id)}")
     }
   }
+
+  test("quality_tuned: kept slice respects the selected threshold and " +
+      "the threshold comes from the grid") {
+    val rows = SparkEntry.queries("quality_tuned")(
+      spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    val tau = rows.head.getAs[Double]("threshold")
+    assert(Seq(0.3, 0.4, 0.5, 0.6, 0.7).contains(tau))
+    val f1 = rows.head.getAs[Double]("panel_f1")
+    assert(f1 >= 0.0 && f1 <= 1.0)
+    rows.foreach { r =>
+      assert(r.getAs[Double]("quality_prob") >= tau)
+      assert(r.getAs[Double]("threshold") == tau)
+    }
+  }
 }

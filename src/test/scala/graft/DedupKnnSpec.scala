@@ -266,4 +266,30 @@ class DedupKnnSpec extends SparkSpec {
     // df sorted = [1,2,2,3]: p50 -> r=floor(.5*3)=1 -> 2; p90 -> r=2 -> 2
     assert(got("df_p50") == 2.0 && got("df_p90") == 2.0)
   }
+
+  test("mutualTopK rejects a non-numeric id column loudly") {
+    val vecs = Seq(("x1", Seq(1.0, 0.0)), ("x2", Seq(0.9, 0.1)))
+      .toDF("sid", "vec")
+    val cents = Seq(Array(1.0, 0.0))
+    val e = intercept[IllegalArgumentException] {
+      Knn.mutualTopK(vecs, "sid", "vec", cents, k = 2)
+    }
+    assert(e.getMessage.contains("integral id column"))
+  }
+
+  test("mutualTopK accepts every declared integral id type") {
+    val centroids = Seq(Array.fill(4)(0.0), Array.fill(4)(1.0))
+    Seq("int", "bigint", "smallint", "tinyint").foreach { tpe =>
+      val vecs = Seq((1L, Array.fill(4)(1.0f)), (2L, Array.fill(4)(1.0f)))
+        .toDF("id", "vec")
+        .select(col("id").cast(tpe).as("id"), col("vec"))
+      val out = Knn.mutualTopK(vecs, "id", "vec", centroids, k = 1)
+      assert(out.columns.contains("id_a") && out.count() >= 0)
+    }
+    val strIds = Seq(("a", Array.fill(4)(1.0f))).toDF("id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      Knn.mutualTopK(strIds, "id", "vec", centroids, k = 1)
+    }
+    assert(e.getMessage.contains("integral id column"))
+  }
 }

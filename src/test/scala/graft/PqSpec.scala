@@ -88,4 +88,20 @@ class PqSpec extends SparkSpec {
     val overlap = (approx & exact).size
     assert(overlap >= 5, s"ADC recall too low: $overlap/10")
   }
+
+  test("ann_pq_tuned: serving plan keeps the broadcast shortlist " +
+      "semi-join and the top-k heap; config comes from the grid") {
+    val df = SparkEntry.queries("ann_pq_tuned")(
+      spark, "/root/testdata/sf0.001")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("SortMergeJoin"),
+      s"shortlist semi-join must broadcast:\n$plan")
+    assert(!plan.contains("CartesianProduct"), plan)
+    val rows = df.collect()
+    assert(rows.length == 10)
+    val (m, sl) = (rows.head.getAs[Int]("m"),
+      rows.head.getAs[Int]("shortlist"))
+    assert(Seq((4, 30), (4, 50), (8, 30), (8, 50)).contains((m, sl)))
+  }
 }

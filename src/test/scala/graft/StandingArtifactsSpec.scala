@@ -111,6 +111,46 @@ class StandingArtifactsSpec extends SparkSpec {
     }
     assert(StandingArtifacts(spark, dir, "spec/throws")(7) == 7)
   }
+
+  test("serving-path discipline: the online-search composites read " +
+      "the STANDING cached index (InMemoryTableScan), never a per-" +
+      "query corpus re-tokenize") {
+    val dir = "/root/testdata/sf0.001"
+    // bm25_topk serves from docsTextIndex: the executed plan must scan
+    // the cached docWeights or the index's checkpointed forward
+    // relation `(id, fwd)`, and the only Generate (explode) nodes
+    // allowed are beneath the cache build, not in the per-query plan
+    // (search_collapse's and search_ltr's final plans scan their
+    // CHECKPOINTED candidate pages instead — the standing index sits
+    // beneath the eager checkpoint, r14's fix for ltr's 4 re-scores —
+    // so they are asserted via their bench profiles, not here)
+    for (q <- Seq("bm25_topk", "search_prf", "search_snippets",
+        "search_fallback_correct")) {
+      val p = SparkEntry.queries(q)(spark, dir)
+        .queryExecution.executedPlan.toString
+      val forwardScan = "Scan ExistingRDD\\[id#\\d+L?,fwd#".r
+      assert(p.contains("InMemoryTableScan") ||
+        forwardScan.findFirstIn(p).isDefined,
+        s"$q does not serve from the standing cache:\n$p")
+    }
+  }
+
+  test("fit-persist twins: read-back sidecar serving is row-for-row " +
+      "equal to the session-cached fits") {
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(dir).isDirectory)
+    for ((persist, cached) <- Seq(
+        "ann_pq_fit_persist" -> "ann_pq_tuned",
+        "ivf_fit_persist" -> "ivf_tuned",
+        "ann_fit_persist" -> "ann_tuned",
+        "hybrid_fit_persist" -> "hybrid_tuned",
+        "dedup_fit_persist" -> "dedup_tuned")) {
+      val a = SparkEntry.queries(persist)(spark, dir)
+      val b = SparkEntry.queries(cached)(spark, dir)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"$persist diverges from $cached")
+    }
+  }
 }
 
 /** Child-JVM body of the stopped-session test: collect `related_docs`

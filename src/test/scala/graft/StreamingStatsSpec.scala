@@ -12,6 +12,9 @@ import graft.streaming.Sync
 class StreamingStatsSpec extends SparkSpec {
   import spark.implicits._
 
+  private def tmp(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix)
+
   test("incremental BM25 stats merge equals batch recompute (T3)") {
     val batch1 = Seq((1L, "apple banana apple"), (2L, "banana cherry"))
       .toDF("doc_id", "text")
@@ -348,5 +351,108 @@ class StreamingStatsSpec extends SparkSpec {
       case None =>
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  // checkpoint recovery: state is RESTORED, not recomputed, and the
+  // file sink stays exactly-once across the restart. The twin test
+  // compares against the first test's scenario, so keep them in order.
+  test("restart-resume: a post-stop duplicate is attributed to its " +
+      "pre-stop canonical (state restored), and the resumed query " +
+      "re-emits nothing (exactly-once sink)") {
+    val root = tmp("graft-r14-restart")
+    val in = root.resolve("in"); val out = root.resolve("out")
+    val ck = root.resolve("ck")
+    java.nio.file.Files.createDirectories(in)
+    // ts = doc_id seconds (the staged-fixture contract). Batch 1 holds
+    // the canonical of hash "dup A" at id 10; batch 2 an in-horizon
+    // copy at id 30; batch 3 (post-stop) another in-horizon copy at
+    // id 55 — attributable to id 10 ONLY if the store survived the
+    // restart — and an out-of-horizon copy at id 95 that must
+    // silently become the new canonical (not be reported).
+    val b1 = Seq((10L, "dup A"), (11L, "unique b1")).toDF("doc_id", "text")
+    val b2 = Seq((30L, "dup A"), (31L, "unique b2")).toDF("doc_id", "text")
+    val b3 = Seq((55L, "dup A"), (95L, "dup A")).toDF("doc_id", "text")
+    var stamp = 1700000000000L
+    def stage(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("append").parquet(in.toString)
+      stamp += 60000
+      import scala.jdk.CollectionConverters._
+      scala.util.Using.resource(java.nio.file.Files.list(in)) {
+        _.iterator().asScala.toSeq
+      }.filter(_.getFileName.toString.endsWith(".parquet"))
+        .sortBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        .lastOption.foreach(p => java.nio.file.Files.setLastModifiedTime(
+          p, java.nio.file.attribute.FileTime.fromMillis(stamp)))
+    }
+    def runOnce(): Unit = {
+      val stream = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+        .withColumn("ts_utc", timestamp_micros(col("doc_id") * 1000000L))
+        .withWatermark("ts_utc", "10 seconds")
+      val o = Sync.streamingDupReportsTtl(stream, "doc_id", "text",
+        "ts_utc", horizonUs = 50L * 1000000L)
+      val q = o.writeStream.outputMode("append").format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ck.toString).start()
+      q.processAllAvailable(); q.stop()
+    }
+    stage(b1); stage(b2)
+    runOnce()
+    val afterStop = spark.read.parquet(out.toString)
+      .as[(Long, Long)].collect().toSet
+    assert(afterStop == Set((30L, 10L)),
+      s"pre-stop emissions wrong: $afterStop")
+    stage(b3)
+    runOnce() // NEW query, SAME checkpoint
+    val finalRows = spark.read.parquet(out.toString)
+      .as[(Long, Long)].collect().toList
+    // exactly-once: (30,10) appears ONCE; state restored: (55,10) is
+    // attributed across the restart (55−10 = 45 ≤ 50). The chain
+    // rule's canonical only advances on an OUT-of-horizon arrival, so
+    // 55 stays a dup of 10, and 95 (95−10 = 85 > 50) silently becomes
+    // the new canonical — unreported.
+    assert(finalRows.sorted == List((30L, 10L), (55L, 10L)),
+      s"resumed emissions wrong: $finalRows")
+  }
+
+  test("restart-resume twin: resumed final table equals the " +
+      "uninterrupted single-run table on the same batches") {
+    // single uninterrupted run over the same three batches
+    val root = tmp("graft-r14-single")
+    val in = root.resolve("in"); val out = root.resolve("out")
+    val ck = root.resolve("ck")
+    java.nio.file.Files.createDirectories(in)
+    val all = Seq(
+      Seq((10L, "dup A"), (11L, "unique b1")),
+      Seq((30L, "dup A"), (31L, "unique b2")),
+      Seq((55L, "dup A"), (95L, "dup A")))
+    var stamp = 1700000000000L
+    all.foreach { rows =>
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(in.toString)
+      stamp += 60000
+      import scala.jdk.CollectionConverters._
+      scala.util.Using.resource(java.nio.file.Files.list(in)) {
+        _.iterator().asScala.toSeq
+      }.filter(_.getFileName.toString.endsWith(".parquet"))
+        .sortBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        .lastOption.foreach(p => java.nio.file.Files.setLastModifiedTime(
+          p, java.nio.file.attribute.FileTime.fromMillis(stamp)))
+    }
+    val stream = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(in.toString)
+      .withColumn("ts_utc", timestamp_micros(col("doc_id") * 1000000L))
+      .withWatermark("ts_utc", "10 seconds")
+    val o = Sync.streamingDupReportsTtl(stream, "doc_id", "text",
+      "ts_utc", horizonUs = 50L * 1000000L)
+    val q = o.writeStream.outputMode("append").format("parquet")
+      .option("path", out.toString)
+      .option("checkpointLocation", ck.toString).start()
+    q.processAllAvailable(); q.stop()
+    val single = spark.read.parquet(out.toString)
+      .as[(Long, Long)].collect().toList.sorted
+    assert(single == List((30L, 10L), (55L, 10L)),
+      s"single-run emissions wrong: $single")
+    // == the resumed run's final set from the previous test's scenario
   }
 }

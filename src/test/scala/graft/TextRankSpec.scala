@@ -86,4 +86,44 @@ class TextRankSpec extends SparkSpec {
       minCount = 100L, iterations = 3, topK = 10)
     assert(got.collect().isEmpty)
   }
+
+  // the driver fold and the distributed loop accumulate on one
+  // fixed-point grid, so they are bit-identical
+  test("pageRank driver fold is bit-identical to the distributed RDD " +
+      "loop (order-free fixed-point accumulation)") {
+    // a graph with a hub, a chain, and a triangle — uneven degrees so
+    // a non-exact accumulation would diverge in the last ulps
+    val edges = Seq(
+      ("a", "b", 3L), ("a", "c", 1L), ("a", "d", 2L), ("a", "e", 5L),
+      ("b", "c", 2L), ("c", "d", 1L), ("e", "f", 4L), ("f", "g", 1L),
+      ("g", "e", 2L), ("d", "h", 7L)
+    ).toDF("u", "v", "w")
+    val fold = TextRank.pageRank(edges, iterations = 6)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+    val dist = TextRank.pageRank(edges, iterations = 6,
+        driverFoldMaxEdges = -1L) // force the distributed loop
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+    assert(fold.keySet == dist.keySet)
+    fold.foreach { case (v, s) =>
+      assert(s == dist(v), s"vertex $v: fold=$s dist=${dist(v)}")
+    }
+  }
+
+  test("pageRank byte-budget gate: long-key graphs refuse the driver " +
+      "fold and the RDD loop is bit-identical anyway") {
+    val longA = "x" * 2000 + "a"
+    val longB = "y" * 2000 + "b"
+    val longC = "z" * 2000 + "c"
+    val edges = Seq((longA, longB, 3L), (longB, longC, 1L),
+      (longA, longC, 2L)).toDF("a", "b", "w")
+    // 3 edges x ~4000 chars x 2 B >> 8 KiB budget -> RDD path; the
+    // unconstrained call folds on the driver. The 1e-12 fixed-point
+    // grid makes the two bit-identical.
+    val viaRdd = TextRank.pageRank(edges, iterations = 3,
+        driverFoldMaxBytes = 8L * 1024)
+      .orderBy("id").collect().map(r => (r.getString(0), r.getDouble(1)))
+    val viaFold = TextRank.pageRank(edges, iterations = 3)
+      .orderBy("id").collect().map(r => (r.getString(0), r.getDouble(1)))
+    assert(viaRdd.toSeq == viaFold.toSeq && viaRdd.length == 3)
+  }
 }

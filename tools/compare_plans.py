@@ -10,7 +10,10 @@ ids (`#123`, also in `id=#123`), higher-order-function variable numbers
 that createTempDirectory appends to a `graft-...` prefix, blue/green
 generation numbers (`/gen-3`), JVM lambda class names and identity
 hash codes (`@1a2b3c`), RDD ids and the Scala source lines that created
-them, whole-stage codegen ids, and AQE query stage ids. Prints one line
+them (and the file, when it is a declared-query module), random
+per-run UUIDs, whole-stage codegen ids, and AQE query stage ids. The
+executions a dump lists are compared in sorted order, since
+concurrent jobs complete in no fixed order. Prints one line
 per differing or missing query, with the first differing lines, and
 exits 1 on any difference, 0 when every plan is identical. This is the
 "plans unchanged" gate for refactors; tools/compare_verify.py is its
@@ -39,18 +42,33 @@ NORMALIZE = [
     # RDD ids and the source line that created an RDD
     (re.compile(r"(RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"(\w\.scala):\d+"), r"\1:N"),
+    # the declared queries live in the graft.queries modules (before
+    # that, all in SparkEntry.scala): only the file an RDD's call site
+    # names differs between the layouts
+    (re.compile(r"\b(?:SparkEntry|Fixtures|OracleSql|\w+Queries)\.scala:N"),
+     "QUERIES.scala:N"),
+    # random per-run UUIDs: streaming run ids and watermark node ids,
+    # and the names of the parquet part files a run writes
+    (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"),
+     "UUID"),
     # ids numbered in the order concurrent subqueries and AQE stages
     # happen to be prepared
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
     (re.compile(r"(QueryStage) \d+"), r"\1 N"),
-    (re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+"), r"\1N"),
+    (re.compile(r"(QueryStage\n(?:Output.*\n)?Arguments: )\d+"), r"\1N"),
 ]
+
+
+EXECUTION = re.compile(r"^==== execution \d+ ====\n", re.M)
 
 
 def normalize(text):
     for pattern, repl in NORMALIZE:
         text = pattern.sub(repl, text)
-    return text.splitlines()
+    # a dump lists its query executions in completion order, which
+    # concurrent jobs do not fix: compare them as a sorted list
+    blocks = sorted(EXECUTION.split(text))
+    return [line for b in blocks for line in ["==== execution ===="] + b.splitlines()]
 
 
 def plans(root):
