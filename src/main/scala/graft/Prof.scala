@@ -3,14 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Profiling and plan-capture main (a tool, not a declared query):
   *
@@ -22,7 +18,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Runs each query in PROF_QUERIES (comma-separated; unset, every
   * declared query, sorted) PROF_RUNS times (default 1) and prints one
   * line per run: wall time, its build / optimize / execute split, and
-  * the jobs, stages, tasks and task time the run scheduled. Run 1 pays
+  * the `QueryRun` counters of the run (jobs, stages, tasks, task time,
+  * shuffle read / write, spill, largest task's peak memory). Run 1 pays
   * the once-per-dir standing builds, so later runs show the
   * steady-state serve cost. Deep composite plans at small SF are
   * stage-count-bound (~100-200 ms fixed cost per stage: codegen + AQE
@@ -50,30 +47,7 @@ object Prof {
     val runs = sys.env.getOrElse("PROF_RUNS", "1").toInt
     val explainDir = sys.env.get("PROF_EXPLAIN")
     val spark = GraftSession(GraftSession.cpus(32))
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    // written only by the listener bus thread
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskMs = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val info = s.stageInfo
-        val m = info.taskMetrics
-        stages += 1; tasks += info.numTasks; taskMs += m.executorRunTime
-        val ms = (for (a <- info.completionTime; b <- info.submissionTime)
-          yield a - b).getOrElse(0L)
-        if (ms > 500)
-          println(f"[stage] ${ms}%6dms tasks=${info.numTasks}%3d " +
-            f"run=${m.executorRunTime}%dms cpu=${m.executorCpuTime / 1000000}%dms " +
-            f"deser=${m.executorDeserializeTime}%dms " +
-            info.name.take(80) + " | rdds: " +
-            info.rddInfos.map(r => s"${r.name}@${r.scope.map(_.name).getOrElse("?")}")
-              .mkString(", ").take(300))
-      }
-    })
+    QueryRun.warmUp(spark)
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -94,50 +68,33 @@ object Prof {
     })
 
     def run(name: String, i: Int): Unit = {
-      val (j0, s0, k0, ms0) = (jobs, stages, tasks, taskMs)
-      val t0 = System.nanoTime
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val t1 = System.nanoTime
-      df.queryExecution.executedPlan // force analysis + optimization
-      val t2 = System.nanoTime
-      val rows = df.count()
-      val t3 = System.nanoTime
-      Thread.sleep(100) // listener events arrive asynchronously
-      def ms(a: Long, b: Long) = (b - a) / 1e6
-      println(f"[prof] $name%-28s run$i ${(t3 - t0) / 1e9}%6.2fs " +
-        f"build=${ms(t0, t1)}%8.1fms optimize=${ms(t1, t2)}%8.1fms " +
-        f"exec=${ms(t2, t3)}%8.1fms rows=$rows%6d jobs=${jobs - j0} " +
-        f"stages=${stages - s0} tasks=${tasks - k0} " +
-        f"taskTime=${(taskMs - ms0) / 1e3}%.2fs")
-    }
-
-    /** The formatted executed plan of every query execution that one
-      * build and noop-sink run of `name` performs, in completion order.
-      * Listener events arrive asynchronously but in order, so a
-      * trailing marker query bounds the wait. */
-    def executedPlans(name: String): Seq[String] = {
-      val captured = ArrayBuffer.empty[QueryExecution]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-          captured.synchronized { captured += qe }
-        override def onFailure(f: String, qe: QueryExecution,
-                               e: Exception): Unit = ()
+      val r = QueryRun(spark) {
+        val t0 = System.nanoTime
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val t1 = System.nanoTime
+        df.queryExecution.executedPlan // force analysis + optimization
+        val t2 = System.nanoTime
+        (df.count(), (t1 - t0) / 1e6, (t2 - t1) / 1e6)
       }
-      val marker = "prof_explain_marker"
-      def isMarker(qe: QueryExecution) =
-        qe.analyzed.output.exists(_.name == marker)
-      def seen() = captured.synchronized { captured.toSeq }
-      spark.listenerManager.register(listener)
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        spark.range(1).select(lit(marker).as(marker)).collect()
-        val deadline = System.nanoTime() + 30_000_000_000L
-        while (!seen().exists(isMarker) && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        require(seen().exists(isMarker), "query listener events did not arrive")
-      } finally spark.listenerManager.unregister(listener)
-      seen().filterNot(isMarker).map(_.explainString(FormattedMode))
+      val (rows, buildMs, optimizeMs) = r.value
+      for (info <- r.stageInfos; a <- info.completionTime;
+           b <- info.submissionTime if a - b > 500) {
+        val m = info.taskMetrics
+        println(f"[stage] ${a - b}%6dms tasks=${info.numTasks}%3d " +
+          f"run=${m.executorRunTime}%dms cpu=${m.executorCpuTime / 1000000}%dms " +
+          f"deser=${m.executorDeserializeTime}%dms " +
+          info.name.take(80) + " | rdds: " +
+          info.rddInfos.map(r => s"${r.name}@${r.scope.map(_.name).getOrElse("?")}")
+            .mkString(", ").take(300))
+      }
+      val c = r.counters
+      println(f"[prof] $name%-28s run$i ${r.wallSec}%6.2fs " +
+        f"build=$buildMs%8.1fms optimize=$optimizeMs%8.1fms " +
+        f"exec=${r.wallSec * 1e3 - buildMs - optimizeMs}%8.1fms " +
+        f"rows=$rows%6d jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} " +
+        f"taskTime=${c.taskMs / 1e3}%.2fs shuffleRead=${c.shuffleReadBytes}B " +
+        f"shuffleWrite=${c.shuffleWriteBytes}B spill=${c.spillBytes}B " +
+        f"peakMem=${c.peakExecMemBytes}B")
     }
 
     explainDir.foreach(d => Files.createDirectories(Paths.get(d)))
@@ -145,8 +102,11 @@ object Prof {
       try {
         for (i <- 1 to runs) run(name, i)
         explainDir.foreach { d =>
-          val plans = executedPlans(name).zipWithIndex.map { case (p, i) =>
-            s"==== execution ${i + 1} ====\n$p"
+          val plans = QueryRun(spark, plans = true) {
+            SparkEntry.queries(name)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save()
+          }.plans.zipWithIndex.map { case (qe, i) =>
+            s"==== execution ${i + 1} ====\n${qe.explainString(FormattedMode)}"
           }
           Files.write(Paths.get(d, s"$name.txt"),
             plans.mkString("\n").getBytes(StandardCharsets.UTF_8))

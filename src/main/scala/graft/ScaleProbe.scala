@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,19 +71,16 @@ object ScaleProbe {
       (if (args.length > 2) args(2) else DefaultQueries).split(',').toSeq
     val runs = if (args.length > 3) args(3).toInt else 2
     val spark = GraftSession(GraftSession.cpus(32))
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    QueryRun.warmUp(spark)
 
     stage(spark, src, dest)
 
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir).count()
-      catch { case e: Throwable =>
+    def once(name: String, dir: String): Double =
+      try QueryRun(spark)(SparkEntry.queries(name)(spark, dir).count()).wallSec
+      catch { case NonFatal(e) =>
         System.err.println(s"[scale] $name@$dir failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
     // interleave (src, dest) passes: the query's one-time costs
     // (codegen for the shared plan shape, per-dir fixture staging)
     // land in pass 1 of EACH side and the pass-2+ mins compare
@@ -89,18 +88,10 @@ object ScaleProbe {
     // dest a free ride on src's warming (ratios < 1 on 10x data)
     def bestPair(name: String): (Double, Double) = {
       val pairs = (1 to runs).map(_ => (once(name, src), once(name, dest)))
-      val as = pairs.map(_._1); val bs = pairs.map(_._2)
-      (if (as.exists(_ < 0)) -1.0 else as.min,
-        if (bs.exists(_ < 0)) -1.0 else bs.min)
+      def best(ts: Seq[Double]) = if (ts.exists(_ < 0)) -1.0 else ts.min
+      (best(pairs.map(_._1)), best(pairs.map(_._2)))
     }
-    def cal(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(2000000)
-        .selectExpr("count(distinct sha2(cast(id as string), 256))")
-        .collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    cal() // warm the probe shape
+    Bench.probeSha2(spark) // warm the probe shape
 
     val rows = queries.map { q =>
       val (a, b) = bestPair(q)
@@ -108,7 +99,7 @@ object ScaleProbe {
       System.err.println(f"[scale] $q%-22s src=$a%8.2f dest=$b%8.2f ratio=$ratio%6.2f")
       (q, a, b, ratio)
     }
-    val calEnd = cal()
+    val calEnd = Bench.probeSha2(spark)
     val qs = rows.map { case (q, a, b, r) =>
       f""""$q":{"src_sec":$a%.3f,"dest_sec":$b%.3f,"ratio":$r%.2f}"""
     }.mkString("{", ",", "}")

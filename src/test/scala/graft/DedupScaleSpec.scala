@@ -130,33 +130,17 @@ class DedupScaleSpec extends SparkSpec {
       "the verify joins are candidate-bounded equi-joins") {
     // capture every executed plan — the contaminated-id relation is
     // pinned eagerly inside the operator (PlanAuditSpec discipline)
-    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit =
-        captured.synchronized { captured += qe.executedPlan.toString }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val evalSet = docs.filter(col("doc_id") % 10 === 0)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
+    val evalSet = docs.filter(col("doc_id") % 10 === 0)
+    val train = docs.filter(col("doc_id") % 10 =!= 0)
+    val all = QueryRun(spark, plans = true) {
       Dedup.decontaminateFuzzy(train, "doc_id", "text",
         evalSet, "doc_id", "text").count()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      def plans() = captured.synchronized { captured.toSeq }
-      while (plans().isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      val all = plans()
-      assert(all.nonEmpty)
-      all.foreach { p =>
-        assert(!p.contains("CartesianProduct"), p)
-        assert(!p.contains("BroadcastNestedLoopJoin"), p)
-      }
-    } finally spark.listenerManager.unregister(listener)
+    }.plans.map(_.executedPlan.toString)
+    assert(all.nonEmpty)
+    all.foreach { p =>
+      assert(!p.contains("CartesianProduct"), p)
+      assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    }
   }
 
   test("stripBoilerplate's boilerplate relation rides a broadcast join") {

@@ -259,40 +259,8 @@ class PlanAuditSpec extends SparkSpec {
   /** `body`'s value and the executed physical plans of every query it
     * runs (eager checkpoint jobs included). */
   private def executedPlans[T](body: => T): (T, Seq[String]) = {
-    val (value, qes) = queryExecutions(body)
-    (value, qes.map(_.executedPlan.toString))
-  }
-
-  /** `body`'s value and the QueryExecution of every query it runs.
-    * Listener events arrive asynchronously but in order, so a trailing
-    * marker query bounds the wait. */
-  private def queryExecutions[T](body: => T)
-      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
-    val captured = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.execution.QueryExecution]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit =
-        captured.synchronized { captured += qe }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    val marker = "plan_audit_marker"
-    def isMarker(qe: org.apache.spark.sql.execution.QueryExecution) =
-      qe.analyzed.output.exists(_.name == marker)
-    def seen() = captured.synchronized { captured.toSeq }
-    spark.listenerManager.register(listener)
-    try {
-      val value = body
-      spark.range(1).select(lit(marker).as(marker)).collect()
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (!seen().exists(isMarker) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(seen().exists(isMarker), "query listener events did not arrive")
-      (value, seen().filterNot(isMarker))
-    } finally spark.listenerManager.unregister(listener)
+    val run = QueryRun(spark, plans = true)(body)
+    (run.value, run.plans.map(_.executedPlan.toString))
   }
 
   private def assertSemiFiltersBroadcast(plans: Seq[String]): Unit = {
@@ -365,7 +333,8 @@ class PlanAuditSpec extends SparkSpec {
       ("gopher_quality", Set("GopherCounts"), () =>
         SparkEntry.queries("gopher_quality")(spark, dir).collect()))
     for ((name, kernels, run) <- cases) {
-      val plans = queryExecutions(run())._2.map(_.optimizedPlan)
+      val plans = QueryRun(spark, plans = true)(run()).plans
+        .map(_.optimizedPlan)
       val lambdas = plans.flatMap(p => allExpressions(p).flatMap(_.collect {
         case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l
       }))
@@ -546,43 +515,26 @@ class PlanAuditSpec extends SparkSpec {
     // (eager localCheckpoint, so the eval-shingle cache can release),
     // which means the returned plan shows only a Scan ExistingRDD —
     // the probe-bearing plan executes DURING the call. Capture every
-    // execution with a listener and audit the one carrying the probe.
-    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        captured.synchronized { captured += qe.executedPlan.toString }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    // execution of the run and audit the ones carrying the probe.
+    val (_, executed) = executedPlans {
       SparkEntry.queries("contamination_bloom")(spark, dir).count()
-      // listener delivery is async; poll briefly for the probe plan
-      val deadline = System.nanoTime() + 10_000_000_000L
-      def probes() = captured.synchronized {
-        captured.filter(_.contains("might_contain")).toSeq }
-      while (probes().isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      val probePlans = probes()
-      assert(probePlans.nonEmpty,
-        s"no executed plan carried the bloom probe (${captured.size} plans)")
-      // the probe must sit on the train-shingle side BELOW the shingle
-      // join: the first might_contain line appears deeper (more
-      // indented) than the first shingle-join line
-      val ok = probePlans.exists { p =>
-        val lines = p.linesIterator.toSeq
-        val joinDepth = lines.find(l => l.contains("Join") &&
-          l.contains("shingle")).map(_.indexOf("+-")).getOrElse(-1)
-        val probeDepth = lines.find(_.contains("might_contain"))
-          .map(_.indexOf("+-")).getOrElse(-1)
-        joinDepth >= 0 && probeDepth > joinDepth
-      }
-      assert(ok, s"bloom probe not below the verify join in any " +
-        s"executed plan:\n${probePlans.mkString("\n====\n")}")
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val probePlans = executed.filter(_.contains("might_contain"))
+    assert(probePlans.nonEmpty,
+      s"no executed plan carried the bloom probe (${executed.size} plans)")
+    // the probe must sit on the train-shingle side BELOW the shingle
+    // join: the first might_contain line appears deeper (more
+    // indented) than the first shingle-join line
+    val ok = probePlans.exists { p =>
+      val lines = p.linesIterator.toSeq
+      val joinDepth = lines.find(l => l.contains("Join") &&
+        l.contains("shingle")).map(_.indexOf("+-")).getOrElse(-1)
+      val probeDepth = lines.find(_.contains("might_contain"))
+        .map(_.indexOf("+-")).getOrElse(-1)
+      joinDepth >= 0 && probeDepth > joinDepth
+    }
+    assert(ok, s"bloom probe not below the verify join in any " +
+      s"executed plan:\n${probePlans.mkString("\n====\n")}")
   }
 
   test("r8 second-wave queries: no cartesian product anywhere; " +
