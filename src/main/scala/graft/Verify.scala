@@ -1,7 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is named, with its error, in failed.json (written only when one
+  * fails); the exit status does not change. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated query-name filter for fast local
@@ -12,13 +17,17 @@ object Verify {
     }
     val spark = GraftSession(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // a failed query is reported in the output dir, not only on stderr
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -33,9 +42,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSqlFor(spark, sfDir)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val failedJson = Paths.get(s"$outDir/failed.json")
+    if (failed.isEmpty) Files.deleteIfExists(failedJson)
+    else Files.writeString(failedJson, obj(failed))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSqlFor(spark, sfDir)))
     spark.stop()
   }
 }

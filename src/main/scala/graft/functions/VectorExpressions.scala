@@ -4,9 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the vector-scoring hot path.
   *
@@ -220,10 +222,116 @@ case class NearestCentroid(child: Expression, centroids: CentroidMatrix)
       : NearestCentroid = copy(child = newChild)
 }
 
+/** A query's term frequencies as an expression field: compared by value,
+  * so two requests for the same terms canonicalize alike, and printed as
+  * a count and hash, so a plan string stays short for any query. */
+final class QueryTerms(val tf: Map[String, Double]) extends Serializable {
+  @transient private lazy val lookup: java.util.HashMap[UTF8String, java.lang.Double] = {
+    val m = new java.util.HashMap[UTF8String, java.lang.Double]()
+    tf.foreach { case (t, n) => m.put(UTF8String.fromString(t), n) }
+    m
+  }
+
+  /** The query's tf of `term`, or null when it is not a query term. */
+  def get(term: UTF8String): java.lang.Double = lookup.get(term)
+
+  override def equals(o: Any): Boolean = o match {
+    case q: QueryTerms => tf == q.tf
+    case _ => false
+  }
+  override def hashCode: Int = tf.hashCode
+  override def toString: String =
+    s"${tf.size} query terms, hash ${Integer.toHexString(hashCode)}"
+}
+
+/** BM25's sparse dot product of one document's forward entries with a
+  * query: `fwd` is `ARRAY<STRUCT<term, weight, idf>>`
+  * ([[graft.operators.Bm25.Index.forward]], entries sorted by term),
+  * and the score folds `acc + weight · (q_tf · idf)` over the entries
+  * whose term is a query term, in entry order, from 0.0 — the products,
+  * in the order, that [[graft.operators.Bm25.sparseScore]] sums over the
+  * postings join, so both score bit-identically. Null when no entry is a
+  * query term (or `fwd` is null): the document does not match. One loop
+  * per row inside whole-stage codegen; the higher-order-function form
+  * (`aggregate(filter(fwd, …), …)`) evaluates interpreted. */
+case class SparseDot(child: Expression, query: QueryTerms)
+    extends UnaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  private def entryType: Option[StructType] = child.dataType match {
+    case ArrayType(st: StructType, _) => Some(st)
+    case _ => None
+  }
+  @transient private lazy val termAt = entryType.get.fieldIndex("term")
+  @transient private lazy val weightAt = entryType.get.fieldIndex("weight")
+  @transient private lazy val idfAt = entryType.get.fieldIndex("idf")
+  @transient private lazy val width = entryType.get.size
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    def has(name: String, t: DataType) =
+      entryType.exists(_.find(_.name == name).exists(_.dataType == t))
+    if (has("term", StringType) && has("weight", DoubleType) &&
+        has("idf", DoubleType))
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        "expected an array<struct<term: string, weight: double, " +
+          s"idf: double>> input, got ${child.dataType.simpleString}")
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val fwd = input.asInstanceOf[ArrayData]
+    var acc = 0.0
+    var hit = false
+    var j = 0
+    while (j < fwd.numElements()) {
+      val e = fwd.getStruct(j, width)
+      val q = query.get(e.getUTF8String(termAt))
+      if (q != null) {
+        acc = acc + e.getDouble(weightAt) * (q.doubleValue * e.getDouble(idfAt))
+        hit = true
+      }
+      j += 1
+    }
+    if (hit) acc else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("queryTerms", query, classOf[QueryTerms].getName)
+    val c = child.genCode(ctx)
+    val (j, e, q) = (ctx.freshName("j"), ctx.freshName("e"), ctx.freshName("q"))
+    ev.copy(code = code"""
+      |${c.code}
+      |boolean ${ev.isNull} = true;
+      |double ${ev.value} = 0.0;
+      |if (!${c.isNull}) {
+      |  for (int $j = 0; $j < ${c.value}.numElements(); $j++) {
+      |    InternalRow $e = ${c.value}.getStruct($j, $width);
+      |    java.lang.Double $q = $ref.get($e.getUTF8String($termAt));
+      |    if ($q != null) {
+      |      ${ev.value} = ${ev.value} + $e.getDouble($weightAt) *
+      |        ($q.doubleValue() * $e.getDouble($idfAt));
+      |      ${ev.isNull} = false;
+      |    }
+      |  }
+      |}
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SparseDot =
+    copy(child = newChild)
+}
+
 object VectorExpressions {
   def dotExpr(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a),
       ColumnBridge.expression(b)))
+
+  def sparseDotExpr(fwd: Column, query: QueryTerms): Column =
+    ColumnBridge.column(SparseDot(ColumnBridge.expression(fwd), query))
 
   def cosineExpr(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(ColumnBridge.expression(a),

@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.TextFunctions
+import graft.functions.{QueryTerms, TextFunctions, VectorExpressions}
 
 /** BM25 sparse indexing and scoring as declarative DataFrame plans.
   *
@@ -187,6 +188,7 @@ object Bm25 {
     * [[searchTopK]] scores from. */
   final case class Index(stats: DataFrame, docWeights: DataFrame) {
     @volatile private var fwd: DataFrame = _
+    @volatile private var servings = Map.empty[LogicalPlan, DataFrame]
 
     /** True when the caller persisted `docWeights`: the standing-index
       * pattern (cache + materialize once, serve many requests). */
@@ -215,6 +217,38 @@ object Bm25 {
     /** Whether [[forward]] has been built — lets tests check that
       * non-standing indexes never pay for it. */
     private[graft] def forwardBuilt: Boolean = fwd != null
+
+    /** The serving relation of `table`, a standing index's answer to the
+      * reference's point that holds vector, sparse vector and payload
+      * together (ref packages/vecpipe/sparse.py:118-156): `table` left
+      * joined to [[forward]] on `idCol` = id, so each table row carries
+      * its `fwd` entries (null when it has no positive-weight term). It
+      * is localCheckpointed, in at most as many partitions as `table`
+      * has, on the first call for each canonicalized plan of `table`
+      * and kept for the index's lifetime, like
+      * [[forward]]: a request then reads payload, vector and sparse
+      * entries from one leaf, with no join. A table under a new path (a
+      * new generation) is a new plan and gets its own relation. */
+    def serving(table: DataFrame, idCol: String): DataFrame = {
+      require(isStanding, "a serving relation needs a standing index")
+      val key = table.queryExecution.analyzed.canonicalized
+      servings.getOrElse(key, synchronized {
+        servings.getOrElse(key, {
+          // no more partitions than the table: each partition of the
+          // relation costs every request a task per leg, and the join's
+          // shuffle would spread a small table over all of them
+          val rel = table.join(forward.withColumnRenamed("id", idCol),
+              Seq(idCol), "left")
+            .coalesce(math.max(1, table.rdd.getNumPartitions))
+            .localCheckpoint()
+          servings += key -> rel
+          rel
+        })
+      })
+    }
+
+    /** How many serving relations this index has built. */
+    private[graft] def servingsBuilt: Int = servings.size
 
     /** Cache and materialize `docWeights` and build [[forward]], off
       * the query clock: the one way to make a standing index. */
@@ -393,10 +427,14 @@ object Bm25 {
     *
     *  - FORWARD SCAN, for a standing `index` ([[Index.isStanding]]: the
     *    caller persisted docWeights): one narrow scan of the index's
-    *    [[Index.forward]] relation, each matching doc folding
-    *    `acc + weight · (q_tf · idf)` from 0.0 in term order, then a
-    *    TakeOrderedAndProject — no query broadcast, no exchange. The
-    *    forward relation is built once per index, on first use.
+    *    [[Index.forward]] relation scored by the codegen'd
+    *    [[graft.functions.SparseDot]] kernel ([[forwardScore]]), which
+    *    folds `acc + weight · (q_tf · idf)` from 0.0 in term order over
+    *    the doc's query-term entries and is null for a doc with none;
+    *    then a TakeOrderedAndProject that sorts nulls last, and a filter
+    *    that drops them ([[topKScored]]) — no query broadcast, no
+    *    exchange, no lambda, one kernel evaluation per doc. The forward
+    *    relation is built once per index, on first use.
     *  - POSTINGS JOIN, for every other index (derived in-plan, per
     *    request from [[indexFromPostings]], or restored from disk
     *    unpersisted): docWeights ⨝ broadcast query weights, a shuffle
@@ -426,24 +464,27 @@ object Bm25 {
         .limit(k)
   }
 
-  /** [[searchTopK]]'s forward-scan shape over a standing index. The
-    * query's term frequencies are a literal map; a doc matches when
-    * any of its entries is a query term. */
-  private def forwardTopK(idx: Index, queryText: String, k: Int): DataFrame = {
-    val qTf = TextFunctions.tokenize(queryText).groupBy(identity)
-      .map { case (t, ts) => t -> ts.size.toDouble }
-    val inQuery = (x: Column) => x.getField("term").isin(qTf.keys.toSeq: _*)
-    val qTfOf = typedLit(qTf)
-    idx.forward
-      .filter(exists(col("fwd"), inQuery))
-      .select(col("id"),
-        aggregate(filter(col("fwd"), inQuery), lit(0.0), (acc, x) =>
-          acc + x.getField("weight") *
-            (element_at(qTfOf, x.getField("term")) * x.getField("idf")))
-          .as("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-  }
+  /** [[searchTopK]]'s forward-scan shape over a standing index. */
+  private def forwardTopK(idx: Index, queryText: String, k: Int): DataFrame =
+    topKScored(idx.forward.select(col("id"),
+      forwardScore(col("fwd"), queryText).as("score")), "id", k)
+
+  /** A query's score of a [[Index.forward]] entry array: the
+    * [[graft.functions.SparseDot]] kernel over the query's term
+    * frequencies, null when no entry is a query term. */
+  def forwardScore(fwd: Column, queryText: String): Column =
+    VectorExpressions.sparseDotExpr(fwd, new QueryTerms(
+      TextFunctions.tokenize(queryText).groupBy(identity)
+        .map { case (t, ts) => t -> ts.size.toDouble }))
+
+  /** The top `k` rows of `scored` by (score desc, `idCol` asc), with the
+    * null-score (non-matching) rows dropped AFTER the cut: nulls sort
+    * last, so the kept rows are the top k of the matching ones. Filtering
+    * first would evaluate the score twice per row, since Catalyst pushes
+    * `isnotnull(score)` through the projection that computes it. */
+  def topKScored(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored.orderBy(col("score").desc_nulls_last, col(idCol)).limit(k)
+      .filter(col("score").isNotNull)
 
   /** [[searchTopK]] for MANY queries in ONE plan (r15): the
     * union-of-per-query-searchTopK harness shape scanned the pinned

@@ -49,13 +49,17 @@ object Rrf {
   /** @param wDense/wSparse per-leg fusion weights (Cormack 2009's RRF
     *   generalized the way production rankers tune it — weighted
     *   reciprocal ranks; 1.0/1.0 is classic RRF and the default, so
-    *   existing callers are bit-unchanged) */
+    *   existing callers are bit-unchanged)
+    * @param carry columns both legs hold that depend on the id alone (a
+    *   payload): they ride the merge as extra grouping keys and come out
+    *   beside the id, so no join has to fetch them after fusion */
   def fuse(dense: DataFrame, sparse: DataFrame, idCol: String,
            scoreCol: String, k: Int, rrfK: Int = DefaultRrfK,
            queryCol: Option[String] = None,
            preRanked: Boolean = false,
-           wDense: Double = 1.0, wSparse: Double = 1.0): DataFrame = {
-    val keys = queryCol.toSeq :+ idCol
+           wDense: Double = 1.0, wSparse: Double = 1.0,
+           carry: Seq[String] = Nil): DataFrame = {
+    val keys = queryCol.toSeq ++ (idCol +: carry)
     val nullI = lit(null).cast("int")
     val nullD = lit(null).cast("double")
     // preRanked: the caller already assigned leg ranks (needed when

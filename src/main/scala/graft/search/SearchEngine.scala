@@ -16,18 +16,27 @@ import graft.pipeline.Predicates
   * path, content, path_id, vector). Dense scoring assumes vectors are
   * L2-normalized at index time (cosine == dot).
   *
-  * Scale posture: both legs end in TakeOrderedAndProject; RRF joins two
-  * ≤candidate_k row sets (broadcast). The dense leg is one scan+score
-  * map over the chunks — brute-force exact, by design the
+  * Scale posture: both legs end in TakeOrderedAndProject; RRF merges two
+  * ≤candidate_k row sets in one partition. The dense leg is one
+  * scan+score map over the chunks — brute-force exact, by design the
   * correctness-equivalent of the reference's ANN (SURVEY.md §0); swap
-  * in Knn.lshTopK bucketing for the approximate path. The sparse leg
-  * depends on the index it gets ([[Bm25.searchTopK]]): an unfiltered
-  * request against a standing index (docWeights persisted by the
-  * caller) is one narrow scan of the index's per-chunk forward
-  * relation, with no exchange; a filtered request, or one without a
-  * standing index, derives the index in-plan and scores by the
-  * postings join, a broadcast of the query weights plus a shuffle on
-  * chunk id.
+  * in Knn.lshTopK bucketing for the approximate path. What else a
+  * request costs depends on its shape:
+  *  - an unfiltered sparse or hybrid request against a standing index
+  *    (docWeights persisted by the caller), on a table without derived
+  *    ids and without precomputed sparse hits, reads the index's
+  *    serving relation for that table ([[Bm25.Index.serving]]: payload,
+  *    vector and forward entries per chunk, built once): both legs scan
+  *    it, the sparse one scored by the SparseDot kernel, each leg
+  *    carries its payload through fusion, and the request runs as one
+  *    Spark job with no join;
+  *  - every other request builds its legs over the chunks table and
+  *    joins the payload back after fusion (a broadcast). Its sparse leg
+  *    depends on the index ([[Bm25.searchTopK]]): a standing one is a
+  *    narrow scan of its forward relation; a filtered request, or one
+  *    without a standing index, derives the index in-plan and scores by
+  *    the postings join, a broadcast of the query weights plus a
+  *    shuffle on chunk id. Dense mode is one scan either way.
   */
 object SearchEngine {
 
@@ -94,11 +103,52 @@ object SearchEngine {
       req.searchType, req.instruction)
     val qVec = TextFunctions.mockEmbeddingDouble(qText, req.vectorDim)
     chunks
-      .withColumn("score",
-        VectorFunctions.dot(col("vector"),
-          array(qVec.toIndexedSeq.map(lit): _*)))
+      .withColumn("score", VectorFunctions.dot(col("vector"), typedLit(qVec)))
       .orderBy(col("score").desc, col("chunk_id"))
       .limit(limit)
+  }
+
+  /** The payload a request answers with, content included: what the
+    * serving path carries from each leg through fusion. */
+  private val Payload = Seq("chunk_id", "doc_id", "path", "chunk_index",
+    "total_chunks", "path_id", "content")
+
+  /** The serving relation `search` scores an unfiltered sparse or hybrid
+    * request from ([[Bm25.Index.serving]]): one row per chunk with its
+    * payload, vector and forward entries; None when the request takes
+    * the in-plan path. That path stays for filtered requests (the stats
+    * must be the filtered corpus's), derived-id tables (J2 re-keys hits
+    * before the payload lookup), precomputed sparse hits, non-standing
+    * indexes, dense mode (already one scan), and tables missing a
+    * served column. */
+  private def servingRelation(chunks: DataFrame, req: SearchRequest,
+      index: Option[Bm25.Index],
+      precomputedSparseHits: Option[DataFrame]): Option[DataFrame] = {
+    val cols = Payload :+ "vector"
+    index.filter(i => i.isStanding && req.filters.isEmpty &&
+        Set("sparse", "hybrid")(req.searchMode) &&
+        precomputedSparseHits.isEmpty &&
+        !chunks.columns.contains("original_chunk_id") &&
+        cols.forall(chunks.columns.contains))
+      .map(_.serving(chunks.select(cols.map(col): _*), "chunk_id"))
+  }
+
+  /** A sparse or hybrid request answered from a serving relation: the
+    * same legs, ranks and fusion as the in-plan path, but each leg
+    * carries its payload, so there is no payload join and the request
+    * runs as one Spark job. */
+  private def servedFused(serving: DataFrame, req: SearchRequest,
+      fetchK: Int): DataFrame = {
+    val sparse = Bm25.topKScored(serving.select(Payload.map(col) :+
+      Bm25.forwardScore(col("fwd"), req.query).as("score"): _*),
+      "chunk_id", fetchK)
+    val fused = if (req.searchMode == "sparse") sparse
+      else Rrf.fuse(denseLeg(serving, req, fetchK)
+          .select(Payload.map(col) :+ col("score"): _*),
+        sparse, "chunk_id", "score", fetchK, req.rrfK,
+        wDense = req.wDense, wSparse = req.wSparse, carry = Payload.tail)
+    // the in-plan payload join is an inner equi-join, which drops a null id
+    fused.filter(col("chunk_id").isNotNull)
   }
 
   /** Sparse leg (W2): BM25 over chunk content — uses the ORIGINAL query
@@ -179,14 +229,73 @@ object SearchEngine {
   private def collapseBest(hits: DataFrame): DataFrame =
     hits.groupBy("chunk_id").agg(max("score").as("score"))
 
+  /** The fused hits of a request that does not take the serving path:
+    * legs over `filtered`, the sparse leg from `idx` or derived in-plan,
+    * then the payload joined back from `filtered`. */
+  private def inPlanFused(filtered: DataFrame, req: SearchRequest,
+      fetchK: Int, idx: Option[Bm25.Index],
+      precomputedSparseHits: Option[DataFrame]): DataFrame =
+    req.searchMode match {
+      case "dense" =>
+        // J2 applies to dense over a derived-id table too: re-key,
+        // collapse duplicates to the best hit, rebuild the payload —
+        // so all three modes answer with original chunk ids
+        if (!filtered.columns.contains("original_chunk_id"))
+          denseLeg(filtered, req, fetchK)
+        else collapseBest(remapToOriginal(
+            denseLeg(filtered, req, fetchK).select("chunk_id", "score"),
+            filtered))
+          // payload rows must honor P2 like the hits do (the reference
+          // merges the user filter into the payload scroll,
+          // payloads.py:60-74) — joining the unfiltered table could
+          // resurrect an excluded derived sibling's metadata
+          .join(payloadByOriginal(filtered), Seq("chunk_id"))
+      case "sparse" => sparseLeg(filtered, req, fetchK, idx)
+      case "hybrid" =>
+        // J2: on a derived-id table BOTH legs re-key to original ids
+        // before fusion, so dense and sparse hits actually meet. Leg
+        // ranks are assigned on the DERIVED retrieval lists FIRST
+        // (service.py:222-233 collects dense ranks pre-remap), then
+        // the remap carries them — re-ranking after the remap would
+        // tie-break equal scores by the original id instead of the
+        // retrieval order. Duplicate originals keep their best
+        // (lowest-rank) row, rank/score staying aligned since rank asc
+        // ↔ score desc within a leg.
+        val derived = filtered.columns.contains("original_chunk_id")
+        def prepared(leg: DataFrame): DataFrame =
+          if (!derived) leg
+          else remapToOriginal(
+              Rrf.ranked(leg, "chunk_id", "score"), filtered)
+            .groupBy("chunk_id")
+            .agg(min("rank").as("rank"), max("score").as("score"))
+        val d = prepared(
+          denseLeg(filtered, req, fetchK).select("chunk_id", "score"))
+        val s = prepared(
+          precomputedSparseHits.getOrElse(
+              rawSparseHits(filtered, req, fetchK, idx))
+            .select("chunk_id", "score"))
+        // J1 fusion, then payload enrichment from the dense-first union
+        Rrf.fuse(d, s, "chunk_id", "score", fetchK, req.rrfK,
+            preRanked = derived,
+            wDense = req.wDense, wSparse = req.wSparse)
+          .select("chunk_id", "score", "_dense_rank", "_sparse_rank",
+            "_dense_score", "_sparse_score")
+          // filtered for the same P2 reason as dense mode above
+          .join(payloadByOriginal(filtered), Seq("chunk_id")) // J3 payload
+      case other =>
+        throw new IllegalArgumentException(s"unknown search mode: $other")
+    }
+
   /** Full §3.1 plan over one collection's chunks table. Output columns:
     * doc_id, chunk_id, score, path, chunk_index, total_chunks, path_id
     * [+ content when included] [+ reranked_score when reranking].
     *
     * `sparseIndex`: the collection's standing BM25 index, used by
-    * unfiltered requests (see [[Bm25.searchTopK]] for which indexes get
-    * the forward scan); requests with `filters` derive the index over
-    * the filtered corpus in-plan.
+    * unfiltered requests (a standing index serves sparse and hybrid
+    * requests from its serving relation, see the Scale posture above;
+    * [[Bm25.searchTopK]] says which indexes get the forward scan);
+    * requests with `filters` derive the index over the filtered corpus
+    * in-plan.
     *
     * `precomputedSparseHits`: the RAW sparse-leg hits (chunk_id, score)
     * for THIS request — exactly what `rawSparseHits(filtered, req,
@@ -214,56 +323,12 @@ object SearchEngine {
     // (the hit set, not just the payload join, has to honor P2)
     val idx = if (req.filters.isEmpty) sparseIndex else None
 
-    val fused: DataFrame = req.searchMode match {
-      case "dense" =>
-        // J2 applies to dense over a derived-id table too: re-key,
-        // collapse duplicates to the best hit, rebuild the payload —
-        // so all three modes answer with original chunk ids
-        if (!chunks.columns.contains("original_chunk_id"))
-          denseLeg(filtered, req, fetchK)
-        else collapseBest(remapToOriginal(
-            denseLeg(filtered, req, fetchK).select("chunk_id", "score"),
-            filtered))
-          // payload rows must honor P2 like the hits do (the reference
-          // merges the user filter into the payload scroll,
-          // payloads.py:60-74) — joining the unfiltered table could
-          // resurrect an excluded derived sibling's metadata
-          .join(payloadByOriginal(filtered), Seq("chunk_id"))
-      case "sparse" => sparseLeg(filtered, req, fetchK, idx)
-      case "hybrid" =>
-        // J2: on a derived-id table BOTH legs re-key to original ids
-        // before fusion, so dense and sparse hits actually meet. Leg
-        // ranks are assigned on the DERIVED retrieval lists FIRST
-        // (service.py:222-233 collects dense ranks pre-remap), then
-        // the remap carries them — re-ranking after the remap would
-        // tie-break equal scores by the original id instead of the
-        // retrieval order. Duplicate originals keep their best
-        // (lowest-rank) row, rank/score staying aligned since rank asc
-        // ↔ score desc within a leg.
-        val derived = chunks.columns.contains("original_chunk_id")
-        def prepared(leg: DataFrame): DataFrame =
-          if (!derived) leg
-          else remapToOriginal(
-              Rrf.ranked(leg, "chunk_id", "score"), filtered)
-            .groupBy("chunk_id")
-            .agg(min("rank").as("rank"), max("score").as("score"))
-        val d = prepared(
-          denseLeg(filtered, req, fetchK).select("chunk_id", "score"))
-        val s = prepared(
-          precomputedSparseHits.getOrElse(
-              rawSparseHits(filtered, req, fetchK, idx))
-            .select("chunk_id", "score"))
-        // J1 fusion, then payload enrichment from the dense-first union
-        Rrf.fuse(d, s, "chunk_id", "score", fetchK, req.rrfK,
-            preRanked = derived,
-            wDense = req.wDense, wSparse = req.wSparse)
-          .select("chunk_id", "score", "_dense_rank", "_sparse_rank",
-            "_dense_score", "_sparse_score")
-          // filtered for the same P2 reason as dense mode above
-          .join(payloadByOriginal(filtered), Seq("chunk_id")) // J3 payload
-      case other =>
-        throw new IllegalArgumentException(s"unknown search mode: $other")
-    }
+    val fused: DataFrame =
+      servingRelation(chunks, req, idx, precomputedSparseHits) match {
+        case Some(serving) => servedFused(serving, req, fetchK)
+        case None =>
+          inPlanFused(filtered, req, fetchK, idx, precomputedSparseHits)
+      }
 
     val shaped = fused
       .filter(col("doc_id").isNotNull) // P5 malformed-row guard

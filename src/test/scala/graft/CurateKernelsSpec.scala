@@ -7,11 +7,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.{CentroidMatrix, GopherCounts, MinHashSignature, NGrams,
-  NearestCentroid, VectorFunctions => V}
+  NearestCentroid, QueryTerms, SparseDot, VectorFunctions => V}
 import graft.operators.Dedup.HashFamily
 
-/** Each curate kernel against the declarative formula it replaced, kept
-  * here as the reference: the two columns are computed side by side over
+/** Each curate kernel, and the BM25 forward scan's [[SparseDot]], against
+  * the declarative formula it replaced, kept here as the reference: the two columns are computed side by side over
   * the same rows and must be equal (`==` on the collected values, which
   * compares doubles by value and arrays element-wise), under whole-stage
   * codegen and with every code generator off. */
@@ -68,6 +68,14 @@ class CurateKernelsSpec extends SparkSpec {
       size(array_intersect(
         array(graft.operators.TextAnalysis.GopherStopWords.map(lit): _*),
         transform(words, lower(_)))).cast("double").as("r_n_stop_hits"))
+  }
+
+  /** The forward scan's lambda score: null for a doc with no query term. */
+  private def refSparseDot(fwd: Column, qTf: Map[String, Double]): Column = {
+    val inQuery = (x: Column) => x.getField("term").isin(qTf.keys.toSeq: _*)
+    when(exists(fwd, inQuery), aggregate(filter(fwd, inQuery), lit(0.0),
+      (acc, x) => acc + x.getField("weight") *
+        (element_at(typedLit(qTf), x.getField("term")) * x.getField("idf"))))
   }
 
   // ---- harness ----
@@ -239,6 +247,31 @@ class CurateKernelsSpec extends SparkSpec {
         assertStaged(q, classOf[GopherCounts], mode)
       }
     }
+  }
+
+  test("SparseDot equals the forward scan's aggregate(filter) score, null " +
+      "when no entry is a query term") {
+    val entry = StructType(Seq(StructField("term", StringType),
+      StructField("weight", DoubleType), StructField("idf", DoubleType)))
+    def e(t: String, w: Double, i: Double) = Row(t, w, i)
+    val df = spark.createDataFrame(rdd(Seq(null, Seq.empty,
+        Seq(e("zeta", 0.5, 1.5)), Seq(e("alpha", 0.3, 1.1)),
+        Seq(e("alpha", 0.1, 0.7), e("beta", 1.0 / 3, 2.9), e("gamma", 0.2, 0.4)),
+        Seq(e("beta", 1e-17, 3.0), e("delta", 7.25, 1e17), e("zeta", 0.1, 0.1)))
+      .map(Row(_))), StructType(Seq(StructField("fwd", ArrayType(entry)))))
+    val idx = graft.operators.Bm25.buildIndex(docs, "doc_id", "text")
+    val corpus = idx.forward.select("fwd")
+    val qTf = Map("alpha" -> 1.0, "beta" -> 2.0, "delta" -> 1.0) ++
+      idx.stats.select("term").as[String](org.apache.spark.sql.Encoders.STRING)
+        .head(3).map(_ -> 2.0)
+    inEveryMode { mode =>
+      for (input <- Seq(df, corpus))
+        assertSame(input, kernel(SparseDot(expr(col("fwd")),
+          new QueryTerms(qTf))), refSparseDot(col("fwd"), qTf), mode)
+    }
+    val fwd = expr(col("fwd"))
+    assert(SparseDot(fwd, new QueryTerms(qTf)) ==
+      SparseDot(fwd, new QueryTerms(qTf.toSeq.reverse.toMap)))
   }
 
   test("gopherQuality evaluates its counts kernel once per row") {

@@ -352,6 +352,50 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("an unfiltered sparse or hybrid request on a standing index runs " +
+      "as one Spark job over the serving relation: no join, no broadcast, " +
+      "no lambda, one sparsedot per plan") {
+    import graft.operators.Bm25
+    import graft.search.{Ingest, SearchEngine}
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    val table = Ingest.buildChunks(Tables.load(spark, dir, "documents"), "c1",
+      "doc_id", "text", dim = 32).cache()
+    val idx = Bm25.buildIndex(table, "chunk_id", "content",
+      pinStats = true).pin()
+    def audit(name: String, run: () => Any, jobs: Option[Int]): Unit = {
+      run() // builds the serving relation, off the measured run
+      val qr = QueryRun(spark, plans = true)(run())
+      jobs.foreach(j => assert(qr.counters.jobs == j, s"$name: ${qr.counters}"))
+      val executed = qr.plans.map(_.executedPlan.toString)
+      assert(executed.nonEmpty &&
+        executed.forall(p => !p.contains("Join") && !p.contains("BroadcastExchange")),
+        s"$name:\n" + executed.mkString("\n----\n"))
+      val plans = qr.plans.map(_.optimizedPlan)
+      assert(plans.forall(p => allExpressions(p).forall(_.collect {
+        case l: LambdaFunction => l }.isEmpty)),
+        s"$name plans a lambda:\n" + plans.mkString("\n----\n"))
+      // one sparse leg per request, so one kernel per plan: a filter on
+      // the score pushed below the cut would inline it into a second node
+      val perPlan = plans.map(p => allExpressions(p).map(_.collect {
+        case e: graft.functions.SparseDot => e }.size).sum)
+      assert(perPlan.contains(1) && perPlan.forall(_ <= 1),
+        s"$name evaluates sparsedot $perPlan times per plan:\n" +
+          plans.mkString("\n----\n"))
+    }
+    for (mode <- Seq("sparse", "hybrid"); rerank <- Seq(false, true)) {
+      val req = SearchEngine.SearchRequest(query = "data search engine",
+        searchMode = mode, k = 10, useReranker = rerank, vectorDim = 32)
+      audit(s"$mode rerank=$rerank", () =>
+        SearchEngine.search(table, req, sparseIndex = Some(idx)).collect(),
+        Some(1))
+    }
+    audit("searchTopK", () => Bm25.searchTopK(table, "chunk_id", "content",
+      "data search engine", 10, index = Some(idx)).collect(), Some(1))
+    assert(idx.servingsBuilt == 1)
+    idx.docWeights.unpersist()
+    table.unpersist()
+  }
+
   test("substring_dedup: probe side reads the cached window relation " +
       "and the duplicate semi-filter broadcasts") {
     val out = SparkEntry.queries("substring_dedup")(spark, dir)
@@ -625,12 +669,18 @@ class PlanAuditSpec extends SparkSpec {
       "multi-snippets / tuned ANN are cartesian-free with broadcast " +
       "query-side relations") {
     for (q <- Seq("search_boolean_tree", "spell_correct_d2",
-        "search_snippets_multi", "search_hybrid_weighted")) {
+        "search_snippets_multi")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
       assert(p.contains("BroadcastHashJoin") ||
         p.contains("BroadcastExchange"), s"$q has no broadcast:\n$p")
     }
+    // the weighted hybrid is served from its standing index's serving
+    // relation: no query-side relation and no payload join to broadcast
+    val hw = plan("search_hybrid_weighted")
+    assert(!hw.contains("Join") && !hw.contains("BroadcastExchange") &&
+      !hw.contains("CartesianProduct") && hw.contains("sparsedot("),
+      s"search_hybrid_weighted is not served join-free:\n$hw")
     // ann_tuned's FINAL plan is joinless by design: the sweep +
     // selection ran as bounded driver-side jobs, and the tuned run is
     // a probe-set-pruned scan + TakeOrderedAndProject — the probe IN

@@ -346,36 +346,122 @@ class SearchEngineSpec extends SparkSpec {
     assert(SearchEngine.search(chunks, req).collect().nonEmpty)
   }
 
-  test("search against a standing index (forward-scan sparse leg) " +
-      "returns the in-plan index's exact rows in every mode") {
-    // docs 6/7 are identical (tied scores on different chunk ids), doc 8
-    // is all stopwords (a zero-token chunk)
-    val more = docs.unionByName(Seq(
+  /** The standing-index fixture: docs 6/7 are identical (tied scores on
+    * different chunk ids), doc 8 is all stopwords (a chunk with no
+    * indexed term). */
+  private lazy val tiedTable = Ingest.buildChunks(docs.unionByName(Seq(
       (6L, "tomato sauce for spark clusters."),
       (7L, "tomato sauce for spark clusters."),
       (8L, "it is not what it was, but all of this is the same."))
-      .toDF("doc_id", "text"))
-    val table = Ingest.buildChunks(more, "c1", "doc_id", "text",
-      strategy = "recursive",
-      cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1,
-        maxTokens = 50),
-      dim = Dim).cache()
-    val standing = graft.operators.Bm25.buildIndex(table, "chunk_id",
-      "content", pinStats = true).pin()
-    // repeated terms; stopwords and unknown words only; k = 100 is
-    // above every query's match count
+      .toDF("doc_id", "text")), "c1", "doc_id", "text",
+    strategy = "recursive",
+    cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1, maxTokens = 50),
+    dim = Dim).cache()
+
+  private def pinned(table: org.apache.spark.sql.DataFrame) =
+    graft.operators.Bm25.buildIndex(table, "chunk_id", "content",
+      pinStats = true).pin()
+
+  test("search against a standing index (forward-scan sparse leg) " +
+      "returns the in-plan index's exact rows in every mode") {
+    val standing = pinned(tiedTable)
+    val rows = tiedTable.count().toInt
+    // repeated terms; stopwords and unknown words only (matches
+    // nothing); k = 1000 is above the row count
     val queries = Seq("spark join", "tomato tomato sauce spark",
       "the of and zzz")
-    for (q <- queries; mode <- Seq("dense", "sparse", "hybrid");
-         rerank <- Seq(false, true); k <- Seq(10, 100)) {
+    val cases = for (q <- queries; mode <- Seq("dense", "sparse", "hybrid");
+        k <- Seq(1, 10, 100, 1000)) yield (q, mode, k)
+    assert(cases.map(_._3).max > rows)
+    // every four consecutive cases (one query and mode, each k) cover
+    // the four rerank x includeContent settings
+    for (((q, mode, k), i) <- cases.zipWithIndex) {
       val req = SearchRequest(query = q, searchMode = mode, k = k,
-        useReranker = rerank, scoreThreshold = -1e9, vectorDim = Dim)
-      val inPlan = SearchEngine.search(table, req).collect().toSeq
-      val served = SearchEngine.search(table, req,
+        useReranker = i % 2 == 0, includeContent = i / 2 % 2 == 0,
+        scoreThreshold = -1e9, vectorDim = Dim)
+      val inPlan = SearchEngine.search(tiedTable, req).collect().toSeq
+      val served = SearchEngine.search(tiedTable, req,
         sparseIndex = Some(standing)).collect().toSeq
-      assert(served == inPlan, s"q='$q' mode=$mode rerank=$rerank k=$k")
+      assert(served == inPlan, s"q='$q' mode=$mode k=$k $req")
     }
+    // the tie and the matchless query are exercised, not vacuous
+    val tie = SearchEngine.search(tiedTable, SearchRequest(
+        query = "tomato sauce clusters", searchMode = "sparse", k = 2,
+        vectorDim = Dim), sparseIndex = Some(standing)).collect()
+    assert(tie.map(_.getAs[Double]("score")).distinct.length == 1 &&
+      tie.map(_.getAs[String]("chunk_id")).distinct.length == 2)
+    assert(SearchEngine.search(tiedTable, SearchRequest(
+        query = "the of and zzz", searchMode = "sparse", vectorDim = Dim),
+      sparseIndex = Some(standing)).collect().isEmpty)
+    // searchMany: per-collection standing indexes against none
+    val req = SearchRequest(query = "tomato spark", searchMode = "hybrid",
+      k = 6, scoreThreshold = -1e9, vectorDim = Dim)
+    val colls = Seq("a" -> tiedTable, "b" -> chunks)
+    val other = pinned(chunks)
+    assert(SearchEngine.searchMany(colls, req,
+        indexes = Map("a" -> standing, "b" -> other)).collect().toSeq ==
+      SearchEngine.searchMany(colls, req).collect().toSeq)
     standing.docWeights.unpersist()
-    table.unpersist()
+    other.docWeights.unpersist()
+  }
+
+  test("a standing index builds its serving relation once per table; " +
+      "a non-standing index never builds one") {
+    val standing = pinned(tiedTable)
+    val unpinned = graft.operators.Bm25.buildIndex(tiedTable, "chunk_id",
+      "content")
+    assert(!unpinned.isStanding)
+    for (q <- Seq("spark", "tomato sauce", "spark");
+         mode <- Seq("sparse", "hybrid", "dense")) {
+      val req = SearchRequest(query = q, searchMode = mode, k = 3,
+        vectorDim = Dim)
+      SearchEngine.search(tiedTable, req, sparseIndex = Some(standing))
+        .collect()
+      SearchEngine.search(tiedTable, req, sparseIndex = Some(unpinned))
+        .collect()
+    }
+    // filtered requests keep the in-plan path
+    SearchEngine.search(tiedTable, SearchRequest(query = "spark",
+      searchMode = "hybrid", filters = Map("doc_id" -> "1"), vectorDim = Dim),
+      sparseIndex = Some(standing)).collect()
+    assert(standing.servingsBuilt == 1)
+    assert(unpinned.servingsBuilt == 0 && !unpinned.forwardBuilt)
+    standing.docWeights.unpersist()
+  }
+
+  test("a new table generation gets its own serving relation and serves " +
+      "no stale rows") {
+    val root = java.nio.file.Files.createTempDirectory("serving").toString
+    Ingest.reindexSwap(spark, tiedTable, root)
+    val gen1 = Ingest.readCurrent(spark, root)
+    val idx1 = pinned(gen1)
+    val req = SearchRequest(query = "tomato spark sauce",
+      searchMode = "hybrid", k = 20, scoreThreshold = -1e9, vectorDim = Dim)
+    SearchEngine.search(gen1, req, sparseIndex = Some(idx1)).collect()
+    // generation 2 drops docs 6/7 and rewrites doc 4 under the same ids
+    val docs2 = docs.filter(col("doc_id") =!= 4L).unionByName(
+      Seq((4L, "spark tomato sauce tuning for gardeners.")).toDF("doc_id", "text"))
+    Ingest.reindexSwap(spark, Ingest.buildChunks(docs2, "c1", "doc_id", "text",
+      strategy = "recursive",
+      cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1, maxTokens = 50),
+      dim = Dim), root)
+    val gen2 = Ingest.readCurrent(spark, root)
+    val current = gen2.select("chunk_id", "content").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val idx2 = pinned(gen2)
+    val served = SearchEngine.search(gen2, req.copy(includeContent = true),
+      sparseIndex = Some(idx2)).collect()
+    assert(served.toSeq == SearchEngine.search(gen2,
+      req.copy(includeContent = true)).collect().toSeq)
+    // the old index asked for the new table builds a second relation,
+    // whose payload is the new generation's
+    val stale = SearchEngine.search(gen2, req.copy(includeContent = true),
+      sparseIndex = Some(idx1)).collect()
+    assert(idx1.servingsBuilt == 2 && idx2.servingsBuilt == 1)
+    for (r <- served ++ stale)
+      assert(current.get(r.getAs[String]("chunk_id"))
+        .contains(r.getAs[String]("content")), r)
+    assert(served.exists(_.getAs[String]("content").contains("gardeners")))
+    Seq(idx1, idx2).foreach(_.docWeights.unpersist())
   }
 }

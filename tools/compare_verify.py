@@ -6,7 +6,9 @@ Usage: python3 tools/compare_verify.py <dirA> <dirB>
 Each query's parquet output is read with its parquet schema. Column names
 and types must match exactly, and the rows must match as multisets: rows are
 sorted, and values are compared by type and by exact value (floats bit for
-bit, NaN equal to NaN, -0.0 unequal to 0.0). oracle_sql.json must match too. Prints one line per
+bit, NaN equal to NaN, -0.0 unequal to 0.0). oracle_sql.json must match too.
+A failed.json (Verify's record of the queries that failed) on either side is
+a difference, one line per failed query. Prints one line per
 differing query and exits 1 on any difference, 0 when every output is
 identical. This is the quick equivalence gate for changes that claim
 "outputs unchanged"; tools/check_oracle.py remains the correctness gate
@@ -86,6 +88,12 @@ def main():
                 diffs.setdefault(name, []).append("oracle SQL differs")
     elif any(os.path.exists(p) for p in oracle):
         diffs["oracle_sql.json"] = ["present on one side only"]
+    for side, root in (("A", a), ("B", b)):
+        path = os.path.join(root, "failed.json")
+        if os.path.exists(path):
+            for name, err in sorted(json.load(open(path)).items()):
+                diffs.setdefault(name, []).append(
+                    f"failed in {side}: {err.splitlines()[0] if err else err}")
     for name, lines in sorted(diffs.items()):
         print(f"DIFF {name}: {lines[0]}")
         for line in lines[1:]:
