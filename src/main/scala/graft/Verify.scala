@@ -1,12 +1,17 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * fails is named, with its error, in failed.json (written only when one
-  * fails); the exit status does not change. */
+  * fails); the exit status does not change. A filtered run merges its
+  * results into an earlier failed.json: the queries it ran drop out of
+  * it or replace their entry, the others keep theirs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated query-name filter for fast local
@@ -45,8 +50,15 @@ object Verify {
     def obj(kv: Iterable[(String, String)]): String =
       kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     val failedJson = Paths.get(s"$outDir/failed.json")
-    if (failed.isEmpty) Files.deleteIfExists(failedJson)
-    else Files.writeString(failedJson, obj(failed))
+    // a filtered run reran only its own queries: the others' earlier
+    // failures still stand
+    val earlier = only.filter(_ => Files.exists(failedJson)).toSeq
+      .flatMap(ran => new ObjectMapper().readValue(failedJson.toFile,
+          classOf[java.util.Map[String, String]]).asScala
+        .filterNot { case (name, _) => ran(name) })
+    val allFailed = (earlier ++ failed).sortBy(_._1)
+    if (allFailed.isEmpty) Files.deleteIfExists(failedJson)
+    else Files.writeString(failedJson, obj(allFailed))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       obj(SparkEntry.oracleSqlFor(spark, sfDir)))
     spark.stop()

@@ -188,7 +188,9 @@ object Bm25 {
     * [[searchTopK]] scores from. */
   final case class Index(stats: DataFrame, docWeights: DataFrame) {
     @volatile private var fwd: DataFrame = _
-    @volatile private var servings = Map.empty[LogicalPlan, DataFrame]
+    // per canonicalized table plan: None once asked, the relation once built
+    @volatile private var servings =
+      Map.empty[LogicalPlan, Option[DataFrame]]
 
     /** True when the caller persisted `docWeights`: the standing-index
       * pattern (cache + materialize once, serve many requests). */
@@ -222,33 +224,42 @@ object Bm25 {
       * reference's point that holds vector, sparse vector and payload
       * together (ref packages/vecpipe/sparse.py:118-156): `table` left
       * joined to [[forward]] on `idCol` = id, so each table row carries
-      * its `fwd` entries (null when it has no positive-weight term). It
-      * is localCheckpointed, in at most as many partitions as `table`
-      * has, on the first call for each canonicalized plan of `table`
-      * and kept for the index's lifetime, like
-      * [[forward]]: a request then reads payload, vector and sparse
-      * entries from one leaf, with no join. A table under a new path (a
+      * its `fwd` entries (null when it has no positive-weight term). A
+      * request then reads payload, vector and sparse entries from one
+      * leaf, with no join.
+      *
+      * The relation pays off only when one (index, table) pair serves
+      * many requests, so it is built on the SECOND call for each
+      * canonicalized plan of `table`: the first call answers None and
+      * its request keeps the in-plan path, and an index that serves one
+      * request per table (a rebuilt-per-batch index probed once) never
+      * pays for the join. The built relation is localCheckpointed, in
+      * at most as many partitions as `table` has, and kept for the
+      * index's lifetime, like [[forward]]. A table under a new path (a
       * new generation) is a new plan and gets its own relation. */
-    def serving(table: DataFrame, idCol: String): DataFrame = {
+    def serving(table: DataFrame, idCol: String): Option[DataFrame] = {
       require(isStanding, "a serving relation needs a standing index")
       val key = table.queryExecution.analyzed.canonicalized
-      servings.getOrElse(key, synchronized {
-        servings.getOrElse(key, {
-          // no more partitions than the table: each partition of the
-          // relation costs every request a task per leg, and the join's
-          // shuffle would spread a small table over all of them
-          val rel = table.join(forward.withColumnRenamed("id", idCol),
-              Seq(idCol), "left")
-            .coalesce(math.max(1, table.rdd.getNumPartitions))
-            .localCheckpoint()
-          servings += key -> rel
-          rel
-        })
+      servings.get(key).flatten.orElse(synchronized {
+        servings.get(key) match {
+          case None => servings += key -> None; None
+          case Some(built @ Some(_)) => built
+          case Some(None) =>
+            // no more partitions than the table: each partition of the
+            // relation costs every request a task per leg, and the
+            // join's shuffle would spread a small table over all of them
+            val rel = table.join(forward.withColumnRenamed("id", idCol),
+                Seq(idCol), "left")
+              .coalesce(math.max(1, table.rdd.getNumPartitions))
+              .localCheckpoint()
+            servings += key -> Some(rel)
+            Some(rel)
+        }
       })
     }
 
     /** How many serving relations this index has built. */
-    private[graft] def servingsBuilt: Int = servings.size
+    private[graft] def servingsBuilt: Int = servings.values.count(_.isDefined)
 
     /** Cache and materialize `docWeights` and build [[forward]], off
       * the query clock: the one way to make a standing index. */

@@ -26,17 +26,19 @@ import graft.pipeline.Predicates
   *    (docWeights persisted by the caller), on a table without derived
   *    ids and without precomputed sparse hits, reads the index's
   *    serving relation for that table ([[Bm25.Index.serving]]: payload,
-  *    vector and forward entries per chunk, built once): both legs scan
-  *    it, the sparse one scored by the SparseDot kernel, each leg
-  *    carries its payload through fusion, and the request runs as one
-  *    Spark job with no join;
-  *  - every other request builds its legs over the chunks table and
-  *    joins the payload back after fusion (a broadcast). Its sparse leg
-  *    depends on the index ([[Bm25.searchTopK]]): a standing one is a
-  *    narrow scan of its forward relation; a filtered request, or one
-  *    without a standing index, derives the index in-plan and scores by
-  *    the postings join, a broadcast of the query weights plus a
-  *    shuffle on chunk id. Dense mode is one scan either way.
+  *    vector and forward entries per chunk, built once, on the second
+  *    such request for the table): both legs scan it, the sparse one
+  *    scored by the SparseDot kernel, each leg carries its payload
+  *    through fusion, and the request runs as one Spark job with no
+  *    join;
+  *  - every other request, the first eligible one on each table
+  *    included, builds its legs over the chunks table and joins the
+  *    payload back after fusion (a broadcast). Its sparse leg depends
+  *    on the index ([[Bm25.searchTopK]]): a standing one is a narrow
+  *    scan of its forward relation; a filtered request, or one without
+  *    a standing index, derives the index in-plan and scores by the
+  *    postings join, a broadcast of the query weights plus a shuffle on
+  *    chunk id. Dense mode is one scan either way.
   */
 object SearchEngine {
 
@@ -108,10 +110,14 @@ object SearchEngine {
       .limit(limit)
   }
 
+  /** The columns every answer has, in order (P6); content and the
+    * rerank score follow when asked for. */
+  private val Answer = Seq("doc_id", "chunk_id", "score", "path",
+    "chunk_index", "total_chunks", "path_id")
+
   /** The payload a request answers with, content included: what the
     * serving path carries from each leg through fusion. */
-  private val Payload = Seq("chunk_id", "doc_id", "path", "chunk_index",
-    "total_chunks", "path_id", "content")
+  private val Payload = Answer.filterNot(_ == "score") :+ "content"
 
   /** The serving relation `search` scores an unfiltered sparse or hybrid
     * request from ([[Bm25.Index.serving]]): one row per chunk with its
@@ -119,8 +125,10 @@ object SearchEngine {
     * the in-plan path. That path stays for filtered requests (the stats
     * must be the filtered corpus's), derived-id tables (J2 re-keys hits
     * before the payload lookup), precomputed sparse hits, non-standing
-    * indexes, dense mode (already one scan), and tables missing a
-    * served column. */
+    * indexes, dense mode (already one scan), tables missing a served
+    * column, and the first eligible request on each (index, table)
+    * pair: the relation is built on the second, once the pair has
+    * shown that it serves more than one request. */
   private def servingRelation(chunks: DataFrame, req: SearchRequest,
       index: Option[Bm25.Index],
       precomputedSparseHits: Option[DataFrame]): Option[DataFrame] = {
@@ -130,7 +138,7 @@ object SearchEngine {
         precomputedSparseHits.isEmpty &&
         !chunks.columns.contains("original_chunk_id") &&
         cols.forall(chunks.columns.contains))
-      .map(_.serving(chunks.select(cols.map(col): _*), "chunk_id"))
+      .flatMap(_.serving(chunks.select(cols.map(col): _*), "chunk_id"))
   }
 
   /** A sparse or hybrid request answered from a serving relation: the
@@ -146,7 +154,8 @@ object SearchEngine {
       else Rrf.fuse(denseLeg(serving, req, fetchK)
           .select(Payload.map(col) :+ col("score"): _*),
         sparse, "chunk_id", "score", fetchK, req.rrfK,
-        wDense = req.wDense, wSparse = req.wSparse, carry = Payload.tail)
+        wDense = req.wDense, wSparse = req.wSparse,
+        carry = Payload.filterNot(_ == "chunk_id"))
     // the in-plan payload join is an inner equi-join, which drops a null id
     fused.filter(col("chunk_id").isNotNull)
   }
@@ -340,10 +349,8 @@ object SearchEngine {
       .filter(col("score") >= req.scoreThreshold) // P3 before rerank
 
     // P6 projection + W5 rerank
-    val base = Seq("doc_id", "chunk_id", "score", "path", "chunk_index",
-      "total_chunks", "path_id")
     val withContent = req.includeContent || req.useReranker
-    val cols = if (withContent) base :+ "content" else base
+    val cols = if (withContent) Answer :+ "content" else Answer
     val projected = shaped.select(cols.map(col): _*)
 
     if (req.useReranker) {

@@ -363,7 +363,9 @@ class PlanAuditSpec extends SparkSpec {
     val idx = Bm25.buildIndex(table, "chunk_id", "content",
       pinStats = true).pin()
     def audit(name: String, run: () => Any, jobs: Option[Int]): Unit = {
-      run() // builds the serving relation, off the measured run
+      // off the measured run: the first request on the table takes the
+      // in-plan path, the second builds the serving relation
+      run(); run()
       val qr = QueryRun(spark, plans = true)(run())
       jobs.foreach(j => assert(qr.counters.jobs == j, s"$name: ${qr.counters}"))
       val executed = qr.plans.map(_.executedPlan.toString)
@@ -676,7 +678,10 @@ class PlanAuditSpec extends SparkSpec {
         p.contains("BroadcastExchange"), s"$q has no broadcast:\n$p")
     }
     // the weighted hybrid is served from its standing index's serving
-    // relation: no query-side relation and no payload join to broadcast
+    // relation: no query-side relation and no payload join to broadcast.
+    // The relation is built on the second request for its table, so
+    // the plan is taken from a second build of the query.
+    plan("search_hybrid_weighted")
     val hw = plan("search_hybrid_weighted")
     assert(!hw.contains("Join") && !hw.contains("BroadcastExchange") &&
       !hw.contains("CartesianProduct") && hw.contains("sparsedot("),
