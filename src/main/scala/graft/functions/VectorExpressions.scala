@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the vector-scoring hot path.
@@ -325,6 +325,120 @@ case class SparseDot(child: Expression, query: QueryTerms)
     copy(child = newChild)
 }
 
+/** A query weighted under one corpus's BM25 statistics, as an expression
+  * field: per query term its query weight `q_tf · idf` and its idf, the
+  * corpus's average document length, and BM25's `k1` and `b`. Compared
+  * by value and printed as a count and hash, like [[QueryTerms]]. */
+final class CorpusQuery(val terms: Map[String, (Double, Double)],
+    val avgDocLen: Double, val k1: Double, val b: Double) extends Serializable {
+  @transient private lazy val lookup: java.util.HashMap[UTF8String, Array[Double]] = {
+    val m = new java.util.HashMap[UTF8String, Array[Double]]()
+    terms.foreach { case (t, (qw, idf)) =>
+      m.put(UTF8String.fromString(t), Array(qw, idf)) }
+    m
+  }
+
+  /** `(q_tf · idf, idf)` of `term`, or null when it is not a query term. */
+  def get(term: UTF8String): Array[Double] = lookup.get(term)
+
+  override def equals(o: Any): Boolean = o match {
+    case q: CorpusQuery => terms == q.terms && avgDocLen == q.avgDocLen &&
+      k1 == q.k1 && b == q.b
+    case _ => false
+  }
+  override def hashCode: Int = (terms, avgDocLen, k1, b).hashCode
+  override def toString: String =
+    s"${terms.size} query terms, hash ${Integer.toHexString(hashCode)}"
+}
+
+/** [[SparseDot]] under statistics other than the ones the entries were
+  * weighted with: `fwd` is `ARRAY<STRUCT<term, tf, ...>>` and `docLen`
+  * the document's token count ([[graft.operators.Bm25.Index.forward]]).
+  * Each entry whose term is a query term gets its weight recomputed from
+  * `(tf, docLen)` and the query's idf and average document length, with
+  * the double operations, in the order, of the index build's weight
+  * column:
+  * `idf · (tf · (k1 + 1)) / (tf + k1 · ((1 − b) + b · docLen / avgdl))`,
+  * the norm 1.0 when avgdl is 0. An entry whose weight is not positive is
+  * skipped, as the index build drops it. The score folds
+  * `acc + weight · (q_tf · idf)` in entry order from 0.0, as SparseDot
+  * does, and is null when no entry is kept (or either input is null).
+  * The arithmetic is one Scala method, called by the interpreted and the
+  * generated code alike. */
+case class ReweightedSparseDot(left: Expression, right: Expression,
+    query: CorpusQuery) extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  private def entryType: Option[StructType] = left.dataType match {
+    case ArrayType(st: StructType, _) => Some(st)
+    case _ => None
+  }
+  @transient private lazy val termAt = entryType.get.fieldIndex("term")
+  @transient private lazy val tfAt = entryType.get.fieldIndex("tf")
+  @transient private lazy val width = entryType.get.size
+  private val k1p1 = query.k1 + 1.0
+  private val oneMinusB = 1.0 - query.b
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    def has(name: String, t: DataType) =
+      entryType.exists(_.find(_.name == name).exists(_.dataType == t))
+    if (has("term", StringType) && has("tf", LongType) &&
+        right.dataType == LongType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        "expected array<struct<term: string, tf: bigint, ...>> and bigint " +
+          s"inputs, got ${left.dataType.simpleString} / " +
+          right.dataType.simpleString)
+  }
+
+  def score(fwd: ArrayData, docLen: Long): java.lang.Double = {
+    val norm =
+      if (query.avgDocLen > 0.0)
+        oneMinusB + query.b * docLen.toDouble / query.avgDocLen
+      else 1.0
+    var acc = 0.0
+    var hit = false
+    var j = 0
+    while (j < fwd.numElements()) {
+      val e = fwd.getStruct(j, width)
+      val q = query.get(e.getUTF8String(termAt))
+      if (q != null) {
+        val tf = e.getLong(tfAt).toDouble
+        val weight = q(1) * (tf * k1p1) / (tf + query.k1 * norm)
+        if (weight > 0.0) {
+          acc = acc + weight * q(0)
+          hit = true
+        }
+      }
+      j += 1
+    }
+    if (hit) acc else null
+  }
+
+  override def nullSafeEval(fwd: Any, docLen: Any): Any =
+    score(fwd.asInstanceOf[ArrayData], docLen.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("reweighted", this,
+      classOf[ReweightedSparseDot].getName)
+    val s = ctx.freshName("s")
+    nullSafeCodeGen(ctx, ev, (fwd, docLen) =>
+      s"""
+         |java.lang.Double $s = $ref.score($fwd, $docLen);
+         |if ($s == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = $s.doubleValue(); }
+       """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): ReweightedSparseDot =
+    copy(left = newLeft, right = newRight)
+}
+
 object VectorExpressions {
   def dotExpr(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a),
@@ -332,6 +446,11 @@ object VectorExpressions {
 
   def sparseDotExpr(fwd: Column, query: QueryTerms): Column =
     ColumnBridge.column(SparseDot(ColumnBridge.expression(fwd), query))
+
+  def reweightedSparseDotExpr(fwd: Column, docLen: Column,
+      query: CorpusQuery): Column =
+    ColumnBridge.column(ReweightedSparseDot(ColumnBridge.expression(fwd),
+      ColumnBridge.expression(docLen), query))
 
   def cosineExpr(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(ColumnBridge.expression(a),

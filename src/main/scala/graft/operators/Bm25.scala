@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{QueryTerms, TextFunctions, VectorExpressions}
+import graft.functions.{CorpusQuery, QueryTerms, TextFunctions, VectorExpressions}
 
 /** BM25 sparse indexing and scoring as declarative DataFrame plans.
   *
@@ -185,32 +185,41 @@ object Bm25 {
     *
     * A STANDING index — one whose `docWeights` the caller has persisted
     * — also carries [[forward]], the per-doc forward relation
-    * [[searchTopK]] scores from. */
-  final case class Index(stats: DataFrame, docWeights: DataFrame) {
+    * [[searchTopK]] scores from.
+    *
+    * `corpus`: the analyzed plan of the corpus the index was built over
+    * ([[buildIndex]], [[indexFromPostings]]); None for an index assembled
+    * from parts or restored from disk. [[builtOver]] compares a table
+    * with it. */
+  final case class Index(stats: DataFrame, docWeights: DataFrame,
+      corpus: Option[LogicalPlan] = None) {
     @volatile private var fwd: DataFrame = _
-    // per canonicalized table plan: None once asked, the relation once built
-    @volatile private var servings =
-      Map.empty[LogicalPlan, Option[DataFrame]]
+    @volatile private var served: DataFrame = _
+    private var servingAsked = false // guarded by this
 
     /** True when the caller persisted `docWeights`: the standing-index
       * pattern (cache + materialize once, serve many requests). */
     def isStanding: Boolean = docWeights.storageLevel != StorageLevel.NONE
 
-    /** `(id, fwd ARRAY<STRUCT<term, weight, idf>>)`, one row per doc
-      * with at least one positive-weight term, entries sorted by term —
-      * the reference's per-chunk sparse vector point `{chunk_id,
-      * indices, values}` (ref packages/vecpipe/sparse.py:118-156) with
-      * the term's idf riding beside its weight. Built from docWeights ⨝
-      * stats and localCheckpointed on first call, so it is a leaf in
-      * every request plan; Spark's ContextCleaner drops its blocks once
-      * the index is garbage-collected. */
+    /** `(id, fwd ARRAY<STRUCT<term, weight, idf, tf>>, doc_len)`, one
+      * row per doc with at least one positive-weight term, entries
+      * sorted by term — the reference's per-chunk sparse vector point
+      * `{chunk_id, indices, values}` (ref
+      * packages/vecpipe/sparse.py:118-156) with the term's idf and tf
+      * riding beside its weight, and the doc's token count. `doc_len` is
+      * Σ tf over the entries, which is the whole count: idf > 0 for every
+      * df ≤ N, so every posting has a positive weight and is kept. Built
+      * from docWeights ⨝ stats and localCheckpointed on first call, so it
+      * is a leaf in every request plan; Spark's ContextCleaner drops its
+      * blocks once the index is garbage-collected. */
     def forward: DataFrame = {
       if (fwd == null) synchronized {
-        if (fwd == null) fwd = docWeights.select("id", "term", "weight")
+        if (fwd == null) fwd = docWeights.select("id", "term", "weight", "tf")
           .join(stats.select("term", "idf"), "term")
           .groupBy("id")
-          .agg(sort_array(collect_list(
-            struct(col("term"), col("weight"), col("idf")))).as("fwd"))
+          .agg(sort_array(collect_list(struct(col("term"), col("weight"),
+              col("idf"), col("tf")))).as("fwd"),
+            sum("tf").as("doc_len"))
           .localCheckpoint()
       }
       fwd
@@ -220,46 +229,53 @@ object Bm25 {
       * non-standing indexes never pay for it. */
     private[graft] def forwardBuilt: Boolean = fwd != null
 
+    /** Whether `table` is the corpus this index was built over: its
+      * analyzed plan canonicalizes like [[corpus]]. False when the
+      * corpus is unknown. */
+    def builtOver(table: DataFrame): Boolean =
+      corpus.exists(_.sameResult(table.queryExecution.analyzed))
+
     /** The serving relation of `table`, a standing index's answer to the
       * reference's point that holds vector, sparse vector and payload
-      * together (ref packages/vecpipe/sparse.py:118-156): `table` left
-      * joined to [[forward]] on `idCol` = id, so each table row carries
-      * its `fwd` entries (null when it has no positive-weight term). A
-      * request then reads payload, vector and sparse entries from one
-      * leaf, with no join.
+      * together (ref packages/vecpipe/sparse.py:118-156): the `cols` of
+      * `table` left joined to [[forward]] on `idCol` = id, so each table
+      * row carries its `fwd` entries and `doc_len` (null when it has no
+      * positive-weight term). A request then reads payload, vector and
+      * sparse entries from one leaf, with no join, and a filtered slice
+      * of it has what [[filteredForwardScore]] needs to score the slice
+      * under its own statistics. None when `table` is not the corpus the
+      * index was built over ([[builtOver]]): the entries are the
+      * corpus's.
       *
-      * The relation pays off only when one (index, table) pair serves
-      * many requests, so it is built on the SECOND call for each
-      * canonicalized plan of `table`: the first call answers None and
-      * its request keeps the in-plan path, and an index that serves one
-      * request per table (a rebuilt-per-batch index probed once) never
-      * pays for the join. The built relation is localCheckpointed, in
-      * at most as many partitions as `table` has, and kept for the
-      * index's lifetime, like [[forward]]. A table under a new path (a
-      * new generation) is a new plan and gets its own relation. */
-    def serving(table: DataFrame, idCol: String): Option[DataFrame] = {
+      * The relation pays off only when the index serves many requests,
+      * so it is built on the SECOND call: the first call answers None
+      * and its request keeps the in-plan path, and an index that serves
+      * one request (a rebuilt-per-batch index probed once) never pays
+      * for the join. The built relation is localCheckpointed, in at most
+      * as many partitions as `table` has, and kept for the index's
+      * lifetime, like [[forward]]. */
+    def serving(table: DataFrame, idCol: String,
+        cols: Seq[String]): Option[DataFrame] = {
       require(isStanding, "a serving relation needs a standing index")
-      val key = table.queryExecution.analyzed.canonicalized
-      servings.get(key).flatten.orElse(synchronized {
-        servings.get(key) match {
-          case None => servings += key -> None; None
-          case Some(built @ Some(_)) => built
-          case Some(None) =>
-            // no more partitions than the table: each partition of the
-            // relation costs every request a task per leg, and the
-            // join's shuffle would spread a small table over all of them
-            val rel = table.join(forward.withColumnRenamed("id", idCol),
-                Seq(idCol), "left")
-              .coalesce(math.max(1, table.rdd.getNumPartitions))
-              .localCheckpoint()
-            servings += key -> Some(rel)
-            Some(rel)
+      if (!builtOver(table)) None
+      else Option(served).orElse(synchronized {
+        if (served == null && servingAsked) {
+          val rows = table.select(cols.map(col): _*)
+          // no more partitions than the table: each partition of the
+          // relation costs every request a task per leg, and the
+          // join's shuffle would spread a small table over all of them
+          served = rows.join(forward.withColumnRenamed("id", idCol),
+              Seq(idCol), "left")
+            .coalesce(math.max(1, rows.rdd.getNumPartitions))
+            .localCheckpoint()
         }
+        servingAsked = true
+        Option(served)
       })
     }
 
-    /** How many serving relations this index has built. */
-    private[graft] def servingsBuilt: Int = servings.values.count(_.isDefined)
+    /** How many serving relations this index has built: 0 or 1. */
+    private[graft] def servingsBuilt: Int = if (served == null) 0 else 1
 
     /** Cache and materialize `docWeights` and build [[forward]], off
       * the query clock: the one way to make a standing index. */
@@ -352,6 +368,7 @@ object Bm25 {
     // — see tokExpr above.
     indexFrom(tfRows, tfRows.groupBy("term").agg(count(tokExpr).as("df")),
       counts, "_tot", p, pinStats)
+      .copy(corpus = Some(corpus.queryExecution.analyzed))
   }
 
   /** The assembly both index sources share: broadcast globals
@@ -454,7 +471,12 @@ object Bm25 {
     *    the stats are pinned in a single cached partition, since they
     *    feed both the query weighting and the doc weights; the cache
     *    manager dedupes by canonical plan, so repeated searches over
-    *    the same corpus reuse one entry.
+    *    the same corpus reuse one entry. Nothing ever unpersists that
+    *    entry: every distinct corpus leaves one cached stats relation
+    *    in the session, so an index-less caller that searches many
+    *    filtered slices (each its own corpus) grows the cache by one
+    *    per slice. `SearchEngine.search` avoids this for filtered
+    *    requests on a standing index ([[filteredForwardScore]]).
     *
     * The two are bit-identical: each term appears once per doc, unknown
     * terms have no entries on either side, weight > 0 ⇔ idf > 0, and
@@ -484,9 +506,51 @@ object Bm25 {
     * [[graft.functions.SparseDot]] kernel over the query's term
     * frequencies, null when no entry is a query term. */
   def forwardScore(fwd: Column, queryText: String): Column =
-    VectorExpressions.sparseDotExpr(fwd, new QueryTerms(
-      TextFunctions.tokenize(queryText).groupBy(identity)
-        .map { case (t, ts) => t -> ts.size.toDouble }))
+    VectorExpressions.sparseDotExpr(fwd, new QueryTerms(queryTf(queryText)))
+
+  /** The query's term frequencies, unknown terms included. */
+  private def queryTf(queryText: String): Map[String, Double] =
+    TextFunctions.tokenize(queryText).groupBy(identity)
+      .map { case (t, ts) => t -> ts.size.toDouble }
+
+  /** A query's score of `rows`, a filtered slice of an
+    * [[Index.serving]] relation, under the slice's OWN statistics: the
+    * filtered-corpus semantics of a filtered request, without the
+    * re-tokenize, shuffle and cached stats relation of an index built
+    * over the slice. One aggregate over `rows`, collected as one row
+    * (a Spark job, run here), gives N (the row count, zero-token rows
+    * included), Σ doc_len and each query term's df. It reads the slice
+    * in one task: a localCheckpointed relation reports no partitioning,
+    * so over its partitions the aggregate would exchange its partial
+    * rows, which AQE runs as a second job. A serving relation has at
+    * most its table's partitions, one for a table read from one file.
+    * idf, avgdl and the query weights follow on the driver with
+    * [[idfCol]]'s and [[indexFrom]]'s operations in their order (Spark's
+    * `log` is `StrictMath.log`). The [[graft.functions.ReweightedSparseDot]]
+    * kernel then re-weights each row's query-term entries under them.
+    * Bit-identical to [[searchTopK]] with an index built over the same
+    * rows: the entries of a row are its postings (see [[Index.forward]]),
+    * so df, N and Σ doc_len are the built index's, and the kernel sums
+    * the same products in the same term order. */
+  def filteredForwardScore(rows: DataFrame, queryText: String,
+      p: Params = Default): Column = {
+    val qTf = queryTf(queryText)
+    val terms = qTf.keys.toSeq.sorted
+    val r = rows.coalesce(1).agg(count(lit(1)),
+      coalesce(sum("doc_len"), lit(0L)) +:
+      terms.map(t => count(when(array_contains(col("fwd.term"), t), 1))): _*)
+      .collect()(0)
+    val n = r.getLong(0).toDouble
+    val avgDocLen = if (n > 0) r.getLong(1).toDouble / n else 0.0
+    val weights = terms.zipWithIndex.map { case (t, i) =>
+      val df = r.getLong(2 + i).toDouble
+      val idf = math.max(0.0,
+        StrictMath.log((n - df + 0.5) / (df + 0.5) + 1.0))
+      t -> ((qTf(t) * idf, idf))
+    }.toMap
+    VectorExpressions.reweightedSparseDotExpr(col("fwd"), col("doc_len"),
+      new CorpusQuery(weights, avgDocLen, p.k1, p.b))
+  }
 
   /** The top `k` rows of `scored` by (score desc, `idCol` asc), with the
     * null-score (non-matching) rows dropped AFTER the cut: nulls sort

@@ -22,23 +22,27 @@ import graft.pipeline.Predicates
   * correctness-equivalent of the reference's ANN (SURVEY.md §0); swap
   * in Knn.lshTopK bucketing for the approximate path. What else a
   * request costs depends on its shape:
-  *  - an unfiltered sparse or hybrid request against a standing index
-  *    (docWeights persisted by the caller), on a table without derived
-  *    ids and without precomputed sparse hits, reads the index's
-  *    serving relation for that table ([[Bm25.Index.serving]]: payload,
-  *    vector and forward entries per chunk, built once, on the second
-  *    such request for the table): both legs scan it, the sparse one
-  *    scored by the SparseDot kernel, each leg carries its payload
-  *    through fusion, and the request runs as one Spark job with no
-  *    join;
+  *  - a sparse or hybrid request against a standing index (docWeights
+  *    persisted by the caller) built over the table it searches, on a
+  *    table without derived ids and without precomputed sparse hits,
+  *    reads the index's serving relation for that table
+  *    ([[Bm25.Index.serving]]: payload, vector, forward entries and doc
+  *    length per chunk, built once, on the second such request for the
+  *    table): both legs scan it, each leg carries its payload through
+  *    fusion, and there is no join. Unfiltered, the sparse leg is
+  *    scored by the SparseDot kernel and the request runs as one Spark
+  *    job. Filtered on served columns, the legs scan the filtered rows;
+  *    one aggregate over them collects the filtered corpus's BM25
+  *    statistics, the ReweightedSparseDot kernel scores under them, and
+  *    the request runs as two jobs, with no tokenize and no shuffle;
   *  - every other request, the first eligible one on each table
-  *    included, builds its legs over the chunks table and joins the
-  *    payload back after fusion (a broadcast). Its sparse leg depends
-  *    on the index ([[Bm25.searchTopK]]): a standing one is a narrow
-  *    scan of its forward relation; a filtered request, or one without
-  *    a standing index, derives the index in-plan and scores by the
-  *    postings join, a broadcast of the query weights plus a shuffle on
-  *    chunk id. Dense mode is one scan either way.
+  *    included, builds its legs over the (filtered) chunks table and
+  *    joins the payload back after fusion (a broadcast). Its sparse leg
+  *    depends on the index ([[Bm25.searchTopK]]): a standing one is a
+  *    narrow scan of its forward relation; a filtered request, or one
+  *    without a standing index, derives the index in-plan and scores by
+  *    the postings join, a broadcast of the query weights plus a
+  *    shuffle on chunk id. Dense mode is one scan either way.
   */
 object SearchEngine {
 
@@ -119,39 +123,54 @@ object SearchEngine {
     * serving path carries from each leg through fusion. */
   private val Payload = Answer.filterNot(_ == "score") :+ "content"
 
-  /** The serving relation `search` scores an unfiltered sparse or hybrid
-    * request from ([[Bm25.Index.serving]]): one row per chunk with its
-    * payload, vector and forward entries; None when the request takes
-    * the in-plan path. That path stays for filtered requests (the stats
-    * must be the filtered corpus's), derived-id tables (J2 re-keys hits
-    * before the payload lookup), precomputed sparse hits, non-standing
-    * indexes, dense mode (already one scan), tables missing a served
-    * column, and the first eligible request on each (index, table)
-    * pair: the relation is built on the second, once the pair has
-    * shown that it serves more than one request. */
+  /** The serving relation `search` scores a sparse or hybrid request
+    * from ([[Bm25.Index.serving]]): one row per chunk with its payload,
+    * vector and forward entries; None when the request takes the
+    * in-plan path. Only the table the index was built over is served:
+    * the relation's entries and doc lengths are that table's. A
+    * filtered request is served when every filter field's root column
+    * is a served column, so the filter means the same on the relation
+    * as on the table. The in-plan path stays for
+    * other tables, filters on other columns, derived-id tables (J2
+    * re-keys hits before the payload lookup), precomputed sparse hits,
+    * non-standing indexes, dense mode (already one scan), tables missing
+    * a served column, and the first eligible request on an index: the
+    * relation is built on the second, once the index has shown that it
+    * serves more than one request. */
   private def servingRelation(chunks: DataFrame, req: SearchRequest,
       index: Option[Bm25.Index],
       precomputedSparseHits: Option[DataFrame]): Option[DataFrame] = {
     val cols = Payload :+ "vector"
-    index.filter(i => i.isStanding && req.filters.isEmpty &&
+    def served(field: String) =
+      cols.contains(Predicates.translatePath(field).takeWhile(_ != '.'))
+    index.filter(i => i.isStanding && req.filters.keys.forall(served) &&
         Set("sparse", "hybrid")(req.searchMode) &&
         precomputedSparseHits.isEmpty &&
         !chunks.columns.contains("original_chunk_id") &&
         cols.forall(chunks.columns.contains))
-      .flatMap(_.serving(chunks.select(cols.map(col): _*), "chunk_id"))
+      .flatMap(_.serving(chunks, "chunk_id", cols))
   }
 
   /** A sparse or hybrid request answered from a serving relation: the
     * same legs, ranks and fusion as the in-plan path, but each leg
-    * carries its payload, so there is no payload join and the request
-    * runs as one Spark job. */
+    * carries its payload, so there is no payload join. An unfiltered
+    * request scores with the index's own weights and runs as one Spark
+    * job; a filtered one scores the filtered rows under their own
+    * statistics ([[Bm25.filteredForwardScore]]), one more job. */
   private def servedFused(serving: DataFrame, req: SearchRequest,
       fetchK: Int): DataFrame = {
-    val sparse = Bm25.topKScored(serving.select(Payload.map(col) :+
-      Bm25.forwardScore(col("fwd"), req.query).as("score"): _*),
+    val (rows, score) =
+      if (req.filters.isEmpty)
+        (serving, Bm25.forwardScore(col("fwd"), req.query))
+      else {
+        val rows = serving.filter(Predicates.compile(req.filters))
+        (rows, Bm25.filteredForwardScore(rows, req.query))
+      }
+    val sparse = Bm25.topKScored(
+      rows.select(Payload.map(col) :+ score.as("score"): _*),
       "chunk_id", fetchK)
     val fused = if (req.searchMode == "sparse") sparse
-      else Rrf.fuse(denseLeg(serving, req, fetchK)
+      else Rrf.fuse(denseLeg(rows, req, fetchK)
           .select(Payload.map(col) :+ col("score"): _*),
         sparse, "chunk_id", "score", fetchK, req.rrfK,
         wDense = req.wDense, wSparse = req.wSparse,
@@ -299,12 +318,12 @@ object SearchEngine {
     * doc_id, chunk_id, score, path, chunk_index, total_chunks, path_id
     * [+ content when included] [+ reranked_score when reranking].
     *
-    * `sparseIndex`: the collection's standing BM25 index, used by
-    * unfiltered requests (a standing index serves sparse and hybrid
-    * requests from its serving relation, see the Scale posture above;
-    * [[Bm25.searchTopK]] says which indexes get the forward scan);
-    * requests with `filters` derive the index over the filtered corpus
-    * in-plan.
+    * `sparseIndex`: the collection's BM25 index. A standing one built
+    * over `chunks` serves sparse and hybrid requests, filtered ones too,
+    * from its serving relation (see the Scale posture above); otherwise
+    * unfiltered requests score with it ([[Bm25.searchTopK]] says which
+    * indexes get the forward scan) and filtered ones derive the index
+    * over the filtered corpus in-plan.
     *
     * `precomputedSparseHits`: the RAW sparse-leg hits (chunk_id, score)
     * for THIS request — exactly what `rawSparseHits(filtered, req,
@@ -322,20 +341,21 @@ object SearchEngine {
                graft.plugins.Providers.MockReranker(),
              sparseIndex: Option[Bm25.Index] = None,
              precomputedSparseHits: Option[DataFrame] = None): DataFrame = {
-    // P2: user metadata filters push into the scan
-    val filtered =
-      if (req.filters.isEmpty) chunks
-      else chunks.filter(Predicates.compile(req.filters))
     val fetchK = if (req.useReranker) candidateK(req.k) else req.k
-    // a standing index scores the WHOLE collection; with row filters in
-    // play the sparse leg must derive over the filtered corpus instead
-    // (the hit set, not just the payload join, has to honor P2)
-    val idx = if (req.filters.isEmpty) sparseIndex else None
 
     val fused: DataFrame =
-      servingRelation(chunks, req, idx, precomputedSparseHits) match {
+      servingRelation(chunks, req, sparseIndex, precomputedSparseHits) match {
         case Some(serving) => servedFused(serving, req, fetchK)
         case None =>
+          // P2: user metadata filters push into the scan
+          val filtered =
+            if (req.filters.isEmpty) chunks
+            else chunks.filter(Predicates.compile(req.filters))
+          // a standing index's weights are the WHOLE collection's; with
+          // row filters in play the in-plan sparse leg derives the index
+          // over the filtered corpus instead (the hit set, not just the
+          // payload join, has to honor P2)
+          val idx = if (req.filters.isEmpty) sparseIndex else None
           inPlanFused(filtered, req, fetchK, idx, precomputedSparseHits)
       }
 

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-import graft.functions.{CentroidMatrix, GopherCounts, MinHashSignature, NGrams,
-  NearestCentroid, QueryTerms, SparseDot, VectorFunctions => V}
+import graft.functions.{CentroidMatrix, CorpusQuery, GopherCounts,
+  MinHashSignature, NGrams, NearestCentroid, QueryTerms, ReweightedSparseDot,
+  SparseDot, VectorFunctions => V}
 import graft.operators.Dedup.HashFamily
 
 /** Each curate kernel, and the BM25 forward scan's [[SparseDot]], against
@@ -76,6 +77,26 @@ class CurateKernelsSpec extends SparkSpec {
     when(exists(fwd, inQuery), aggregate(filter(fwd, inQuery), lit(0.0),
       (acc, x) => acc + x.getField("weight") *
         (element_at(typedLit(qTf), x.getField("term")) * x.getField("idf"))))
+  }
+
+  /** The filtered-corpus BM25 score of a forward row as the index build
+    * and the postings join compute it: each query-term entry's weight
+    * from its tf, the row's doc_len and the query's idf and avgdl, kept
+    * when positive, summed with its query weight in entry order. */
+  private def refReweighted(fwd: Column, docLen: Column,
+      q: CorpusQuery): Column = {
+    val qWeight = typedLit(q.terms.map { case (t, (w, _)) => t -> w })
+    val idf = typedLit(q.terms.map { case (t, (_, i)) => t -> i })
+    val norm = when(lit(q.avgDocLen) > 0.0, lit(1.0 - q.b) +
+        lit(q.b) * docLen.cast("double") / lit(q.avgDocLen))
+      .otherwise(lit(1.0))
+    val weight = (x: Column) => element_at(idf, x.getField("term")) *
+      (x.getField("tf").cast("double") * lit(q.k1 + 1.0)) /
+      (x.getField("tf").cast("double") + lit(q.k1) * norm)
+    val kept = (x: Column) =>
+      x.getField("term").isin(q.terms.keys.toSeq: _*) && weight(x) > 0.0
+    when(exists(fwd, kept), aggregate(filter(fwd, kept), lit(0.0),
+      (acc, x) => acc + weight(x) * element_at(qWeight, x.getField("term"))))
   }
 
   // ---- harness ----
@@ -272,6 +293,41 @@ class CurateKernelsSpec extends SparkSpec {
     val fwd = expr(col("fwd"))
     assert(SparseDot(fwd, new QueryTerms(qTf)) ==
       SparseDot(fwd, new QueryTerms(qTf.toSeq.reverse.toMap)))
+  }
+
+  test("ReweightedSparseDot equals the index build's weights re-derived " +
+      "under other statistics, null when no entry is kept") {
+    val entry = StructType(Seq(StructField("term", StringType),
+      StructField("weight", DoubleType), StructField("idf", DoubleType),
+      StructField("tf", LongType)))
+    def e(t: String, tf: Long) = Row(t, 0.5, 1.5, tf)
+    val df = spark.createDataFrame(rdd(Seq(
+        Row(null, null), Row(Seq.empty, 0L), Row(Seq(e("zeta", 2)), 2L),
+        Row(null, 3L), Row(Seq(e("alpha", 3)), 3L),
+        Row(Seq(e("alpha", 1), e("beta", 4), e("gamma", 2)), 7L),
+        Row(Seq(e("beta", 1), e("delta", 9), e("zeta", 1)), 41L))),
+      StructType(Seq(StructField("fwd", ArrayType(entry)),
+        StructField("doc_len", LongType))))
+    val idx = graft.operators.Bm25.buildIndex(docs, "doc_id", "text")
+    val corpus = idx.forward.select("fwd", "doc_len")
+    val vocab = idx.stats.select("term").as[String](
+      org.apache.spark.sql.Encoders.STRING).head(3)
+    // delta's idf is 0: its entries weigh 0 and are skipped
+    val terms = Map("alpha" -> ((1.1 / 3, 1.1)), "beta" -> ((5.8, 2.9)),
+      "delta" -> ((0.0, 0.0))) ++ vocab.map(_ -> ((0.7, 0.35)))
+    for (avgDocLen <- Seq(4.75, 0.0)) {
+      val q = new CorpusQuery(terms, avgDocLen, 1.5, 0.75)
+      inEveryMode { mode =>
+        for (input <- Seq(df, corpus))
+          assertSame(input, kernel(ReweightedSparseDot(expr(col("fwd")),
+              expr(col("doc_len")), q)),
+            refReweighted(col("fwd"), col("doc_len"), q), mode)
+      }
+    }
+    assert(new CorpusQuery(terms, 1.0, 1.5, 0.75) ==
+      new CorpusQuery(terms.toSeq.reverse.toMap, 1.0, 1.5, 0.75))
+    assert(new CorpusQuery(terms, 1.0, 1.5, 0.75) !=
+      new CorpusQuery(terms, 2.0, 1.5, 0.75))
   }
 
   test("gopherQuality evaluates its counts kernel once per row") {

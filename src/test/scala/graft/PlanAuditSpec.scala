@@ -398,6 +398,54 @@ class PlanAuditSpec extends SparkSpec {
     table.unpersist()
   }
 
+  test("a filtered hybrid request on a standing index runs as two Spark " +
+      "jobs over the serving relation: no exchange, join, generate or " +
+      "lambda, one reweighted sparse dot") {
+    import graft.operators.Bm25
+    import graft.search.{Ingest, SearchEngine}
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    val chunks = Ingest.buildChunks(Tables.load(spark, dir, "documents"), "c1",
+      "doc_id", "text", dim = 32)
+    for (parts <- Seq(1, 2)) {
+      val table = chunks.repartition(parts).cache()
+      val idx = Bm25.buildIndex(table, "chunk_id", "content",
+        pinStats = true).pin()
+      val req = SearchEngine.SearchRequest(query = "data search engine",
+        searchMode = "hybrid", k = 10, vectorDim = 32)
+      def run(r: SearchEngine.SearchRequest) =
+        SearchEngine.search(table, r, sparseIndex = Some(idx)).collect()
+      // two warm requests build the serving relation
+      run(req); run(req)
+      for (filter <- Seq("chunk_index" -> "<= 0", "doc_id" -> "1*")) {
+        val name = s"$parts partitions, filter $filter"
+        val qr = QueryRun(spark, plans = true)(
+          run(req.copy(filters = Map(filter))))
+        val executed = qr.plans.map(_.executedPlan.toString)
+        // the filtered stats aggregate, then the request
+        assert(qr.counters.jobs == 2, s"$name: ${qr.counters}\n" +
+          executed.mkString("\n----\n"))
+        assert(executed.size == 2 && executed.forall(p =>
+            Seq("Exchange", "Join", "Generate").forall(!p.contains(_))),
+          s"$name:\n" + executed.mkString("\n----\n"))
+        val plans = qr.plans.map(_.optimizedPlan)
+        assert(plans.forall(p => allExpressions(p).forall(_.collect {
+          case l: LambdaFunction => l }.isEmpty)),
+          s"$name plans a lambda:\n" + plans.mkString("\n----\n"))
+        // the request's sparse leg scores under the filtered statistics,
+        // once: a filter on the score pushed below the cut would inline
+        // the kernel into a second node
+        val kernels = plans.flatMap(p => allExpressions(p).flatMap(_.collect {
+          case e: graft.functions.ReweightedSparseDot => e.prettyName
+          case e: graft.functions.SparseDot => e.prettyName }))
+        assert(kernels == Seq("reweightedsparsedot"), s"$name: $kernels\n" +
+          plans.mkString("\n----\n"))
+      }
+      assert(idx.servingsBuilt == 1)
+      idx.docWeights.unpersist()
+      table.unpersist()
+    }
+  }
+
   test("substring_dedup: probe side reads the cached window relation " +
       "and the duplicate semi-filter broadcasts") {
     val out = SparkEntry.queries("substring_dedup")(spark, dir)

@@ -349,14 +349,18 @@ class SearchEngineSpec extends SparkSpec {
   /** The standing-index fixture: docs 6/7 are identical (tied scores on
     * different chunk ids), doc 8 is all stopwords (a chunk with no
     * indexed term). */
-  private lazy val tiedTable = Ingest.buildChunks(docs.unionByName(Seq(
+  private lazy val tiedDocs = docs.unionByName(Seq(
       (6L, "tomato sauce for spark clusters."),
       (7L, "tomato sauce for spark clusters."),
       (8L, "it is not what it was, but all of this is the same."))
-      .toDF("doc_id", "text")), "c1", "doc_id", "text",
-    strategy = "recursive",
-    cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1, maxTokens = 50),
-    dim = Dim).cache()
+    .toDF("doc_id", "text"))
+
+  private def chunked(maxTokens: Int) = Ingest.buildChunks(tiedDocs, "c1",
+    "doc_id", "text", strategy = "recursive",
+    cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1,
+      maxTokens = maxTokens), dim = Dim).cache()
+
+  private lazy val tiedTable = chunked(50)
 
   private def pinned(table: org.apache.spark.sql.DataFrame) =
     graft.operators.Bm25.buildIndex(table, "chunk_id", "content",
@@ -423,10 +427,12 @@ class SearchEngineSpec extends SparkSpec {
       SearchEngine.search(tiedTable, req, sparseIndex = Some(unpinned))
         .collect()
     }
-    // filtered requests keep the in-plan path
-    SearchEngine.search(tiedTable, SearchRequest(query = "spark",
-      searchMode = "hybrid", filters = Map("doc_id" -> "1"), vectorDim = Dim),
-      sparseIndex = Some(standing)).collect()
+    // a filtered request reads the same relation; one filtering on a
+    // column the relation does not carry keeps the in-plan path
+    for (f <- Seq("doc_id" -> "1", "collection_id" -> "c1"))
+      SearchEngine.search(tiedTable, SearchRequest(query = "spark",
+        searchMode = "hybrid", filters = Map(f), vectorDim = Dim),
+        sparseIndex = Some(standing)).collect()
     assert(standing.servingsBuilt == 1)
     assert(unpinned.servingsBuilt == 0 && !unpinned.forwardBuilt)
     standing.docWeights.unpersist()
@@ -464,17 +470,82 @@ class SearchEngineSpec extends SparkSpec {
     val Seq(first2, served) = twice(gen2, idx2)
     assert(served == first2 &&
       served == SearchEngine.search(gen2, req).collect().toSeq)
-    // the old index asked for the new table builds a second relation,
-    // whose payload is the new generation's. An index built for another
-    // table is not detected, and its two paths rank differently (the
-    // in-plan sparse leg ranks the index's chunks, the relation only the
-    // table's), so only the payload is compared here
-    val stale = twice(gen2, idx1).flatten
-    assert(idx1.servingsBuilt == 2 && idx2.servingsBuilt == 1)
-    for (r <- served ++ stale)
+    // the old index asked for the new table builds no relation: it was
+    // built over another table, so both requests go in-plan and answer
+    // the same rows, with the new generation's payload
+    val Seq(stale1, stale2) = twice(gen2, idx1)
+    assert(stale2 == stale1)
+    assert(idx1.servingsBuilt == 1 && idx2.servingsBuilt == 1)
+    for (r <- served ++ stale1)
       assert(current.get(r.getAs[String]("chunk_id"))
         .contains(r.getAs[String]("content")), r)
     assert(served.exists(_.getAs[String]("content").contains("gardeners")))
     Seq(idx1, idx2).foreach(_.docWeights.unpersist())
+  }
+
+  /** [[tiedTable]]'s documents in chunks of at most 8 tokens, so that
+    * chunk_index filters select: docs 6/7 tie, doc 8's chunks have no
+    * indexed term. */
+  private lazy val smallChunks = chunked(8)
+
+  test("a filtered request served from the standing relation answers the " +
+      "in-plan path's exact rows") {
+    val standing = pinned(smallChunks)
+    val query = "spark tomato spark sauce"
+    // the first two requests on the pair build the serving relation
+    for (_ <- 0 until 2)
+      SearchEngine.search(smallChunks, SearchRequest(query = query,
+        searchMode = "hybrid", vectorDim = Dim), sparseIndex = Some(standing))
+        .collect()
+    assert(standing.servingsBuilt == 1)
+    val single = smallChunks.filter(col("doc_id") === "3")
+      .select("chunk_id").head().getString(0)
+    val filters = Seq(Map("chunk_index" -> "<= 0"), Map("chunk_index" -> "<= 1"),
+      Map("doc_id" -> "[5-8]*"), Map("doc_id" -> "9*"),
+      Map("chunk_id" -> single), Map("collection_id" -> "c1"))
+    def run(f: Map[String, Any], mode: String, k: Int, rerank: Boolean,
+        index: Option[graft.operators.Bm25.Index]) =
+      SearchEngine.search(smallChunks, SearchRequest(query = query,
+        searchMode = mode, k = k, useReranker = rerank,
+        includeContent = rerank, scoreThreshold = -1e9, filters = f,
+        vectorDim = Dim), sparseIndex = index).collect().toSeq
+    val answered = for (f <- filters; mode <- Seq("sparse", "hybrid");
+        k <- Seq(1, 10, 100); rerank <- Seq(false, true)) yield {
+      val inPlan = run(f, mode, k, rerank, None)
+      val served = run(f, mode, k, rerank, Some(standing))
+      assert(served == inPlan, s"filters=$f mode=$mode k=$k rerank=$rerank")
+      (f, served)
+    }
+    assert(standing.servingsBuilt == 1)
+    // the filters select what they are meant to: nothing, one chunk, and
+    // a set holding the tie and zero-token chunks, which N counts
+    val rows = answered.groupBy(_._1).view.mapValues(_.flatMap(_._2)).toMap
+    assert(rows(Map("doc_id" -> "9*")).isEmpty)
+    assert(rows(Map("chunk_id" -> single)).map(_.getAs[String]("chunk_id"))
+      .toSet == Set(single))
+    assert(smallChunks.filter(col("doc_id") === "8").count() > 0)
+    val tie = run(Map("doc_id" -> "[5-8]*"), "sparse", 100, false,
+      Some(standing)).groupBy(_.getAs[Double]("score")).values
+    assert(tie.exists(_.map(_.getAs[String]("doc_id")).toSet == Set("6", "7")))
+    for ((f, bound) <- filters.take(2).zip(Seq(0, 1)))
+      assert(rows(f).forall(_.getAs[Int]("chunk_index") <= bound))
+    standing.docWeights.unpersist()
+  }
+
+  test("filtered requests served from a standing index leave no cached " +
+      "relation behind") {
+    val standing = pinned(smallChunks)
+    val req = SearchRequest(query = "spark tomato", searchMode = "hybrid",
+      vectorDim = Dim)
+    for (_ <- 0 until 2)
+      SearchEngine.search(smallChunks, req, sparseIndex = Some(standing))
+        .collect()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    for (f <- Seq("chunk_index" -> "<= 0", "chunk_index" -> "<= 1",
+        "doc_id" -> "1*", "doc_id" -> "[2-4]*", "chunk_id" -> "5_0"))
+      SearchEngine.search(smallChunks, req.copy(filters = Map(f)),
+        sparseIndex = Some(standing)).collect()
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    standing.docWeights.unpersist()
   }
 }
