@@ -28,10 +28,13 @@ final case class QueryRun[T](value: T, wallSec: Double,
   * window is exact for them.
   *
   * Listener events arrive asynchronously, but in the order they were
-  * posted, on one queue shared with the query execution listeners. When
-  * the body returns, a marker job is started; once the listener sees it,
-  * every event the body posted has been delivered, so the record is
-  * complete without a sleep. The marker itself is not counted. */
+  * posted, on one queue shared with the query execution listeners. A
+  * marker job opens the record before the body runs, so events that
+  * earlier work posted but the queue had not yet delivered stay out of
+  * it (a query execution that ended just before the run, say). When
+  * the body returns, a second marker job is started; once the listener
+  * sees it, every event the body posted has been delivered, so the
+  * record is complete without a sleep. The markers are not counted. */
 object QueryRun {
 
   /** Spark work of one run: jobs, completed stages, ended tasks, task run
@@ -64,13 +67,17 @@ object QueryRun {
     val capture = new Capture(nextMarker.incrementAndGet().toString, plans)
     sc.addSparkListener(capture)
     if (plans) spark.listenerManager.register(capture)
+    def markerJob(marker: String): Unit = {
+      sc.setLocalProperty(MarkerKey, marker)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+    }
     try {
+      markerJob(capture.openMarker)
       val t0 = System.nanoTime()
       val value = body
       val wallSec = (System.nanoTime() - t0) / 1e9
-      sc.setLocalProperty(MarkerKey, capture.marker)
-      try sc.parallelize(Seq(0), 1).count()
-      finally sc.setLocalProperty(MarkerKey, null)
+      markerJob(capture.marker)
       require(capture.drained.await(60, TimeUnit.SECONDS),
         "Spark listener events did not arrive")
       QueryRun(value, wallSec, capture.counters, capture.stageInfos.toSeq,
@@ -81,14 +88,16 @@ object QueryRun {
     }
   }
 
-  /** Counts from its construction until the marker job starts. Events
-    * are handled on the listener bus thread only; the caller reads the
-    * fields after `drained`, and nothing changes them after that. */
+  /** Counts from the start of the opening marker job until the closing
+    * one starts. Events are handled on the listener bus thread only; the
+    * caller reads the fields after `drained`, and nothing changes them
+    * after that. */
   private final class Capture(val marker: String, keepPlans: Boolean)
       extends SparkListener with QueryExecutionListener {
+    val openMarker = s"$marker-open"
     private val from = System.currentTimeMillis()
     private val countedStages = mutable.HashSet.empty[Int]
-    private var closed = false
+    private var opened, closed = false
     val drained = new CountDownLatch(1)
     private var jobs, stages, tasks = 0
     private var taskMs, shuffleRead, shuffleWrite, spill, peak = 0L
@@ -98,18 +107,22 @@ object QueryRun {
     def counters: Counters = Counters(jobs, stages, tasks, taskMs,
       shuffleRead, shuffleWrite, spill, peak)
 
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (!closed) {
-        if (Option(e.properties).exists(_.getProperty(MarkerKey) == marker)) {
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val mark = Option(e.properties).map(_.getProperty(MarkerKey))
+      if (!opened) opened = mark.contains(openMarker)
+      else if (!closed) {
+        if (mark.contains(marker)) {
           closed = true
           drained.countDown()
-        } else if (e.time >= from) {
+        } else {
           // a job that started before the run is a straggler of earlier
-          // work; its stages and tasks stay out too
+          // work: its start came before the opening marker's, and its
+          // stages and tasks stay out too
           jobs += 1
           countedStages ++= e.stageIds
         }
       }
+    }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       if (!closed && countedStages(e.stageInfo.stageId)) {
@@ -131,7 +144,7 @@ object QueryRun {
 
     override def onSuccess(funcName: String, qe: QueryExecution,
                            durationNs: Long): Unit =
-      if (keepPlans && !closed) executions += qe
+      if (keepPlans && opened && !closed) executions += qe
 
     override def onFailure(funcName: String, qe: QueryExecution,
                            exception: Exception): Unit = ()

@@ -135,6 +135,68 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** A query vector as an expression field: compared by value (bit for
+  * bit, `java.util.Arrays.equals`), so two requests for the same vector
+  * canonicalize alike, and printed as its length and hash, so a plan
+  * string stays short at any dimension. */
+final class QueryVector(val values: Array[Double]) extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case q: QueryVector => java.util.Arrays.equals(values, q.values)
+    case _ => false
+  }
+  override def hashCode: Int = java.util.Arrays.hashCode(values)
+  override def toString: String =
+    s"${values.length} dims, hash ${Integer.toHexString(hashCode)}"
+}
+
+/** [[DotProduct]] of a float/double array with a query vector held as a
+  * value field, not a literal: Σ vᵢ·qᵢ over the shorter length, from
+  * 0.0 in index order, in double, so bit-identical to
+  * `DotProduct(child, typedLit(q))`; null when the array is. The
+  * generated code reaches the vector through a reference, so every
+  * query generates the same code text, and a prepared plan takes a new
+  * query by swapping this field. */
+case class QueryDot(child: Expression, query: QueryVector)
+    extends UnaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = child.nullable
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case t =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"expected an array<float|double> input, got ${t.simpleString}")
+  }
+
+  @transient private lazy val isFloat =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  def dot(v: ArrayData): Double = {
+    val q = query.values
+    val n = math.min(v.numElements(), q.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)) * q(i)
+      i += 1
+    }
+    s
+  }
+
+  override def nullSafeEval(v: Any): Any = dot(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("queryDot", this, classOf[QueryDot].getName)
+    defineCodeGen(ctx, ev, v => s"$ref.dot($v)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): QueryDot =
+    copy(child = newChild)
+}
+
 /** A centroid matrix as an expression field: compared by value (bit
   * for bit, `java.util.Arrays.deepEquals`), so two fits with equal
   * centroids canonicalize alike, and printed as its shape, so a plan
@@ -443,6 +505,9 @@ object VectorExpressions {
   def dotExpr(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a),
       ColumnBridge.expression(b)))
+
+  def queryDotExpr(v: Column, query: QueryVector): Column =
+    ColumnBridge.column(QueryDot(ColumnBridge.expression(v), query))
 
   def sparseDotExpr(fwd: Column, query: QueryTerms): Column =
     ColumnBridge.column(SparseDot(ColumnBridge.expression(fwd), query))

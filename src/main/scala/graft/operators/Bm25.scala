@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{CorpusQuery, QueryTerms, TextFunctions, VectorExpressions}
+import graft.plans.PreparedPlan
 
 /** BM25 sparse indexing and scoring as declarative DataFrame plans.
   *
@@ -36,6 +37,9 @@ import graft.functions.{CorpusQuery, QueryTerms, TextFunctions, VectorExpression
 object Bm25 {
   final case class Params(k1: Double = 1.5, b: Double = 0.75)
   val Default: Params = Params()
+
+  /** How many request shapes an [[Index]] keeps a prepared plan for. */
+  val MaxPreparedShapes = 16
 
   /** Explode a corpus into (id, term) rows, duplicates preserved. */
   def tokens(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -185,7 +189,10 @@ object Bm25 {
     *
     * A STANDING index — one whose `docWeights` the caller has persisted
     * — also carries [[forward]], the per-doc forward relation
-    * [[searchTopK]] scores from.
+    * [[searchTopK]] scores from, the [[serving]] relation of the table
+    * it was built over, and the prepared plans of the request shapes
+    * served from that relation ([[preparedPlan]]). All three are fields
+    * of the index object: they are built on demand and dropped with it.
     *
     * `corpus`: the analyzed plan of the corpus the index was built over
     * ([[buildIndex]], [[indexFromPostings]]); None for an index assembled
@@ -276,6 +283,30 @@ object Bm25 {
 
     /** How many serving relations this index has built: 0 or 1. */
     private[graft] def servingsBuilt: Int = if (served == null) 0 else 1
+
+    /** The plans prepared over [[serving]]'s relation, one per request
+      * shape, least recently used first. */
+    private val prepared = new java.util.LinkedHashMap[AnyRef, PreparedPlan](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[AnyRef, PreparedPlan]): Boolean =
+        size > MaxPreparedShapes
+    }
+
+    /** The plan prepared for a request `shape` (a value-compared key the
+      * caller defines) over [[serving]]'s relation, if one is kept. A
+      * prepared plan reads only that relation, so it lives as long as
+      * the index; at most [[MaxPreparedShapes]] are kept, and the least
+      * recently used one is dropped first. */
+    def preparedPlan(shape: AnyRef): Option[PreparedPlan] =
+      prepared.synchronized(Option(prepared.get(shape)))
+
+    /** Keep `plan` as the prepared plan of `shape`. */
+    def keepPreparedPlan(shape: AnyRef, plan: PreparedPlan): Unit =
+      prepared.synchronized(prepared.put(shape, plan))
+
+    /** How many request shapes have a prepared plan. */
+    private[graft] def preparedShapes: Int = prepared.synchronized(prepared.size)
 
     /** Cache and materialize `docWeights` and build [[forward]], off
       * the query clock: the one way to make a standing index. */
@@ -506,7 +537,10 @@ object Bm25 {
     * [[graft.functions.SparseDot]] kernel over the query's term
     * frequencies, null when no entry is a query term. */
   def forwardScore(fwd: Column, queryText: String): Column =
-    VectorExpressions.sparseDotExpr(fwd, new QueryTerms(queryTf(queryText)))
+    VectorExpressions.sparseDotExpr(fwd, queryTerms(queryText))
+
+  /** The [[graft.functions.SparseDot]] parameter of a query. */
+  def queryTerms(queryText: String): QueryTerms = new QueryTerms(queryTf(queryText))
 
   /** The query's term frequencies, unknown terms included. */
   private def queryTf(queryText: String): Map[String, Double] =

@@ -202,13 +202,21 @@ object Dedup {
     * per candidate doc, which [[jaccardOfSets]] reads. The pairs (read
     * by the id filter and the verify) and the candidate sets (read by
     * both verify sides) are localCheckpointed, not cached: nothing
-    * stays pinned in the session's cache after the call. */
-  def ngramJaccardFrom(sh: DataFrame, pairs: DataFrame): DataFrame = {
+    * stays pinned in the session's cache after the call.
+    *
+    * `fewDocs`: the caller bounds `sh` to a few docs (a result page), so
+    * both verify joins broadcast the set rows and stream the pairs. Left
+    * to AQE, each join would broadcast whichever side's shuffle stage
+    * happened to finish first, and the executed plan would change from
+    * run to run. */
+  def ngramJaccardFrom(sh: DataFrame, pairs: DataFrame,
+                       fewDocs: Boolean = false): DataFrame = {
     val cands = pinCandidates(pairs)
     val sets = candidateRows(sh, cands, "id_a", "id_b")
       .groupBy("id").agg(collect_set("shingle").as("shingles"))
       .localCheckpoint()
-    jaccardOfSets(cands.pairs, sets, sets)
+    val side = if (fewDocs) broadcast(sets) else sets
+    jaccardOfSets(cands.pairs, side, side)
   }
 
   /** Corpus-level exact span dedup (the C4/RefinedWeb "line dedup"
@@ -483,10 +491,12 @@ object Dedup {
     * time and stores them beside the postings; query time pays only
     * banding + verify over the (bounded) id set the caller passed.
     * `sh` and `sigs` must cover the same ids (typically both filtered
-    * to a candidate page of a standing corpus-wide relation). */
+    * to a candidate page of a standing corpus-wide relation).
+    * `fewDocs`: see [[ngramJaccardFrom]]. */
   def minhashNearDupsFromSigs(sh: DataFrame, sigs: DataFrame,
                               numHashes: Int, bands: Int,
-                              threshold: Double): DataFrame = {
+                              threshold: Double,
+                              fewDocs: Boolean = false): DataFrame = {
     // cheap guard (ADVICE r14): a stale or mismatched standing
     // signature artifact must fail LOUDLY, not silently mis-band —
     // every signature array must be numHashes wide. A map-side
@@ -498,7 +508,8 @@ object Dedup {
         numHashes,
       lit(s"precomputed signature width != numHashes=$numHashes " +
         "(stale or mismatched standing artifact)")).isNull)
-    ngramJaccardFrom(sh, minhashCandidates(checked, numHashes, bands))
+    ngramJaccardFrom(sh, minhashCandidates(checked, numHashes, bands),
+        fewDocs)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }

@@ -887,8 +887,9 @@ object SearchQueries {
         .localCheckpoint()
       val sigsCand = collapseSigs(s, dir).join(candIds, "id")
         .localCheckpoint()
+      // the verify's set rows are the ≤ 50 page docs': broadcast them
       val pairs = Dedup.minhashNearDupsFromSigs(shCand, sigsCand,
-          numHashes = 16, bands = 8, threshold = 0.5)
+          numHashes = 16, bands = 8, threshold = 0.5, fewDocs = true)
         .select(col("id_a"), col("id_b"))
       val sym = pairs.unionByName(
         pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))

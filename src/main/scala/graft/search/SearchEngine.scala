@@ -3,9 +3,10 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{QueryDot, QueryVector, SparseDot, TextFunctions, VectorExpressions}
 import graft.operators.{Bm25, Rrf}
 import graft.pipeline.Predicates
+import graft.plans.PreparedPlan
 
 /** The core retrieval query (SURVEY.md §3.1) as ONE DataFrame plan:
   * dense cosine top-k ⊕ BM25 sparse top-k → RRF fusion → shaping →
@@ -22,19 +23,31 @@ import graft.pipeline.Predicates
   * correctness-equivalent of the reference's ANN (SURVEY.md §0); swap
   * in Knn.lshTopK bucketing for the approximate path. What else a
   * request costs depends on its shape:
-  *  - a sparse or hybrid request against a standing index (docWeights
+  *  - a request in any mode against a standing index (docWeights
   *    persisted by the caller) built over the table it searches, on a
   *    table without derived ids and without precomputed sparse hits,
   *    reads the index's serving relation for that table
   *    ([[Bm25.Index.serving]]: payload, vector, forward entries and doc
   *    length per chunk, built once, on the second such request for the
-  *    table): both legs scan it, each leg carries its payload through
+  *    table): every leg scans it, each leg carries its payload through
   *    fusion, and there is no join. Unfiltered, the sparse leg is
   *    scored by the SparseDot kernel and the request runs as one Spark
   *    job. Filtered on served columns, the legs scan the filtered rows;
   *    one aggregate over them collects the filtered corpus's BM25
   *    statistics, the ReweightedSparseDot kernel scores under them, and
   *    the request runs as two jobs, with no tokenize and no shuffle;
+  *  - among those, an unfiltered request without the reranker is
+  *    answered from a PREPARED plan once its shape has been served
+  *    before on the index ([[Bm25.Index.preparedPlan]]; a shape is the
+  *    request minus its query: mode, k, content, fusion knobs, score
+  *    threshold, path filter and vector dimension). The first served
+  *    request of a shape plans in full and keeps its final physical
+  *    plan; each later one binds its query terms and query vector into
+  *    it ([[graft.plans.PreparedPlan]]) and skips building the
+  *    DataFrame, analysis, optimization and physical planning, which
+  *    were most of a served request's driver time. Prepared plans read
+  *    only the serving relation and live as long as the index, at most
+  *    [[Bm25.MaxPreparedShapes]] of them;
   *  - every other request, the first eligible one on each table
   *    included, builds its legs over the (filtered) chunks table and
   *    joins the payload back after fusion (a broadcast). Its sparse leg
@@ -104,15 +117,18 @@ object SearchEngine {
 
   /** Dense leg (W1): cosine top-k via the deterministic mock embedding
     * of the (instruction-formatted) query. */
-  def denseLeg(chunks: DataFrame, req: SearchRequest, limit: Int): DataFrame = {
-    val qText = formatQuery(req.denseQuery.getOrElse(req.query),
-      req.searchType, req.instruction)
-    val qVec = TextFunctions.mockEmbeddingDouble(qText, req.vectorDim)
+  def denseLeg(chunks: DataFrame, req: SearchRequest, limit: Int): DataFrame =
     chunks
-      .withColumn("score", VectorFunctions.dot(col("vector"), typedLit(qVec)))
+      .withColumn("score",
+        VectorExpressions.queryDotExpr(col("vector"), queryVector(req)))
       .orderBy(col("score").desc, col("chunk_id"))
       .limit(limit)
-  }
+
+  /** The dense leg's query vector, as the [[QueryDot]] parameter. */
+  private def queryVector(req: SearchRequest): QueryVector =
+    new QueryVector(TextFunctions.mockEmbeddingDouble(
+      formatQuery(req.denseQuery.getOrElse(req.query), req.searchType,
+        req.instruction), req.vectorDim))
 
   /** The columns every answer has, in order (P6); content and the
     * rerank score follow when asked for. */
@@ -123,8 +139,8 @@ object SearchEngine {
     * serving path carries from each leg through fusion. */
   private val Payload = Answer.filterNot(_ == "score") :+ "content"
 
-  /** The serving relation `search` scores a sparse or hybrid request
-    * from ([[Bm25.Index.serving]]): one row per chunk with its payload,
+  /** The serving relation `search` scores a request from
+    * ([[Bm25.Index.serving]]): one row per chunk with its payload,
     * vector and forward entries; None when the request takes the
     * in-plan path. Only the table the index was built over is served:
     * the relation's entries and doc lengths are that table's. A
@@ -133,8 +149,8 @@ object SearchEngine {
     * as on the table. The in-plan path stays for
     * other tables, filters on other columns, derived-id tables (J2
     * re-keys hits before the payload lookup), precomputed sparse hits,
-    * non-standing indexes, dense mode (already one scan), tables missing
-    * a served column, and the first eligible request on an index: the
+    * non-standing indexes, tables missing a served column, and the first
+    * eligible request on an index: the
     * relation is built on the second, once the index has shown that it
     * serves more than one request. */
   private def servingRelation(chunks: DataFrame, req: SearchRequest,
@@ -144,39 +160,71 @@ object SearchEngine {
     def served(field: String) =
       cols.contains(Predicates.translatePath(field).takeWhile(_ != '.'))
     index.filter(i => i.isStanding && req.filters.keys.forall(served) &&
-        Set("sparse", "hybrid")(req.searchMode) &&
         precomputedSparseHits.isEmpty &&
         !chunks.columns.contains("original_chunk_id") &&
         cols.forall(chunks.columns.contains))
       .flatMap(_.serving(chunks, "chunk_id", cols))
   }
 
-  /** A sparse or hybrid request answered from a serving relation: the
-    * same legs, ranks and fusion as the in-plan path, but each leg
-    * carries its payload, so there is no payload join. An unfiltered
-    * request scores with the index's own weights and runs as one Spark
-    * job; a filtered one scores the filtered rows under their own
-    * statistics ([[Bm25.filteredForwardScore]]), one more job. */
+  /** A request answered from a serving relation: the same legs, ranks
+    * and fusion as the in-plan path, but each leg carries its payload, so
+    * there is no payload join. An unfiltered request scores with the
+    * index's own weights and runs as one Spark job; a filtered sparse or
+    * hybrid one scores the filtered rows under their own statistics
+    * ([[Bm25.filteredForwardScore]]), one more job. */
   private def servedFused(serving: DataFrame, req: SearchRequest,
       fetchK: Int): DataFrame = {
-    val (rows, score) =
-      if (req.filters.isEmpty)
-        (serving, Bm25.forwardScore(col("fwd"), req.query))
-      else {
-        val rows = serving.filter(Predicates.compile(req.filters))
-        (rows, Bm25.filteredForwardScore(rows, req.query))
-      }
-    val sparse = Bm25.topKScored(
-      rows.select(Payload.map(col) :+ score.as("score"): _*),
-      "chunk_id", fetchK)
-    val fused = if (req.searchMode == "sparse") sparse
-      else Rrf.fuse(denseLeg(rows, req, fetchK)
+    val rows =
+      if (req.filters.isEmpty) serving
+      else serving.filter(Predicates.compile(req.filters))
+    def sparse = {
+      val score =
+        if (req.filters.isEmpty) Bm25.forwardScore(col("fwd"), req.query)
+        else Bm25.filteredForwardScore(rows, req.query)
+      Bm25.topKScored(rows.select(Payload.map(col) :+ score.as("score"): _*),
+        "chunk_id", fetchK)
+    }
+    // the in-plan payload join is an inner equi-join, which drops a null
+    // id; dense mode has no payload join
+    def joined(df: DataFrame) = df.filter(col("chunk_id").isNotNull)
+    req.searchMode match {
+      case "dense" => denseLeg(rows, req, fetchK)
+      case "sparse" => joined(sparse)
+      case "hybrid" => joined(Rrf.fuse(denseLeg(rows, req, fetchK)
           .select(Payload.map(col) :+ col("score"): _*),
         sparse, "chunk_id", "score", fetchK, req.rrfK,
         wDense = req.wDense, wSparse = req.wSparse,
-        carry = Payload.filterNot(_ == "chunk_id"))
-    // the in-plan payload join is an inner equi-join, which drops a null id
-    fused.filter(col("chunk_id").isNotNull)
+        carry = Payload.filterNot(_ == "chunk_id")))
+      case other =>
+        throw new IllegalArgumentException(s"unknown search mode: $other")
+    }
+  }
+
+  /** What a prepared plan is kept for: a request minus its query, every
+    * field that shapes the plan, compared by value (doubles bit for bit). */
+  private final case class Shape(mode: String, k: Int, fetchK: Int,
+      includeContent: Boolean, rrfK: Int, wDense: Long, wSparse: Long,
+      scoreThreshold: Long, pathId: Option[String], vectorDim: Int)
+
+  private object Shape {
+    def apply(req: SearchRequest, fetchK: Int): Shape = {
+      def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+      Shape(req.searchMode, req.k, fetchK, req.includeContent, req.rrfK,
+        bits(req.wDense), bits(req.wSparse), bits(req.scoreThreshold),
+        req.pathId, req.vectorDim)
+    }
+  }
+
+  /** `prepared` bound to `req`'s query: its query terms into every
+    * [[SparseDot]], its query vector into every [[QueryDot]]. These are
+    * the only places a served request's query enters its plan. */
+  private def bind(prepared: PreparedPlan, req: SearchRequest): PreparedPlan = {
+    lazy val terms = Bm25.queryTerms(req.query)
+    lazy val vector = queryVector(req)
+    prepared.bind {
+      case e: SparseDot => e.copy(query = terms)
+      case e: QueryDot => e.copy(query = vector)
+    }
   }
 
   /** Sparse leg (W2): BM25 over chunk content — uses the ORIGINAL query
@@ -319,8 +367,9 @@ object SearchEngine {
     * [+ content when included] [+ reranked_score when reranking].
     *
     * `sparseIndex`: the collection's BM25 index. A standing one built
-    * over `chunks` serves sparse and hybrid requests, filtered ones too,
-    * from its serving relation (see the Scale posture above); otherwise
+    * over `chunks` serves requests, filtered ones too, from its serving
+    * relation, and keeps the prepared plans of unfiltered ones (see the
+    * Scale posture above); otherwise
     * unfiltered requests score with it ([[Bm25.searchTopK]] says which
     * indexes get the forward scan) and filtered ones derive the index
     * over the filtered corpus in-plan.
@@ -342,9 +391,33 @@ object SearchEngine {
              sparseIndex: Option[Bm25.Index] = None,
              precomputedSparseHits: Option[DataFrame] = None): DataFrame = {
     val fetchK = if (req.useReranker) candidateK(req.k) else req.k
+    val serving =
+      servingRelation(chunks, req, sparseIndex, precomputedSparseHits)
+    // an unfiltered, unreranked served request has a prepared plan per
+    // shape on its index: its query is the only thing that changes
+    val shape = for {
+      _ <- serving if req.filters.isEmpty && !req.useReranker
+      idx <- sparseIndex
+    } yield (idx, Shape(req, fetchK))
+    shape.flatMap { case (idx, s) => idx.preparedPlan(s) } match {
+      case Some(prepared) => bind(prepared, req).toDF(chunks.sparkSession)
+      case None =>
+        val out = plan(chunks, req, reranker, sparseIndex,
+          precomputedSparseHits, fetchK, serving)
+        for ((idx, s) <- shape; prepared <- PreparedPlan.of(out))
+          idx.keepPreparedPlan(s, prepared)
+        out
+    }
+  }
 
+  /** [[search]]'s DataFrame, built in full. */
+  private def plan(chunks: DataFrame, req: SearchRequest,
+      reranker: graft.plugins.Providers.Reranker,
+      sparseIndex: Option[Bm25.Index],
+      precomputedSparseHits: Option[DataFrame], fetchK: Int,
+      serving: Option[DataFrame]): DataFrame = {
     val fused: DataFrame =
-      servingRelation(chunks, req, sparseIndex, precomputedSparseHits) match {
+      serving match {
         case Some(serving) => servedFused(serving, req, fetchK)
         case None =>
           // P2: user metadata filters push into the scan

@@ -7,13 +7,14 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.{CentroidMatrix, CorpusQuery, GopherCounts,
-  MinHashSignature, NGrams, NearestCentroid, QueryTerms, ReweightedSparseDot,
-  SparseDot, VectorFunctions => V}
+  MinHashSignature, NGrams, NearestCentroid, QueryDot, QueryTerms, QueryVector,
+  ReweightedSparseDot, SparseDot, VectorFunctions => V}
 import graft.operators.Dedup.HashFamily
 
-/** Each curate kernel, and the BM25 forward scan's [[SparseDot]], against
-  * the declarative formula it replaced, kept here as the reference: the two columns are computed side by side over
-  * the same rows and must be equal (`==` on the collected values, which
+/** Each curate kernel, the BM25 forward scan's [[SparseDot]] and the dense
+  * leg's [[QueryDot]] against the formula it replaced, kept here as the
+  * reference: the two columns are computed side by side over the same
+  * rows and must be equal (`==` on the collected values, which
   * compares doubles by value and arrays element-wise), under whole-stage
   * codegen and with every code generator off. */
 class CurateKernelsSpec extends SparkSpec {
@@ -293,6 +294,25 @@ class CurateKernelsSpec extends SparkSpec {
     val fwd = expr(col("fwd"))
     assert(SparseDot(fwd, new QueryTerms(qTf)) ==
       SparseDot(fwd, new QueryTerms(qTf.toSeq.reverse.toMap)))
+  }
+
+  test("QueryDot equals DotProduct with the query vector as a literal, " +
+      "bit for bit, over float and double arrays of any length") {
+    val q = Array(0.25, -1.5, 1e-17, 3.0 / 7, 2.0)
+    val vectors = Seq(null, Seq.empty[Double], Seq(1.0), Seq(0.1, 0.2, 0.3),
+      Seq(1e17, 1.0, -1e17, 0.5, 1.0 / 3), Seq(1.5, -0.25, 9.0, 4.0, 0.1, 7.0))
+    for (t <- Seq(DoubleType, FloatType)) {
+      val df = spark.createDataFrame(rdd(vectors.map(v => Row(
+          if (v == null || t == DoubleType) v else v.map(_.toFloat)))),
+        StructType(Seq(StructField("v", ArrayType(t)))))
+      inEveryMode { mode =>
+        assertSame(df, kernel(QueryDot(expr(col("v")), new QueryVector(q))),
+          V.dot(col("v"), typedLit(q)), s"$mode ($t)")
+      }
+    }
+    val v = expr(col("v"))
+    assert(QueryDot(v, new QueryVector(q)) ==
+      QueryDot(v, new QueryVector(q.clone())))
   }
 
   test("ReweightedSparseDot equals the index build's weights re-derived " +

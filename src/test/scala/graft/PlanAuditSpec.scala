@@ -362,12 +362,17 @@ class PlanAuditSpec extends SparkSpec {
       "doc_id", "text", dim = 32).cache()
     val idx = Bm25.buildIndex(table, "chunk_id", "content",
       pinStats = true).pin()
-    def audit(name: String, run: () => Any, jobs: Option[Int]): Unit = {
+    def audit(name: String, run: () => Any, jobs: Option[Int],
+        prepared: Boolean): Unit = {
       // off the measured run: the first request on the table takes the
-      // in-plan path, the second builds the serving relation
+      // in-plan path, the second builds the serving relation (and, for
+      // a request that can be, prepares its shape's plan)
       run(); run()
       val qr = QueryRun(spark, plans = true)(run())
       jobs.foreach(j => assert(qr.counters.jobs == j, s"$name: ${qr.counters}"))
+      // a prepared request is audited through its one-node wrapper
+      assert(qr.plans.exists(_.executedPlan
+        .isInstanceOf[graft.plans.PreparedPlanExec]) == prepared, name)
       val executed = qr.plans.map(_.executedPlan.toString)
       assert(executed.nonEmpty &&
         executed.forall(p => !p.contains("Join") && !p.contains("BroadcastExchange")),
@@ -389,11 +394,57 @@ class PlanAuditSpec extends SparkSpec {
         searchMode = mode, k = 10, useReranker = rerank, vectorDim = 32)
       audit(s"$mode rerank=$rerank", () =>
         SearchEngine.search(table, req, sparseIndex = Some(idx)).collect(),
-        Some(1))
+        Some(1), prepared = !rerank)
     }
     audit("searchTopK", () => Bm25.searchTopK(table, "chunk_id", "content",
-      "data search engine", 10, index = Some(idx)).collect(), Some(1))
+      "data search engine", 10, index = Some(idx)).collect(), Some(1),
+      prepared = false)
     assert(idx.servingsBuilt == 1)
+    idx.docWeights.unpersist()
+    table.unpersist()
+  }
+
+  test("a repeated request shape on a standing index is bound into its " +
+      "prepared plan: one node to optimize and plan, a copy of the " +
+      "prepared tree run, one Spark job") {
+    import graft.operators.Bm25
+    import graft.plans.{PreparedPlan, PreparedPlanExec}
+    import graft.search.{Ingest, SearchEngine}
+    val table = Ingest.buildChunks(Tables.load(spark, dir, "documents"), "c1",
+      "doc_id", "text", dim = 32).cache()
+    val idx = Bm25.buildIndex(table, "chunk_id", "content",
+      pinStats = true).pin()
+    for (mode <- Seq("dense", "sparse", "hybrid")) {
+      val req = SearchEngine.SearchRequest(query = "", searchMode = mode,
+        k = 10, vectorDim = 32)
+      def run(q: String) = SearchEngine.search(table, req.copy(query = q),
+        sparseIndex = Some(idx)).collect()
+      // off the measured runs: the first request on the table goes
+      // in-plan (the first mode's only), the first served one prepares
+      // the shape's plan
+      run("data"); run("search")
+      val runs = Seq("engine data", "query plan").map(q =>
+        QueryRun(spark, plans = true)(run(q)))
+      val bound = runs.map { qr =>
+        assert(qr.counters.jobs == 1, s"$mode: ${qr.counters}")
+        val Seq(qe) = qr.plans
+        // the optimizer and the planner saw one node, the prepared leaf
+        assert(qe.optimizedPlan.isInstanceOf[PreparedPlan], qe.optimizedPlan)
+        qe.executedPlan match {
+          case p: PreparedPlanExec => p.plan
+          case p => fail(s"$mode is not prepared:\n$p")
+        }
+      }
+      // each request ran its own copy of the prepared tree, and both
+      // copies come from one planning: their nodes link to the same
+      // logical nodes, those of the request that prepared the plan
+      val Seq(a, b) = bound
+      assert(!a.exists(n => b.exists(_ eq n)), s"$mode shares a node")
+      val (la, lb) = (a.flatMap(_.logicalLink), b.flatMap(_.logicalLink))
+      assert(la.nonEmpty && la.size == lb.size &&
+        la.zip(lb).forall { case (x, y) => x eq y }, s"$mode:\n$a\n$b")
+    }
+    assert(idx.preparedShapes == 3)
     idx.docWeights.unpersist()
     table.unpersist()
   }

@@ -102,6 +102,30 @@ class QueryRunSpec extends SparkSpec {
     assert(QueryRun(spark)(oneJob()).plans.isEmpty)
   }
 
+  test("the plans leave out a query that ended before the run while its " +
+      "events were still queued") {
+    // a listener slow on the earlier query's job start holds that query's
+    // execution-end event in the queue until after the run has begun
+    val sc = spark.sparkContext
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart)
+          : Unit = if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "queryrun-slow"))
+          Thread.sleep(1500)
+    }
+    sc.addSparkListener(slow)
+    try {
+      sc.setJobGroup("queryrun-slow", "an earlier query")
+      try spark.range(10).selectExpr("sum(id) AS earlier").collect()
+      finally sc.clearJobGroup()
+      val r = QueryRun(spark, plans = true)(
+        spark.range(10).selectExpr("sum(id) AS body").collect())
+      val plans = r.plans.map(_.analyzed.toString)
+      assert(plans.size == 1 && plans.head.contains("body"),
+        plans.mkString("\n----\n"))
+    } finally sc.removeSparkListener(slow)
+  }
+
   test("Bench's digest fits 1800 chars, parses as JSON and counts the " +
       "omitted rows") {
     val names = (1 to 305).map(i => f"q$i%03d_" + "x" * 35)

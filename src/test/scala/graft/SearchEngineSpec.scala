@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import graft.operators.Bm25
+import graft.plans.PreparedPlanExec
 import graft.search.{Ingest, SearchEngine}
 import graft.search.SearchEngine.SearchRequest
 
@@ -540,12 +543,211 @@ class SearchEngineSpec extends SparkSpec {
     for (_ <- 0 until 2)
       SearchEngine.search(smallChunks, req, sparseIndex = Some(standing))
         .collect()
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compared by id: the ContextCleaner may drop an earlier test's
+    // garbage-collected relation meanwhile, which a count would mix in
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     for (f <- Seq("chunk_index" -> "<= 0", "chunk_index" -> "<= 1",
         "doc_id" -> "1*", "doc_id" -> "[2-4]*", "chunk_id" -> "5_0"))
       SearchEngine.search(smallChunks, req.copy(filters = Map(f)),
         sparseIndex = Some(standing)).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    val added = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }
+    assert(added.isEmpty, added.values.mkString("\n"))
+    standing.docWeights.unpersist()
+  }
+
+  /** Whether `df` answers from a prepared plan. */
+  private def isPrepared(df: DataFrame) =
+    df.queryExecution.executedPlan.isInstanceOf[PreparedPlanExec]
+
+  /** Two requests on the (index, table) pair: the first goes in-plan, the
+    * second builds the serving relation. */
+  private def warmServing(table: DataFrame, idx: Bm25.Index): Unit =
+    for (_ <- 0 until 2)
+      SearchEngine.search(table, SearchRequest(query = "warm",
+        searchMode = "hybrid", k = 7, rrfK = 59, vectorDim = Dim),
+        sparseIndex = Some(idx)).collect()
+
+  test("a repeated request shape answers from its prepared plan the full " +
+      "path's exact rows, in every mode") {
+    val standing = pinned(tiedTable)
+    warmServing(tiedTable, standing)
+    val rows = tiedTable.count().toInt
+    // the first query of a shape prepares its plan; the others are
+    // bound into it: a tie, repeated terms, a query matching no term,
+    // and the first query again
+    val queries = Seq("spark join", "tomato sauce clusters",
+      "tomato tomato sauce spark", "the of and zzz", "spark join")
+    val ks = Seq(1, 10, 100, 1000)
+    assert(ks.max > rows)
+    for (mode <- Seq("dense", "sparse", "hybrid"); (k, i) <- ks.zipWithIndex) {
+      val shape = SearchRequest(query = "", searchMode = mode, k = k,
+        includeContent = i % 2 == 0, scoreThreshold = -1e9, vectorDim = Dim)
+      for ((q, j) <- queries.zipWithIndex) {
+        val req = shape.copy(query = q)
+        val df = SearchEngine.search(tiedTable, req,
+          sparseIndex = Some(standing))
+        assert(isPrepared(df) == (j > 0), s"q='$q' mode=$mode k=$k")
+        assert(df.collect().toSeq ==
+          SearchEngine.search(tiedTable, req).collect().toSeq,
+          s"q='$q' mode=$mode k=$k $req")
+      }
+    }
+    // the tie and the matchless query are exercised, not vacuous
+    val sparse10 = SearchRequest(query = "", searchMode = "sparse", k = 10,
+      scoreThreshold = -1e9, vectorDim = Dim)
+    val tie = SearchEngine.search(tiedTable,
+      sparse10.copy(query = "tomato sauce clusters"), sparseIndex = Some(standing))
+    val top2 = tie.collect().take(2)
+    assert(top2.map(_.getAs[Double]("score")).distinct.length == 1 &&
+      top2.map(_.getAs[String]("chunk_id")).distinct.length == 2)
+    val none = SearchEngine.search(tiedTable,
+      sparse10.copy(query = "the of and zzz"), sparseIndex = Some(standing))
+    assert(isPrepared(tie) && isPrepared(none) && none.collect().isEmpty)
+    // filtered and reranked requests keep the full path
+    for (req <- Seq(SearchRequest(query = "spark", filters = Map(
+          "doc_id" -> "1"), vectorDim = Dim),
+        SearchRequest(query = "spark", useReranker = true, vectorDim = Dim));
+        _ <- 0 until 2)
+      assert(!isPrepared(SearchEngine.search(tiedTable, req,
+        sparseIndex = Some(standing))))
+    // one per (mode, k), and the warm-up's
+    assert(standing.servingsBuilt == 1 &&
+      standing.preparedShapes == 3 * ks.size + 1)
+    standing.docWeights.unpersist()
+  }
+
+  test("searchMany over collections with prepared shapes answers the " +
+      "full path's rows") {
+    val a = pinned(tiedTable)
+    val b = pinned(chunks)
+    val colls = Seq("a" -> tiedTable, "b" -> chunks)
+    val indexes = Map("a" -> a, "b" -> b)
+    val req = SearchRequest(query = "tomato spark", searchMode = "hybrid",
+      k = 6, scoreThreshold = -1e9, vectorDim = Dim)
+    for ((cid, t) <- colls) {
+      warmServing(t, indexes(cid))
+      SearchEngine.search(t, req, sparseIndex = indexes.get(cid)).collect()
+    }
+    for (q <- Seq("spark join", "tomato sauce", "zzz")) {
+      val many = SearchEngine.searchMany(colls, req.copy(query = q),
+        indexes = indexes)
+      assert(many.queryExecution.executedPlan.collect {
+        case p: PreparedPlanExec => p }.size == 2, q)
+      assert(many.collect().toSeq ==
+        SearchEngine.searchMany(colls, req.copy(query = q)).collect().toSeq, q)
+    }
+    Seq(a, b).foreach(_.docWeights.unpersist())
+  }
+
+  test("a prepared plan answers only its own index and table") {
+    val root = java.nio.file.Files.createTempDirectory("prepared").toString
+    Ingest.reindexSwap(spark, tiedTable, root)
+    val gen1 = Ingest.readCurrent(spark, root)
+    val idx1 = pinned(gen1)
+    val req = SearchRequest(query = "tomato spark sauce",
+      searchMode = "hybrid", k = 20, scoreThreshold = -1e9,
+      includeContent = true, vectorDim = Dim)
+    def ask(table: DataFrame, idx: Bm25.Index, q: String) = {
+      val df = SearchEngine.search(table, req.copy(query = q),
+        sparseIndex = Some(idx))
+      (isPrepared(df), df.collect().toSeq)
+    }
+    warmServing(gen1, idx1)
+    ask(gen1, idx1, "spark")
+    // the request's shape and the warm-up's
+    assert(ask(gen1, idx1, "tomato")._1 && idx1.preparedShapes == 2)
+    // generation 2 rewrites doc 4 under the same chunk ids
+    val docs2 = docs.filter(col("doc_id") =!= 4L).unionByName(
+      Seq((4L, "spark tomato sauce tuning for gardeners.")).toDF("doc_id", "text"))
+    Ingest.reindexSwap(spark, Ingest.buildChunks(docs2, "c1", "doc_id", "text",
+      strategy = "recursive",
+      cfg = graft.operators.Chunking.ChunkConfig(minTokens = 1, maxTokens = 50),
+      dim = Dim), root)
+    val gen2 = Ingest.readCurrent(spark, root)
+    val idx2 = pinned(gen2)
+    def fullPath(q: String) =
+      SearchEngine.search(gen2, req.copy(query = q)).collect().toSeq
+    // the new generation's index prepares its own plan: the first two
+    // requests go in-plan and served, the third is prepared
+    warmServing(gen2, idx2)
+    for ((q, i) <- Seq("tomato", "gardeners tomato", "spark").zipWithIndex) {
+      val (prepared, rows) = ask(gen2, idx2, q)
+      assert(prepared == (i > 0), q)
+      assert(rows == fullPath(q), q)
+    }
+    assert(ask(gen2, idx2, "gardeners")._2
+      .exists(_.getAs[String]("content").contains("gardeners")))
+    // the old index asked about the new table never reaches its prepared
+    // plan, however often it is asked: every request goes in-plan and
+    // answers with the new generation's rows
+    val current = gen2.select("chunk_id", "content").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val stale = for (q <- Seq("tomato", "tomato", "gardeners tomato")) yield {
+      val (prepared, rows) = ask(gen2, idx1, q)
+      assert(!prepared, q)
+      for (r <- rows)
+        assert(current.get(r.getAs[String]("chunk_id"))
+          .contains(r.getAs[String]("content")), r)
+      rows
+    }
+    assert(stale(0) == stale(1) && stale(2).exists(
+      _.getAs[String]("content").contains("gardeners")))
+    assert(idx1.preparedShapes == 2 && idx2.preparedShapes == 2)
+    Seq(idx1, idx2).foreach(_.docWeights.unpersist())
+  }
+
+  test("concurrent requests of one prepared shape each get their own rows") {
+    val standing = pinned(tiedTable)
+    warmServing(tiedTable, standing)
+    val req = SearchRequest(query = "spark", searchMode = "hybrid", k = 4,
+      scoreThreshold = -1e9, vectorDim = Dim)
+    SearchEngine.search(tiedTable, req, sparseIndex = Some(standing)).collect()
+    val queries = Seq("tomato sauce", "spark streaming", "join strategies",
+      "gardening tips")
+    val expected = queries.map(q =>
+      q -> SearchEngine.search(tiedTable, req.copy(query = q)).collect().toSeq)
+      .toMap
+    assert(expected.values.toSet.size == queries.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val answers = queries.map(q => pool.submit(
+        new java.util.concurrent.Callable[Seq[(String, Boolean, Boolean)]] {
+          def call() = (0 until 5).map { _ =>
+            val df = SearchEngine.search(tiedTable, req.copy(query = q),
+              sparseIndex = Some(standing))
+            (q, isPrepared(df), df.collect().toSeq == expected(q))
+          }
+        }))
+      val got = answers.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(got.size == 20 && got.forall(g => g._2 && g._3), got)
+    } finally pool.shutdown()
+    standing.docWeights.unpersist()
+  }
+
+  test("an index keeps at most MaxPreparedShapes prepared plans; an " +
+      "evicted shape prepares again") {
+    import graft.operators.Bm25.MaxPreparedShapes
+    val standing = pinned(tiedTable)
+    warmServing(tiedTable, standing)
+    def ask(k: Int, q: String) = {
+      val req = SearchRequest(query = q, searchMode = "sparse", k = k,
+        scoreThreshold = -1e9, vectorDim = Dim)
+      val df = SearchEngine.search(tiedTable, req, sparseIndex = Some(standing))
+      assert(df.collect().toSeq ==
+        SearchEngine.search(tiedTable, req).collect().toSeq, s"k=$k q=$q")
+      isPrepared(df)
+    }
+    for (k <- 1 to MaxPreparedShapes + 1) {
+      assert(!ask(k, "spark"), s"k=$k")
+      assert(ask(k, "tomato"), s"k=$k")
+    }
+    assert(standing.preparedShapes == MaxPreparedShapes)
+    // k = 1, the least recently used shape, was dropped for the last one
+    assert(ask(2, "sauce"))
+    assert(!ask(1, "spark") && ask(1, "sauce"))
+    // and k = 3 made room for it
+    assert(!ask(3, "sauce") && ask(3, "spark"))
     standing.docWeights.unpersist()
   }
 }

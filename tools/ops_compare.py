@@ -8,12 +8,14 @@ writes one line per timed request to .bench_build/run/search/work/ops.txt:
 its latency and its label, e.g.
 `  1291.0 ms  req-5 hybrid k=10 filter=chunk_index q='dica sugozuso'`.
 Given copies of those files from the parent's and the change's runs of an
-A/B, prints for each request kind (dense, sparse, hybrid,
+A/B, prints for each request kind (dense, sparse, hybrid, hybrid plain,
 filter=chunk_index, filter=doc_id, rerank, k > 10, and all requests) the
 request count and median latency on each side, and the change's median
 relative to the parent's, so the A/B shows which kind moved. A request
 counts in every kind it has (a filtered hybrid request is in `hybrid` and
-in its filter's kind). Reads the given files only.
+in its filter's kind). `hybrid plain` is a hybrid request with no filter,
+no reranker and k = 10, the kind a `search` run's median request has.
+Reads the given files only.
 """
 import argparse
 import re
@@ -25,6 +27,8 @@ KINDS = [
     ("dense", lambda w: "dense" in w),
     ("sparse", lambda w: "sparse" in w),
     ("hybrid", lambda w: "hybrid" in w),
+    ("hybrid plain", lambda w: "hybrid" in w and "k=10" in w and not any(
+        x.startswith("filter=") or x == "rerank" for x in w)),
     ("filter=chunk_index", lambda w: "filter=chunk_index" in w),
     ("filter=doc_id", lambda w: "filter=doc_id" in w),
     ("rerank", lambda w: "rerank" in w),
